@@ -162,7 +162,8 @@ FROM spine s LEFT JOIN agged a USING (user_id)
 
 
 def q_asof_snapshot_folds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fused snapshot folds — vectorized applyInPandas executor path."""
+    """Fused snapshot folds through run_plan's `auto` route (native
+    Catalyst: the plan compiles without latest-N)."""
     plan = Plan(_FOLD_FEATURES, entity_col="user_id", time_col="ts", seq_col="event_id")
     return _round_doubles(run_plan(_events(spark, sf_dir), plan, snapshot=SNAP))
 

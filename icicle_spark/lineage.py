@@ -12,7 +12,7 @@ executes a plan, writes the output, and records:
   partitioning means partition membership is reproducible)
 * run record      — plan fingerprint (sha256 of the canonical plan),
   snapshot time, row counts in/out, wall seconds, engine strategy,
-  relevant spark conf
+  the backend that strategy chose and why, relevant spark conf
 
 The manifests are written as PARQUET DATAFRAMES under
 ``<out>/_lineage/{inputs,partitions}`` — never collected to the
@@ -101,8 +101,12 @@ def run_with_lineage(
     returns the run record (scalar summary only — the per-file and
     per-partition manifests live beside it as parquet)."""
     from icicle_spark.plans import run_plan
+    from icicle_spark.plans.executor import choose_backend
 
     spark = facts.sparkSession
+    backend, route_reason = choose_backend(
+        plan, snapshot, chords, strategy, assume_arranged
+    )
     t0 = time.time()
     result = run_plan(
         facts, plan, snapshot=snapshot, chords=chords, strategy=strategy,
@@ -139,6 +143,8 @@ def run_with_lineage(
         "features": [f.name for f in plan.features],
         "snapshot": str(snapshot) if snapshot is not None else None,
         "strategy": strategy,
+        "backend": backend,
+        "route_reason": route_reason,
         "rows_in": in_sum["rows"],
         "rows_out": out_sum["rows"],
         "wall_seconds": round(wall, 3),

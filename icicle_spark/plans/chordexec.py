@@ -435,7 +435,8 @@ def run_chords_vectorized(
     ``supports_chords(plan)``."""
     plan = plan.condensed()
     ecol, tcol = plan.entity_col, plan.time_col
-    has_label = "label" in chords.columns
+    label_type = dict(chords.dtypes).get("label")
+    has_label = label_type is not None
     entity_type = dict(facts.dtypes)[ecol]
 
     # prune unreferenced fact columns BEFORE the union+shuffle: the
@@ -450,7 +451,7 @@ def run_chords_vectorized(
 
     fact_cols = facts.columns
     f_tagged = facts.withColumn("__kind", F.lit(1)).withColumn(
-        "label", F.lit(None).cast("string")
+        "label", F.lit(None).cast(label_type)
     ) if has_label else facts.withColumn("__kind", F.lit(1))
     c_sel = [
         F.col(ecol),
@@ -485,7 +486,7 @@ def run_chords_vectorized(
 
     schema = ", ".join(
         [f"`{ecol}` {entity_type}", "query_time timestamp"]
-        + (["label string"] if has_label else [])
+        + ([f"label {label_type}"] if has_label else [])
         + [f"`{f.name}` {feature_dtype(f)}" for f in plan.features]
     )
 

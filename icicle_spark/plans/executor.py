@@ -29,12 +29,14 @@ Scale notes (designed for 10^12 rows / 1000 executors):
 from __future__ import annotations
 
 import datetime as _dt
+import re
 from typing import Any
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from icicle_spark.plans.chordexec import run_chords_vectorized, supports_chords
 from icicle_spark.plans.ir import (
     Agg,
     CustomFold,
@@ -44,7 +46,10 @@ from icicle_spark.plans.ir import (
     apply_scans,
     eval_expr,
     feature_dtype,
+    resolve_dtypes,
 )
+from icicle_spark.plans.native import compile_native, native_supported
+from icicle_spark.plans.vexec import run_snapshot_vectorized
 
 _EMPTY: dict[Agg, Any] = {
     Agg.SUM: 0.0,
@@ -438,12 +443,15 @@ def _run_entity(
     return rows
 
 
-def _out_schema(plan: Plan, entity_type: str, chord: bool, label: bool) -> str:
+def _out_schema(
+    plan: Plan, entity_type: str, chord: bool, label_type: str | None
+) -> str:
     parts = [f"`{plan.entity_col}` {entity_type}"]
     if chord:
         parts.append("`query_time` timestamp")
-    if label:
-        parts.append("`label` string")
+    if label_type:
+        # the chord table's own label type: labels pass through as-is
+        parts.append(f"`label` {label_type}")
     for f in plan.features:
         parts.append(f"`{f.name}` {feature_dtype(f)}")
     return ", ".join(parts)
@@ -459,6 +467,96 @@ def _normalize_time(t: Any) -> np.datetime64:
     return np.datetime64(t)
 
 
+_BARE = re.compile(r"[A-Za-z_]\w*|-?\d+(?:\.\d+)?")
+# bare words that Spark SQL reads as literals but pandas as columns
+_SQL_LITERAL_WORDS = {"true", "false", "null"}
+
+
+def _both_dialects(e: Any) -> bool:
+    """True if the element expression means the same in pandas-eval
+    and Spark SQL: a bare column name or a numeric literal."""
+    if not isinstance(e, str):
+        return False
+    s = e.strip()
+    return bool(_BARE.fullmatch(s)) and s.lower() not in _SQL_LITERAL_WORDS
+
+
+def _element_strings(f: Feature):
+    """Every element-level expression a feature evaluates per fact."""
+    yield from (f.expr, f.where, f.by, f.group, f.post_group_filter)
+    yield from f.distinct if isinstance(f.distinct, list) else (f.distinct,)
+    yield from (e for _, e in f.filter_let or ())
+
+
+def choose_backend(
+    plan: Plan,
+    snapshot: Any | None = None,
+    chords: DataFrame | None = None,
+    strategy: str = "auto",
+    assume_arranged: bool = False,
+) -> tuple[str, str]:
+    """The backend ``run_plan`` runs ``plan`` on, and why.
+
+    Returns (backend, reason); backend is one of 'native' (Catalyst
+    compiler), 'vexec' (Arrow snapshot executor), 'chordexec' (Arrow
+    chord executor) or 'cogroup' (per-entity applyInPandas). 'auto'
+    goes native whenever the compiler takes the plan, no feature keeps
+    a latest-N frame (measured faster on the Arrow executors) and every
+    element string reads the same in both expression dialects — no
+    Python worker at all. Otherwise it routes by scope, as the explicit
+    'vectorized' strategy does, with cogroup for what chordexec cannot
+    fold."""
+    if strategy not in ("auto", "native", "vectorized", "cogroup"):
+        raise ValueError(f"unknown strategy {strategy!r}")
+    if assume_arranged:
+        # only the vectorized snapshot executor consumes the arranged
+        # layout; refusing beats silently reshuffling
+        if snapshot is None or strategy not in ("auto", "vectorized"):
+            raise ValueError(
+                "assume_arranged requires snapshot scope with "
+                "strategy='auto'/'vectorized'"
+            )
+        return "vexec", "assume_arranged: vexec reads the arranged layout"
+    if strategy in ("native", "cogroup"):
+        return strategy, f"strategy={strategy!r}"
+    supported = native_supported(plan)
+    if strategy == "auto" and supported:
+        latest = [
+            f.name for f in plan.features
+            if f.latest is not None or f.group_latest is not None
+        ]
+        unsafe = [] if plan.expr_dialect == "sql" else [
+            f.name for f in plan.features
+            if not all(
+                e is None or _both_dialects(e) for e in _element_strings(f)
+            )
+        ]
+        if not latest and not unsafe:
+            return "native", "native_supported, no latest-N, dialect-safe"
+        why = (
+            f"latest-N in {latest}" if latest
+            else f"pandas-dialect expressions in {unsafe}"
+        )
+    elif strategy == "auto":
+        why = "not native_supported"
+    else:
+        why = "strategy='vectorized'"
+    if snapshot is not None:
+        return "vexec", f"{why}: snapshot on vexec"
+    if supports_chords(plan):
+        return "chordexec", f"{why}: prefix-decomposable chords on chordexec"
+    if strategy == "vectorized":
+        raise ValueError(
+            "plan has folds outside the prefix-decomposable set; "
+            "use strategy='cogroup' for chords"
+        )
+    if supported:
+        # e.g. a latest-N group map: chordexec cannot fold it, and the
+        # Catalyst chord branch beats per-entity Python
+        return "native", f"{why}: chords not prefix-decomposable, native"
+    return "cogroup", f"{why}: chords not prefix-decomposable, cogroup"
+
+
 def _materialize_sql_exprs(facts: DataFrame, plan: Plan):
     """Run an SQL-dialect plan on the Arrow executors: evaluate every
     element-level expression JVM-side as a physical column — nulled on
@@ -471,7 +569,6 @@ def _materialize_sql_exprs(facts: DataFrame, plan: Plan):
     schema (e.g. references to filter_let / scan binds, which only
     exist per-entity) are left untouched."""
     import dataclasses as _dc
-    import re as _re
 
     from pyspark.sql import functions as F
 
@@ -483,13 +580,9 @@ def _materialize_sql_exprs(facts: DataFrame, plan: Plan):
         )
 
     def mat(e):
-        if not isinstance(e, str):
+        if not isinstance(e, str) or _both_dialects(e):
             return e
         s = e.strip()
-        if _re.fullmatch(r"[A-Za-z_]\w*", s) or _re.fullmatch(
-            r"-?\d+(?:\.\d+)?", s
-        ):
-            return e  # bare column / literal: both dialects read it
         if s in cols:
             return cols[s]
         try:
@@ -548,18 +641,21 @@ def run_plan(
     snapshot: literal query time — one output row per entity.
     chords:   DataFrame (entity, query_time[, label]) — one output row
               per chord row (reference Runtime/Stencil.hs:121-134).
-    strategy: 'auto' (vectorized partition-level executor for
-              snapshots, vectorized chord executor for chords),
-              'vectorized', 'cogroup' (per-entity applyInPandas), or
+    strategy: 'auto' (``choose_backend``: the native Catalyst compiler
+              when it takes the plan, no feature has a latest-N frame
+              and every element string reads the same in both
+              dialects; else the vectorized executors by scope, and
+              per-entity cogroup for chords they cannot fold),
+              'vectorized' (vexec for snapshots, chordexec for
+              chords), 'cogroup' (per-entity applyInPandas), or
               'native' (Catalyst compiler — requires Spark-SQL expr
               syntax and a native-supported plan; the 100 TB fast
               path).
 
-    Chord routing (BENCH.md "chord routing trade-off"): 'auto' scales
-    to arbitrary chord-table sizes (co-partitioned shuffle). With a
-    BROADCASTABLE chord table and heavy entity skew, 'native' is
-    ~1.5-2x faster (salted two-stage states); for huge chord tables
-    call plans.native.compile_native(..., broadcast_chords=False).
+    Chord routing (BENCH.md "chord routing trade-off"): chords 'auto'
+    routes native join the chord table without a broadcast hint, so
+    they scale to any chord-table size; explicit 'native' keeps the
+    broadcast hint.
     """
     if (snapshot is None) == (chords is None):
         raise ValueError("exactly one of snapshot / chords required")
@@ -604,9 +700,10 @@ def run_plan(
     # (Condense.hs:25-66) — dropping a duplicate's COLUMN would be a
     # silent output change.
     requested = [f.name for f in plan.features]
-    from icicle_spark.plans.ir import resolve_dtypes
-
-    if plan.expr_dialect == "sql" and strategy != "native":
+    backend, _ = choose_backend(
+        plan, snapshot, chords, strategy, assume_arranged
+    )
+    if plan.expr_dialect == "sql" and backend != "native":
         facts, plan = _materialize_sql_exprs(facts, plan)
     plan = resolve_dtypes(plan, facts)
     full = plan
@@ -647,47 +744,24 @@ def run_plan(
         lead = [c for c in out.columns if c not in requested]
         return out.select(*lead, *requested)
 
-    if assume_arranged and not (
-        snapshot is not None and strategy in ("auto", "vectorized")
-    ):
-        # only the vectorized snapshot executor consumes the arranged
-        # layout; refusing beats silently reshuffling
-        raise ValueError(
-            "assume_arranged requires snapshot scope with "
-            "strategy='auto'/'vectorized'"
+    if backend == "native":
+        # routed chords join without a broadcast hint: AQE still
+        # broadcasts a small chord table, and a large one must not be
+        # forced; the explicit 'native' strategy keeps its hint
+        return _realias(
+            compile_native(
+                facts, plan, snapshot=snapshot, chords=chords,
+                broadcast_chords=strategy == "native",
+            )
         )
-    if strategy == "native":
-        from icicle_spark.plans.native import compile_native
-
-        return _realias(compile_native(facts, plan, snapshot=snapshot, chords=chords))
-    if snapshot is not None and strategy in ("auto", "vectorized"):
-        from icicle_spark.plans.vexec import run_snapshot_vectorized
-
+    if backend == "vexec":
         return _realias(
             run_snapshot_vectorized(
                 facts, plan, snapshot, assume_arranged=assume_arranged
             )
         )
-    if chords is not None and strategy in ("auto", "vectorized"):
-        from icicle_spark.plans.chordexec import (
-            run_chords_vectorized,
-            supports_chords,
-        )
-
-        if supports_chords(plan):
-            return _realias(run_chords_vectorized(facts, plan, chords))
-        if strategy == "vectorized":
-            raise ValueError(
-                "plan has folds outside the prefix-decomposable set; "
-                "use strategy='cogroup' for chords"
-            )
-        from icicle_spark.plans.native import compile_native, native_supported
-
-        if native_supported(plan):
-            # e.g. windowed min/max: not prefix-decomposable, but the
-            # Catalyst chord branch (broadcast chords + conditional
-            # aggregation) handles it without per-entity Python
-            return _realias(compile_native(facts, plan, chords=chords))
+    if backend == "chordexec":
+        return _realias(run_chords_vectorized(facts, plan, chords))
     plan = plan.condensed()
     ecol, tcol = plan.entity_col, plan.time_col
     entity_type = dict(facts.dtypes)[ecol]
@@ -695,7 +769,7 @@ def run_plan(
 
     if snapshot is not None:
         qt = _normalize_time(snapshot)
-        schema = _out_schema(plan, entity_type, chord=False, label=False)
+        schema = _out_schema(plan, entity_type, chord=False, label_type=None)
 
         def fn_snap(pdf: pd.DataFrame) -> pd.DataFrame:
             entity = pdf[ecol].iloc[0]
@@ -707,8 +781,9 @@ def run_plan(
 
         return _realias(facts.groupBy(ecol).applyInPandas(fn_snap, schema))
 
-    has_label = "label" in chords.columns
-    schema = _out_schema(plan, entity_type, chord=True, label=has_label)
+    label_type = dict(chords.dtypes).get("label")
+    has_label = label_type is not None
+    schema = _out_schema(plan, entity_type, chord=True, label_type=label_type)
 
     def fn_chord(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if len(right) == 0:

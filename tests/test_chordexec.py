@@ -114,7 +114,7 @@ def test_plan_is_vectorizable():
 def test_chordvec_commutes_with_cogroup(spark, data):
     facts, chords, n_rows = data
     key = ["entity", "query_time", "label"]
-    a = run_plan(facts, PLAN, chords=chords, strategy="auto").toPandas()
+    a = run_plan(facts, PLAN, chords=chords, strategy="vectorized").toPandas()
     b = run_plan(facts, PLAN, chords=chords, strategy="cogroup").toPandas()
     a = a.sort_values(key).reset_index(drop=True)
     b = b.sort_values(key).reset_index(drop=True)
@@ -155,9 +155,9 @@ def test_chordvec_zero_leakage(spark, data):
     facts, chords, _ = data
     qt = pd.Timestamp("2024-02-01 12:34:56")
     one = chords.where(F.col("query_time") == qt)
-    full = run_plan(facts, PLAN, chords=one, strategy="auto").toPandas()
+    full = run_plan(facts, PLAN, chords=one, strategy="vectorized").toPandas()
     trimmed = run_plan(
-        facts.where(F.col("time") < F.lit(qt)), PLAN, chords=one, strategy="auto"
+        facts.where(F.col("time") < F.lit(qt)), PLAN, chords=one, strategy="vectorized"
     ).toPandas()
     key = ["entity", "query_time", "label"]
     full = full.sort_values(key).reset_index(drop=True)
@@ -179,10 +179,10 @@ def test_chordvec_small_arrow_batches(spark, data):
     facts, chords, n_rows = data
     conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
     prev = spark.conf.get(conf)
-    baseline = run_plan(facts, PLAN, chords=chords, strategy="auto").toPandas()
+    baseline = run_plan(facts, PLAN, chords=chords, strategy="vectorized").toPandas()
     try:
         spark.conf.set(conf, "97")
-        small = run_plan(facts, PLAN, chords=chords, strategy="auto").toPandas()
+        small = run_plan(facts, PLAN, chords=chords, strategy="vectorized").toPandas()
     finally:
         spark.conf.set(conf, prev)
     key = ["entity", "query_time", "label"]
@@ -217,7 +217,7 @@ def test_windowed_minmax_vectorized_and_native_agree(spark, data):
     )
     assert supports_chords(plan)
     key = ["entity", "query_time", "label"]
-    a = run_plan(facts, plan, chords=chords, strategy="auto").toPandas()
+    a = run_plan(facts, plan, chords=chords, strategy="vectorized").toPandas()
     b = run_plan(facts, plan, chords=chords, strategy="cogroup").toPandas()
     c = run_plan(facts, plan, chords=chords, strategy="native").toPandas()
     a = a.sort_values(key).reset_index(drop=True)

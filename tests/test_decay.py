@@ -75,7 +75,7 @@ def test_decay_backends_commute_snapshot(spark, facts):
 
 def test_decay_chord_prefix_trick(spark, facts):
     chords = facts.groupBy("entity").agg(F.max("time").alias("query_time"))
-    x = run_plan(facts, PLAN, chords=chords, strategy="auto").toPandas()
+    x = run_plan(facts, PLAN, chords=chords, strategy="vectorized").toPandas()
     y = run_plan(facts, PLAN, chords=chords, strategy="cogroup").toPandas()
     x = x.sort_values("entity").reset_index(drop=True)
     y = y.sort_values("entity").reset_index(drop=True)

@@ -41,6 +41,9 @@ def test_lineage_manifest(spark, tmp_path):
     assert inputs["file"].str.startswith("file:").all()
     on_disk = json.load(open(os.path.join(out, "_lineage", "manifest.json")))
     assert on_disk["plan_fingerprint"] == plan_fingerprint(plan)
+    # the run record names the backend the strategy chose, and why
+    assert on_disk["backend"] == rec["backend"] == "native"
+    assert on_disk["route_reason"] == rec["route_reason"] == "strategy='native'"
     # fingerprint is stable and order-insensitive
     plan2 = Plan(
         list(reversed(plan.features)),

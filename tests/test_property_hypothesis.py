@@ -110,7 +110,7 @@ def test_chord_executors_commute(spark, data):
     )
     plan = Plan(feats, entity_col="entity", time_col="time", seq_col="seq")
     key = ["entity", "query_time"]
-    a = run_plan(facts, plan, chords=chords, strategy="auto").toPandas()
+    a = run_plan(facts, plan, chords=chords, strategy="vectorized").toPandas()
     b = run_plan(facts, plan, chords=chords, strategy="cogroup").toPandas()
     a = a.sort_values(key).reset_index(drop=True)
     b = b.sort_values(key).reset_index(drop=True)
