@@ -3840,7 +3840,7 @@ def q_source_group_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         "top_type": gf + "max_by v k",
     }
     plan = parse_program(
-        qs, dialect="sql", skip_nulls=True,
+        qs, skip_nulls=True,
         entity_col="user_id", time_col="ts", seq_col="event_id",
     )["events"]
     return run_plan(
@@ -3901,7 +3901,7 @@ def q_nested_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan = parse_program(
         {"g": "from events ~> group (year_of ts) ~> "
               "group (month_of ts) ~> count value"},
-        dialect="sql", skip_nulls=True,
+        skip_nulls=True,
         entity_col="user_id", time_col="ts", seq_col="event_id",
     )["events"]
     res = run_plan(
@@ -3928,14 +3928,14 @@ def q_chained_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-per-event_type substream (`Feature.distinct` list, each
     stage its own bounded Data.Map). A composite-key reading would
     count differently whenever two event types share a day-of-month.
-    Runs on the vectorized Arrow executor via the SQL-dialect
-    expression materializer (executor._materialize_sql_exprs)."""
+    Runs on the vectorized Arrow executor, which reads the element
+    expressions projected JVM-side (executor.project_exprs)."""
     from icicle_spark.source_lang import parse_program
 
     plan = parse_program(
         {"cnt": "from events ~> distinct event_type ~> "
                 "distinct (day_of ts) ~> count value"},
-        dialect="sql", skip_nulls=True,
+        skip_nulls=True,
         entity_col="user_id", time_col="ts", seq_col="event_id",
     )["events"]
     return run_plan(
@@ -4402,7 +4402,7 @@ def q_source_postcomp(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     }
     plan = parse_program(
-        qs, dialect="sql", skip_nulls=True,
+        qs, skip_nulls=True,
         entity_col="user_id", time_col="ts", seq_col="event_id",
     )["events"]
     return _round_doubles(
@@ -4446,7 +4446,7 @@ def q_source_case(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     }
     plan = parse_program(
-        qs, dialect="sql", skip_nulls=True,
+        qs, skip_nulls=True,
         entity_col="user_id", time_col="ts", seq_col="event_id",
     )["events"]
     return _round_doubles(
@@ -4468,7 +4468,7 @@ def q_source_circular(spark: SparkSession, sf_dir: str) -> DataFrame:
         "csd": "from events ~> (circular_stats (value / 40)).sd",
     }
     plan = parse_program(
-        qs, dialect="sql", skip_nulls=True,
+        qs, skip_nulls=True,
         entity_col="user_id", time_col="ts", seq_col="event_id",
     )["events"]
     return _round_doubles(

@@ -84,16 +84,13 @@ class DictionaryOutput:
     Built either from IR Features or from an Icicle query STRING
     (``query="from salary ~> sum value"`` — parsed via
     :mod:`icicle_spark.source_lang`; the `from` input must match
-    ``input``). ``dialect`` selects the element-expression dialect the
-    parsed feature targets ('sql' for the native compiler, 'pandas'
-    for the Arrow executors)."""
+    ``input``)."""
 
     name: str
     input: str
     features: tuple[Feature, ...]
     postcomps: tuple = ()   # ((name, sql_expr), ...) over the folds
     hidden: tuple = ()      # fold names not emitted (postcomp inputs)
-    dialect: str = "sql"    # element-expression dialect of `features`
 
     def __init__(
         self,
@@ -101,7 +98,6 @@ class DictionaryOutput:
         input: str,  # noqa: A002
         features=None,
         query: str | None = None,
-        dialect: str = "sql",
         skip_nulls: bool = False,
         postcomps=(),
         hidden=(),
@@ -112,7 +108,7 @@ class DictionaryOutput:
             from icicle_spark.source_lang import parse_query_multi
 
             qinput, feats, postcomps, hidden = parse_query_multi(
-                query, name, dialect=dialect, skip_nulls=skip_nulls
+                query, name, skip_nulls=skip_nulls
             )
             if qinput != input:
                 raise ValueError(
@@ -125,7 +121,6 @@ class DictionaryOutput:
         object.__setattr__(self, "features", tuple(features))
         object.__setattr__(self, "postcomps", tuple(postcomps))
         object.__setattr__(self, "hidden", tuple(hidden))
-        object.__setattr__(self, "dialect", dialect)
 
 
 class Dictionary:
@@ -179,20 +174,13 @@ class Dictionary:
         feats: list[Feature] = []
         posts: list[tuple] = []
         hidden: list[str] = []
-        dialects: set[str] = set()
         for o in self.outputs.values():
             if o.input == input_name:
                 feats.extend(o.features)
                 posts.extend(o.postcomps)
                 hidden.extend(o.hidden)
-                dialects.add(getattr(o, "dialect", "pandas"))
         if not feats:
             return None
-        if len(dialects) > 1:
-            raise ValueError(
-                f"outputs over {input_name!r} mix element-expression "
-                f"dialects {sorted(dialects)} — one fused plan needs one"
-            )
         return Plan(
             feats,
             entity_col=inp.entity_col,
@@ -201,7 +189,6 @@ class Dictionary:
             tombstone_col=inp.tombstone_col,
             postcomps=tuple(posts),
             hidden=tuple(hidden),
-            expr_dialect=next(iter(dialects)),
         )
 
     def plan_for(self, input_name: str) -> Plan:

@@ -88,7 +88,7 @@ def validate(
                 continue
             try:
                 parse_program(
-                    [ln], dialect="sql", entity_col="entity",
+                    [ln], entity_col="entity",
                     time_col="time",
                 )
             except Exception as exc:  # noqa: BLE001 — every failure

@@ -50,7 +50,7 @@ class BitWriter:
     """LSB-first bit packer over an integer accumulator: each write is
     one shift+or (C-speed big-int ops) instead of a per-bit Python
     loop, with whole bytes flushed to the bytearray once the
-    accumulator passes 4 KiB so single writes stay O(1)."""
+    accumulator holds 256 bits so single writes stay O(1)."""
 
     def __init__(self) -> None:
         self._bytes = bytearray()
@@ -762,7 +762,6 @@ def _parse_setup(packet: bytes, channels: int, rate: int,
                        residues, mappings, modes)
 
 
-@functools.lru_cache(maxsize=32)
 @functools.lru_cache(maxsize=32)
 def synthesis_window(n: int, prev_long: bool, next_long: bool,
                      n0: int) -> np.ndarray:

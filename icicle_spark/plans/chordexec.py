@@ -126,16 +126,13 @@ class _FeatureArrays:
     )
 
     def __init__(self, f: Feature, facts: pd.DataFrame, codes: np.ndarray,
-                 tns: np.ndarray, tomb: np.ndarray | None) -> None:
+                 tns: np.ndarray) -> None:
         n = len(facts)
         # `filter let Some b = e`: binds visible to this feature's
-        # exprs; null binds (and tombstoned facts, whose raw bind may
-        # be non-null here) fail the pattern and drop.
+        # exprs; null binds (tombstoned facts bind null) fail the
+        # pattern and drop.
         facts, bmask = apply_filter_let(f, facts) if n else (facts, None)
         vals = eval_expr(f.expr, facts).to_numpy() if n else np.empty(0)
-        if tomb is not None:
-            vals = vals.astype(object)
-            vals[tomb] = None
         if f.where is not None and n:
             ok = eval_expr(f.where, facts)
             ok = ok.fillna(False).to_numpy().astype(bool)
@@ -143,8 +140,6 @@ class _FeatureArrays:
             ok = np.ones(n, dtype=bool)
         if bmask is not None:
             ok &= bmask
-            if tomb is not None:
-                ok &= ~tomb
         null_all = pd.isna(pd.Series(vals)).to_numpy() if n else np.zeros(0, bool)
         if f.skip_nulls:
             ok = ok & ~null_all
@@ -386,14 +381,7 @@ def _process(plan: Plan, pdf: pd.DataFrame, has_label: bool) -> pd.DataFrame:
     fact_start = np.searchsorted(fcodes, ent_codes_sorted, side="left")
     start_of = dict(zip(ent_codes_sorted.tolist(), fact_start.tolist()))
 
-    tomb = None
-    if plan.tombstone_col and plan.tombstone_col in facts.columns:
-        t = facts[plan.tombstone_col].fillna(False).to_numpy().astype(bool)
-        tomb = t if t.any() else None
-
-    arrays = [
-        _FeatureArrays(f, facts, fcodes, ftns, tomb) for f in plan.features
-    ]
+    arrays = [_FeatureArrays(f, facts, fcodes, ftns) for f in plan.features]
     chords_pdf = pdf_s[~fact_s]
     c_codes = codes_s[~fact_s]
     qts = chords_pdf[tcol].to_numpy()

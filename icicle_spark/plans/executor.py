@@ -29,7 +29,6 @@ Scale notes (designed for 10^12 rows / 1000 executors):
 from __future__ import annotations
 
 import datetime as _dt
-import re
 from typing import Any
 
 import numpy as np
@@ -47,8 +46,13 @@ from icicle_spark.plans.ir import (
     eval_expr,
     feature_dtype,
     resolve_dtypes,
+    substitute_binds,
 )
-from icicle_spark.plans.native import compile_native, native_supported
+from icicle_spark.plans.native import (
+    compile_native,
+    native_supported,
+    null_tombstoned,
+)
 from icicle_spark.plans.vexec import run_snapshot_vectorized
 
 _EMPTY: dict[Agg, Any] = {
@@ -332,10 +336,9 @@ def _feature_value(
     return bound_map(_reduce_slice(f, v, b, qt=qt), max_group)
 
 
-def _prep_feature(
-    f: Feature, pdf: pd.DataFrame, tombstone_col: str | None
-) -> dict[str, np.ndarray | None]:
-    """Per-feature arrays over one entity's ordered fact frame."""
+def _prep_feature(f: Feature, pdf: pd.DataFrame) -> dict[str, np.ndarray | None]:
+    """Per-feature arrays over one entity's ordered fact frame (fact
+    columns already nulled on tombstoned facts by ``project_exprs``)."""
     # `filter let Some b = e`: bind columns for this feature's
     # exprs; facts with a null bind fail the pattern and drop.
     fpdf, bmask = apply_filter_let(f, pdf)
@@ -344,18 +347,6 @@ def _prep_feature(
     if f.where is not None:
         w = eval_expr(f.where, fpdf).fillna(False).to_numpy().astype(bool)
         mask = w if mask is None else (mask & w)
-    if tombstone_col is not None and tombstone_col in pdf.columns:
-        # a tombstone fact's value is an error element
-        # (doc/design/tombstones.md:56-73): poison it to null so
-        # Possibly propagation (or skip_nulls) applies.
-        ts_mask = pdf[tombstone_col].fillna(False).to_numpy().astype(bool)
-        if ts_mask.any():
-            vals = vals.astype(object)
-            vals[ts_mask] = None
-            if bmask is not None:
-                # a tombstone carries no value: the Some pattern
-                # fails even when the raw bind expr is non-null
-                mask = mask & ~ts_mask
     return {
         "vals": vals,
         "mask": mask,
@@ -394,7 +385,7 @@ def _run_entity(
     for f in plan.features:
         if f.scans:
             continue  # prepared per query time (frame-dependent binds)
-        cols[f.name] = _prep_feature(f, pdf, plan.tombstone_col)
+        cols[f.name] = _prep_feature(f, pdf)
     rows = []
     for qt in qtimes:
         hi_asof = int(np.searchsorted(times, qt, side="left"))  # strict <
@@ -422,7 +413,7 @@ def _run_entity(
                     idx = idx[-f.latest_outer:]
                 fr = apply_scans(f, pdf.iloc[idx].reset_index(drop=True))
                 f2 = _dc.replace(f, latest_outer=None, scans=None)
-                c2 = _prep_feature(f2, fr, plan.tombstone_col)
+                c2 = _prep_feature(f2, fr)
                 row.append(
                     _feature_value(
                         f2, 0, len(fr), c2["vals"], c2["mask"], c2["by"],
@@ -467,27 +458,6 @@ def _normalize_time(t: Any) -> np.datetime64:
     return np.datetime64(t)
 
 
-_BARE = re.compile(r"[A-Za-z_]\w*|-?\d+(?:\.\d+)?")
-# bare words that Spark SQL reads as literals but pandas as columns
-_SQL_LITERAL_WORDS = {"true", "false", "null"}
-
-
-def _both_dialects(e: Any) -> bool:
-    """True if the element expression means the same in pandas-eval
-    and Spark SQL: a bare column name or a numeric literal."""
-    if not isinstance(e, str):
-        return False
-    s = e.strip()
-    return bool(_BARE.fullmatch(s)) and s.lower() not in _SQL_LITERAL_WORDS
-
-
-def _element_strings(f: Feature):
-    """Every element-level expression a feature evaluates per fact."""
-    yield from (f.expr, f.where, f.by, f.group, f.post_group_filter)
-    yield from f.distinct if isinstance(f.distinct, list) else (f.distinct,)
-    yield from (e for _, e in f.filter_let or ())
-
-
 def choose_backend(
     plan: Plan,
     snapshot: Any | None = None,
@@ -500,12 +470,11 @@ def choose_backend(
     Returns (backend, reason); backend is one of 'native' (Catalyst
     compiler), 'vexec' (Arrow snapshot executor), 'chordexec' (Arrow
     chord executor) or 'cogroup' (per-entity applyInPandas). 'auto'
-    goes native whenever the compiler takes the plan, no feature keeps
-    a latest-N frame (measured faster on the Arrow executors) and every
-    element string reads the same in both expression dialects — no
-    Python worker at all. Otherwise it routes by scope, as the explicit
-    'vectorized' strategy does, with cogroup for what chordexec cannot
-    fold."""
+    goes native exactly when the compiler takes the plan and no
+    feature keeps a latest-N frame (measured faster on the Arrow
+    executors) — no Python worker at all. Otherwise it routes by
+    scope, as the explicit 'vectorized' strategy does, with cogroup
+    for what chordexec cannot fold."""
     if strategy not in ("auto", "native", "vectorized", "cogroup"):
         raise ValueError(f"unknown strategy {strategy!r}")
     if assume_arranged:
@@ -525,18 +494,9 @@ def choose_backend(
             f.name for f in plan.features
             if f.latest is not None or f.group_latest is not None
         ]
-        unsafe = [] if plan.expr_dialect == "sql" else [
-            f.name for f in plan.features
-            if not all(
-                e is None or _both_dialects(e) for e in _element_strings(f)
-            )
-        ]
-        if not latest and not unsafe:
-            return "native", "native_supported, no latest-N, dialect-safe"
-        why = (
-            f"latest-N in {latest}" if latest
-            else f"pandas-dialect expressions in {unsafe}"
-        )
+        if not latest:
+            return "native", "native_supported, no latest-N"
+        why = f"latest-N in {latest}"
     elif strategy == "auto":
         why = "not native_supported"
     else:
@@ -557,74 +517,78 @@ def choose_backend(
     return "cogroup", f"{why}: chords not prefix-decomposable, cogroup"
 
 
-def _materialize_sql_exprs(facts: DataFrame, plan: Plan):
-    """Run an SQL-dialect plan on the Arrow executors: evaluate every
-    element-level expression JVM-side as a physical column — nulled on
-    tombstoned facts, the prepare_facts contract — and rewrite the
-    plan to reference the columns by bare name (valid in both expr
-    dialects). The whole Spark-SQL scalar surface (HOFs over arrays,
-    regex, date functions) thereby reaches the Python executors, and
-    the entity exchange ships computed columns instead of re-deriving
-    them per batch. Expressions that do not resolve against the facts
-    schema (e.g. references to filter_let / scan binds, which only
-    exist per-entity) are left untouched."""
+def project_exprs(facts: DataFrame, plan: Plan):
+    """The one step between a plan and every Python executor. Null
+    every non-key fact column on tombstoned facts (the
+    ``native.prepare_facts`` rule), then evaluate each Spark SQL
+    element string JVM-side as a ``__sx*`` column and rewrite the plan
+    to read it by name: the executors see only fact, projected, bind
+    and scan columns, and callables. A string that names a fact
+    column, or a bind of its own feature, stays a name; an expression
+    over ``filter_let`` binds reads them by textual substitution of
+    their (earlier-bind-substituted) expressions. All strings are
+    analysed in one select; one that does not resolve raises, naming
+    it. Returns (facts, plan)."""
     import dataclasses as _dc
 
     from pyspark.sql import functions as F
 
-    cols: dict[str, str] = {}
-    tomb = None
-    if plan.tombstone_col and plan.tombstone_col in facts.columns:
-        tomb = F.coalesce(
-            F.col(plan.tombstone_col).cast("boolean"), F.lit(False)
-        )
+    facts = null_tombstoned(facts, plan)
+    fact_cols = set(facts.columns)
+    cols: dict[str, str] = {}  # Spark SQL -> projected column
+    source: dict[str, str] = {}  # Spark SQL -> the string as written
 
-    def mat(e):
-        if not isinstance(e, str) or _both_dialects(e):
+    def proj(e, binds: dict[str, str], names: set[str]):
+        if not isinstance(e, str):
             return e
-        s = e.strip()
-        if s in cols:
-            return cols[s]
-        try:
-            facts.select(F.expr(s))  # analysis probe (driver-side)
-        except Exception:
-            return e
-        name = f"__sx{len(cols)}"
-        cols[s] = name
-        return name
+        if e.strip() in fact_cols | names:
+            return e.strip()
+        sql = substitute_binds(e.strip(), binds)
+        source.setdefault(sql, e)
+        return cols.setdefault(sql, f"__sx{len(cols)}")
 
     feats = []
     for f in plan.features:
-        rep: dict = {}
-        for fld in ("expr", "where", "by", "group", "post_group_filter"):
-            v = getattr(f, fld)
-            nv = mat(v)
-            if nv is not v:
-                rep[fld] = nv
+        scans = {n for n, _, _ in f.scans or ()}
+        binds: dict[str, str] = {}
+        fl = []
+        for b, e in f.filter_let or ():
+            fl.append((b, proj(e, binds, scans | set(binds))))
+            if isinstance(e, str):
+                binds[b] = substitute_binds(e.strip(), binds)
+        names = scans | {b for b, _ in f.filter_let or ()}
+        rep: dict[str, Any] = {
+            fld: proj(getattr(f, fld), binds, names)
+            for fld in ("expr", "where", "by", "group", "post_group_filter")
+        }
         if isinstance(f.distinct, list):
-            nd = [mat(x) for x in f.distinct]
-            if nd != f.distinct:
-                rep["distinct"] = nd
-        elif f.distinct is not None:
-            nv = mat(f.distinct)
-            if nv is not f.distinct:
-                rep["distinct"] = nv
+            rep["distinct"] = [proj(d, binds, names) for d in f.distinct]
+        else:
+            rep["distinct"] = proj(f.distinct, binds, names)
         if f.filter_let:
-            nfl = tuple((n, mat(e)) for n, e in f.filter_let)
-            if nfl != tuple(f.filter_let):
-                rep["filter_let"] = nfl
+            rep["filter_let"] = tuple(fl)
         if f.scans:
-            ns = tuple((n, a, mat(e)) for n, a, e in f.scans)
-            if ns != tuple(f.scans):
-                rep["scans"] = ns
-        feats.append(_dc.replace(f, **rep) if rep else f)
+            rep["scans"] = tuple(
+                (n, a, proj(e, {}, set())) for n, a, e in f.scans
+            )
+        feats.append(_dc.replace(f, **rep))
     if not cols:
         return facts, plan
-    sel = [
-        (F.when(~tomb, F.expr(s)) if tomb is not None else F.expr(s)).alias(n)
-        for s, n in cols.items()
-    ]
-    return facts.select("*", *sel), _dc.replace(plan, features=feats)
+    try:
+        facts = facts.select(
+            "*", *[F.expr(s).alias(n) for s, n in cols.items()]
+        )
+    except Exception:
+        for sql in cols:
+            try:
+                facts.select(F.expr(sql))
+            except Exception as exc:
+                raise ValueError(
+                    f"element expression {source[sql]!r} is not Spark SQL "
+                    f"over the facts: {exc}"
+                ) from None
+        raise
+    return facts, _dc.replace(plan, features=feats)
 
 
 def run_plan(
@@ -642,15 +606,17 @@ def run_plan(
     chords:   DataFrame (entity, query_time[, label]) — one output row
               per chord row (reference Runtime/Stencil.hs:121-134).
     strategy: 'auto' (``choose_backend``: the native Catalyst compiler
-              when it takes the plan, no feature has a latest-N frame
-              and every element string reads the same in both
-              dialects; else the vectorized executors by scope, and
+              when it takes the plan and no feature has a latest-N
+              frame; else the vectorized executors by scope, and
               per-entity cogroup for chords they cannot fold),
               'vectorized' (vexec for snapshots, chordexec for
               chords), 'cogroup' (per-entity applyInPandas), or
-              'native' (Catalyst compiler — requires Spark-SQL expr
-              syntax and a native-supported plan; the 100 TB fast
-              path).
+              'native' (Catalyst compiler — requires a native-supported
+              plan; the 100 TB fast path).
+
+    Element strings are Spark SQL on every strategy: the non-native
+    ones run ``project_exprs`` first, so the same string means the
+    same thing (nulls included) whichever backend runs it.
 
     Chord routing (BENCH.md "chord routing trade-off"): chords 'auto'
     routes native join the chord table without a broadcast hint, so
@@ -703,8 +669,8 @@ def run_plan(
     backend, _ = choose_backend(
         plan, snapshot, chords, strategy, assume_arranged
     )
-    if plan.expr_dialect == "sql" and backend != "native":
-        facts, plan = _materialize_sql_exprs(facts, plan)
+    if backend != "native":
+        facts, plan = project_exprs(facts, plan)
     plan = resolve_dtypes(plan, facts)
     full = plan
     plan, _dups = plan.stripped().cse()

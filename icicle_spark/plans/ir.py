@@ -11,6 +11,13 @@ a list of ``Feature``s over one fact table; every feature is
 exactly the context pipeline of an Icicle query
 (/root/reference/icicle-source/src/Icicle/Source/Query/Context.hs:25-37).
 
+Element expressions have ONE dialect: a string is Spark SQL (``==``
+and ``=`` both read as equality), a callable is a vectorized pandas
+function (``pdf -> Series``). The native compiler evaluates strings in
+Catalyst; before any Python executor runs, ``plans.executor.
+project_exprs`` evaluates them JVM-side into columns, so the
+executors only ever read fact, projected, bind and scan columns.
+
 Two compilers consume this IR:
 
 * ``plans.native``   — pure DataFrame ops (Catalyst / whole-stage
@@ -233,13 +240,15 @@ class Feature:
                                       # (time, seq) order. Each entry is
                                       # (bind_name, Agg, element_expr);
                                       # supported: SUM COUNT MIN MAX MEAN.
-                                      # Nulls follow pandas skipna (a null
-                                      # element leaves a null running value
-                                      # at that row and the Possibly rules
-                                      # at the aggregate stage poison from
-                                      # there). Evaluated by the vectorized
-                                      # executor; native/chord/resume
-                                      # decline loudly.
+                                      # A null element leaves a null
+                                      # running value at that row, and the
+                                      # Possibly rules at the aggregate
+                                      # stage poison from there. An
+                                      # expression over a scan bind exists
+                                      # only inside a frame, so it must be
+                                      # a callable. Evaluated by the
+                                      # vectorized executor; native/chord/
+                                      # resume decline loudly.
 
 
 @dataclass
@@ -269,16 +278,8 @@ class Plan:
                                       # Core/Program/Program.hs:33-36
                                       # `postcomps`, ToCore/ToCore.hs
                                       # aggregate-expression lowering).
-                                      # Always Spark-SQL dialect — they
-                                      # run on the small output frame,
-                                      # never inside an executor.
-    expr_dialect: str = "pandas"      # dialect of the features' element
-                                      # exprs: 'pandas' (pandas-eval /
-                                      # callables — the executors' own
-                                      # tongue) or 'sql' (Spark SQL —
-                                      # run_plan materializes the exprs
-                                      # as JVM columns before an
-                                      # executor strategy sees them)
+                                      # They run on the small output
+                                      # frame, never inside an executor.
     hidden: tuple = ()                # fold names NOT emitted: internal
                                       # inputs of postcomps (the
                                       # reference's fresh names for agg
@@ -357,7 +358,6 @@ class Plan:
             tombstone_col=self.tombstone_col or other.tombstone_col,
             max_group_size=min(self.max_group_size, other.max_group_size),
             postcomps=self.postcomps + other.postcomps,
-            expr_dialect=self.expr_dialect,
             hidden=self.hidden + other.hidden,
         )
 
@@ -374,7 +374,6 @@ class Plan:
             seq_col=self.seq_col,
             tombstone_col=self.tombstone_col,
             max_group_size=self.max_group_size,
-            expr_dialect=self.expr_dialect,
         )
 
     def output_names(self) -> list[str]:
@@ -440,7 +439,6 @@ class Plan:
                 tombstone_col=self.tombstone_col,
                 max_group_size=self.max_group_size,
                 postcomps=self.postcomps,
-                expr_dialect=self.expr_dialect,
                 hidden=tuple(h for h in self.hidden if h not in dups),
             ),
             dups,
@@ -510,9 +508,8 @@ def resolve_dtypes(plan: Plan, facts) -> Plan:
       double, both as the reference's checker types them).
 
     Expressions that aren't bare columns resolve through a
-    driver-side analysis probe (`facts.select(expr)`) — pandas-
-    dialect expressions that don't parse as Spark SQL keep the
-    double default."""
+    driver-side analysis probe (`facts.select(expr)`); one that does
+    not resolve keeps the double default."""
     import dataclasses as _dc
 
     types = {fld.name: fld.dataType.simpleString()
@@ -522,10 +519,8 @@ def resolve_dtypes(plan: Plan, facts) -> Plan:
     # select (each facts.select is a full driver-side analysis pass,
     # ~15-50 ms — per-expression probing measurably inflated plan
     # compile time on wide plans); a failing batch falls back to
-    # per-expression so one pandas-dialect string doesn't untype the
+    # per-expression so one unresolvable string doesn't untype the
     # rest
-    import re as _re
-
     from pyspark.sql import functions as F
 
     def _fold_probe(cf) -> str | None:
@@ -537,22 +532,16 @@ def resolve_dtypes(plan: Plan, facts) -> Plan:
             return None
         if cf.dtype != "double":
             return None  # map/struct/bool states typed at compile
-        return _re.sub(
-            rf"(?<![\w']){_re.escape(cf.bind)}(?![\w'])",
-            f"({cf.init_src})", cf.step_src,
-        )
+        return substitute_binds(cf.step_src, {cf.bind: cf.init_src})
 
     def _bind_sub(e: str, f) -> str | None:
         # filter_let binds aren't columns either: `filter let Some
         # zod = Some (value + 1) ~> latest 3 ~> zod` collects Int
         # elements (t17 prints `[ 301 , ... ]`)
-        for b, be in (f.filter_let or ()):
-            if not isinstance(be, str):
-                return None
-            e = _re.sub(
-                rf"(?<![\w']){_re.escape(b)}(?![\w'])", f"({be})", e
-            )
-        return e
+        if not all(isinstance(be, str) for _, be in f.filter_let or ()):
+            return None
+        # latest bind first: a later bind may read an earlier one
+        return substitute_binds(e, dict(reversed(f.filter_let or ())))
 
     def _scan_sub(e: str, scans) -> str | None:
         # scan binds aren't columns: substitute a TYPE-equivalent SQL
@@ -569,9 +558,7 @@ def resolve_dtypes(plan: Plan, facts) -> Plan:
                 rep = f"CAST(({sexpr}) AS DOUBLE)"
             else:  # min/max/second_last: element-shaped
                 rep = f"({sexpr})"
-            e = _re.sub(
-                rf"(?<![\w']){_re.escape(name)}(?![\w'])", rep, e
-            )
+            e = substitute_binds(e, {name: rep})
         return e
 
     want: list[str] = []
@@ -612,19 +599,27 @@ def resolve_dtypes(plan: Plan, facts) -> Plan:
                         facts.select(F.expr(s))
                         .schema[0].dataType.simpleString()
                     )
-                except Exception:  # noqa: BLE001 — pandas dialect
+                except Exception:  # noqa: BLE001 — unresolvable
                     probed[s] = None
 
-    def expr_type(e) -> str | None:
+    def expr_type(e, scans=None) -> str | None:
         if not isinstance(e, str):
             # exprlang callable: static numeric inference over its AST
             # (the reference checker's Num typing for the arithmetic
-            # fragment) — covers pandas-dialect plans SQL can't probe
+            # fragment) — covers the scan-bound callables SQL can't
+            # probe; a scan bind types like its running fold
             ast = getattr(e, "__icicle_ast__", None)
             if ast is not None:
                 from icicle_spark.exprlang import infer_numeric
 
-                t = infer_numeric(ast, types)
+                env = dict(types)
+                for name, agg, sexpr in scans or ():
+                    env[name] = (
+                        "bigint" if agg is Agg.COUNT
+                        else "double" if agg is Agg.MEAN
+                        else expr_type(sexpr) or "double"
+                    )
+                t = infer_numeric(ast, env)
                 return {"int": "bigint", "double": "double"}.get(t)
             return None
         s = e.strip()
@@ -673,7 +668,7 @@ def resolve_dtypes(plan: Plan, facts) -> Plan:
             if probe_expr is not None and f.filter_let:
                 probe_expr = _bind_sub(probe_expr, f)
         if f.agg in _SHAPE_PRESERVING:
-            t = expr_type(probe_expr)
+            t = expr_type(probe_expr, f.scans)
             if t is not None and t.startswith(_NUMERICISH) and not (
                 t.startswith(_INT_FAMILY)
             ):
@@ -681,7 +676,7 @@ def resolve_dtypes(plan: Plan, facts) -> Plan:
             elif t is not None and f.agg is Agg.COLLECT:
                 t = f"array<{t}>"
         elif f.agg is Agg.SUM:
-            t = expr_type(probe_expr)
+            t = expr_type(probe_expr, f.scans)
             t = "bigint" if t is not None and t.startswith(_INT_FAMILY) else None
         if t is not None:
             if f.group is not None:
@@ -729,25 +724,31 @@ def apply_postcomps(df, plan: Plan, now_sql: str | None = None):
     return df.select(*lead, *plan.output_names())
 
 
+def substitute_binds(e: str, binds: dict[str, str]) -> str:
+    """Replace each bind name in the Spark SQL string ``e`` by its
+    parenthesized expression (whole words, outside quote-adjacent
+    text)."""
+    import re
+
+    for b, be in binds.items():
+        e = re.sub(rf"(?<![\w']){re.escape(b)}(?![\w'])", f"({be})", e)
+    return e
+
+
 def eval_expr(expr: ExprLike, pdf: pd.DataFrame) -> pd.Series:
-    """Evaluate an element expression over a pandas block (vectorized)."""
+    """An element expression over a pandas block: a callable, or the
+    name of a column of the block (a fact, projected, bind or scan
+    column — ``project_exprs`` has already evaluated every Spark SQL
+    string JVM-side)."""
     if callable(expr):
         return expr(pdf)
     if expr in pdf.columns:
         return pdf[expr]
-    out = pdf.eval(expr)
-    if isinstance(out, pd.DataFrame):
-        # pandas.eval parsed an ASSIGNMENT (a single '=' — an
-        # sql-dialect string leaked onto the vectorized path)
-        raise ValueError(
-            f"element expression {expr!r} is not pandas-eval syntax "
-            "(use '==' — executor dialect is pandas, native is SQL)"
-        )
-    if not isinstance(out, pd.Series):
-        # constant expression (e.g. the presence fold's "1"):
-        # broadcast to the block's index
-        out = pd.Series(out, index=pdf.index)
-    return out
+    raise ValueError(
+        f"element expression {expr!r} is not a column of the block; "
+        "strings are Spark SQL and must be projected before a Python "
+        "executor runs (plans.executor.project_exprs)"
+    )
 
 
 def apply_scans(f: "Feature", fr: pd.DataFrame) -> pd.DataFrame:
@@ -785,10 +786,7 @@ def apply_filter_let(
     """Pandas-side `filter let Some b = e`: extend a fact block with
     the feature's binds and return ``(frame, keep_mask)`` where
     keep_mask marks facts whose every bind matched ``Some`` (non-null).
-    Returns ``(pdf, None)`` when the feature has no binds. Callers
-    with raw (un-nulled) tombstone columns must ALSO drop tombstoned
-    facts from the mask — a tombstone carries no value, so the
-    pattern fails."""
+    Returns ``(pdf, None)`` when the feature has no binds."""
     if not f.filter_let:
         return pdf, None
     pdf = pdf.copy()

@@ -267,25 +267,31 @@ def _agg_col(
 
 
 def prepare_facts(facts: DataFrame, plan: Plan) -> DataFrame:
-    """The shared Catalyst-side fact preamble: null every non-key
-    column on tombstoned facts (they contribute null elements — error
-    values, doc/design/tombstones.md:56-73), then materialize
-    filter_let binds (which therefore bind null on tombstoned facts,
-    failing the Some pattern). Used by compile_native AND the
-    resumable-fold paths so both see identical element semantics."""
+    """The shared Catalyst-side fact preamble: ``null_tombstoned``,
+    then materialize filter_let binds (which therefore bind null on
+    tombstoned facts, failing the Some pattern). Used by
+    compile_native AND the resumable-fold paths so both see identical
+    element semantics."""
+    return _with_binds(null_tombstoned(facts, plan), plan)
+
+
+def null_tombstoned(facts: DataFrame, plan: Plan) -> DataFrame:
+    """Null every non-key column on tombstoned facts: they contribute
+    null elements (error values, doc/design/tombstones.md:56-73) to
+    every expression read over them, on every backend."""
     ecol, tcol = plan.entity_col, plan.time_col
-    if plan.tombstone_col is not None and plan.tombstone_col in facts.columns:
-        tb = F.coalesce(F.col(plan.tombstone_col).cast("boolean"), F.lit(False))
-        keep = {ecol, tcol, plan.tombstone_col, plan.seq_col}
-        facts = facts.select(
-            *[
-                F.when(~tb, F.col(c)).otherwise(F.lit(None)).alias(c)
-                if c not in keep
-                else F.col(c)
-                for c in facts.columns
-            ]
-        )
-    return _with_binds(facts, plan)
+    if plan.tombstone_col is None or plan.tombstone_col not in facts.columns:
+        return facts
+    tb = F.coalesce(F.col(plan.tombstone_col).cast("boolean"), F.lit(False))
+    keep = {ecol, tcol, plan.tombstone_col, plan.seq_col}
+    return facts.select(
+        *[
+            F.when(~tb, F.col(c)).otherwise(F.lit(None)).alias(c)
+            if c not in keep
+            else F.col(c)
+            for c in facts.columns
+        ]
+    )
 
 
 def _with_binds(facts: DataFrame, plan: Plan) -> DataFrame:

@@ -127,8 +127,8 @@ def _feature_series(
             col[vidx] = run.to_numpy().astype("float64")
             base[sname] = col
     # `filter let Some b = e`: bind columns visible to this feature's
-    # exprs; null binds fail the pattern. Tombstone columns were
-    # nulled on the whole block up-front, so tombstoned facts drop too.
+    # exprs; null binds fail the pattern. project_exprs nulled the
+    # fact columns of tombstoned facts, so they bind null and drop too.
     base, bmask = apply_filter_let(f, base)
     if bmask is not None:
         mask = mask & bmask
@@ -488,20 +488,10 @@ def _process_chunk(
         )
     qt_ns = int(np.datetime64(qt, "ns").view("int64"))
     vis = tns < qt_ns
-    base = pdf
-    if plan.tombstone_col is not None and plan.tombstone_col in pdf.columns:
-        tb = pdf[plan.tombstone_col].fillna(False).to_numpy().astype(bool)
-        if tb.any():
-            base = pdf.copy()
-            for c in pdf.columns:
-                if c not in (ecol, plan.time_col, plan.tombstone_col):
-                    col = base[c].astype(object)
-                    col[tb] = None
-                    base[c] = col
     data = {ecol: uniques}
     for f in plan.features:
         data[f.name] = _feature_series(
-            f, base, ent, vis, n_seg, tns, qt_ns, plan.max_group_size
+            f, pdf, ent, vis, n_seg, tns, qt_ns, plan.max_group_size
         ).to_numpy()
     return pd.DataFrame(data)
 
@@ -550,53 +540,7 @@ def referenced_columns(plan: Plan, columns: list[str]) -> list[str] | None:
     keep = {plan.entity_col, plan.time_col}
     if plan.seq_col:
         keep.add(plan.seq_col)
-    if plan.tombstone_col:
-        keep.add(plan.tombstone_col)
     return [c for c in columns if c in keep or _blob_references(blob, c)]
-
-
-_SIMPLE_EQ_WHERE = __import__("re").compile(
-    r"^\s*([A-Za-z_]\w*)\s*==\s*(?:'([^']*)'|\"([^\"]*)\")\s*$"
-)
-
-
-def _precompute_simple_wheres(facts: DataFrame, plan: Plan):
-    """Rewrite ``where`` clauses of the shape ``col == 'literal'``
-    into JVM-precomputed boolean bind columns, so the (string) column
-    they compare never crosses the Arrow boundary when nothing else
-    reads it (guide §2.3/§4.1 — shuffle and ship a 1-byte bool
-    instead of the string; measured ~0.7 s of the fused arrow
-    transport for one source-tag column at 8M rows). Only `==` is
-    rewritten: pandas-eval and Spark agree that a null compares
-    False there (vexec masks with ``fillna(False)``), while `!=`
-    diverges on nulls. Returns (facts_with_binds, rewritten_plan)."""
-    import dataclasses
-
-    cols = set(facts.columns)
-    new_feats = []
-    binds: dict[str, Any] = {}
-    changed = False
-    for i, f in enumerate(plan.features):
-        m = (
-            _SIMPLE_EQ_WHERE.match(f.where)
-            if isinstance(f.where, str)
-            else None
-        )
-        if m and m.group(1) in cols and m.group(1) != plan.entity_col:
-            col, lit = m.group(1), (
-                m.group(2) if m.group(2) is not None else m.group(3)
-            )
-            bname = f"__weq_{i}_{col}"
-            binds[bname] = F.col(col) == F.lit(lit)
-            new_feats.append(dataclasses.replace(f, where=bname))
-            changed = True
-        else:
-            new_feats.append(f)
-    if not changed:
-        return facts, plan
-    for bname, expr in binds.items():
-        facts = facts.withColumn(bname, expr)
-    return facts, dataclasses.replace(plan, features=new_feats)
 
 
 def run_snapshot_vectorized(
@@ -627,7 +571,6 @@ def run_snapshot_vectorized(
     yourself (e.g. assert ``groupBy(entity).count()`` parity) before
     passing ``assume_arranged=True``."""
     plan = plan.condensed()
-    facts, plan = _precompute_simple_wheres(facts, plan)
     ecol, tcol = plan.entity_col, plan.time_col
     qt = pd.Timestamp(snapshot)
     entity_type = dict(facts.dtypes)[ecol]

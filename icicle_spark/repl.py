@@ -22,7 +22,6 @@ that have no Spark counterpart):
     :set max-map-size N          bounded group/map state
     :set +big-data / -big-data   reject unbounded queries (repl t40)
     :set strategy S              auto|native|vectorized|cogroup
-    :set dialect D               pandas|sql  (element-expr dialect)
     :let f x = e                 define a function (prelude syntax)
     :dictionary                  show loaded inputs/outputs
     :{  ...  :}                  multi-line query block
@@ -306,7 +305,7 @@ _HELP = """\
 :load FILE.icicle|FILE.psv|FILE.zbin   dictionary / PSV / zebra facts
 :load F.parquet input=N entity=C time=C [seq=C] [tombstone=C]
 :set snapshot DATE | max-map-size N | +big-data | -big-data
-:set strategy auto|native|vectorized|cogroup | dialect pandas|sql
+:set strategy auto|native|vectorized|cogroup
 :let f x = expr                   define a function
 :dictionary                       show inputs and outputs
 :{ ... :}                         multi-line query block
@@ -322,16 +321,11 @@ class ReplSession:
     None in ``done``.
     """
 
-    #: executor fallback ladder for non-sql dialects — the pandas
-    #: Arrow executors cover the widest grammar; sql-only builtins
-    #: route native; per-entity cogroup catches declined shapes
+    #: executor fallback ladder after the session's strategy —
+    #: native takes what it compiles, auto routes the rest to the
+    #: Arrow executors, per-entity cogroup catches declined shapes
     #: (same ladder tools/golden_corpus.py verifies against goldens)
-    _LADDER = [
-        ("sql", "native"),
-        ("sql", "auto"),
-        ("pandas", "cogroup"),
-        ("sql", "cogroup"),
-    ]
+    _LADDER = ["native", "auto", "cogroup"]
 
     def __init__(self, spark, snapshot: str = "2017-01-01"):
         self.spark = spark
@@ -339,7 +333,6 @@ class ReplSession:
         self.big_data = False
         self.max_map_size: int | None = None
         self.strategy = "auto"
-        self.dialect = "pandas"
         self.dictionary = None
         self.dict_path: str | None = None
         self.psv_path: str | None = None
@@ -403,10 +396,6 @@ class ReplSession:
         if m:
             self.strategy = m.group(1)
             return [f"Executor strategy {self.strategy}."]
-        m = re.match(r"dialect\s+(\w+)", args)
-        if m:
-            self.dialect = m.group(1)
-            return [f"Expression dialect {self.dialect}."]
         return [f"unknown :set {args!r}"]
 
     def _load(self, arg: str) -> list[str]:
@@ -553,19 +542,18 @@ class ReplSession:
             # t40: `:set +big-data` — mk_feature raises without a
             # window/latest bound); raise before the executor ladder
             qq = inline_functions(q, funcs) if funcs else q
-            parse_query_multi(qq, dialect=self.dialect, big_data=True)
-        configs = [(self.dialect, self.strategy)] + [
-            c for c in self._LADDER if c != (self.dialect, self.strategy)
+            parse_query_multi(qq, big_data=True)
+        configs = [self.strategy] + [
+            c for c in self._LADDER if c != self.strategy
         ]
         first_err: Exception | None = None
-        for run_dialect, run_strategy in configs:
+        for run_strategy in configs:
             try:
                 m = re.match(r"from\s+(\w+)", q)
                 inp_name = m.group(1) if m else ""
                 facts, ecol, tcol, scol, tombcol = self._facts_for(inp_name)
                 plans = parse_program(
                     [q],
-                    dialect=run_dialect,
                     entity_col=ecol,
                     time_col=tcol,
                     seq_col=scol,
@@ -590,18 +578,7 @@ class ReplSession:
                             strategy=run_strategy,
                             error_codes=err,
                         )
-                        pdf = res.toPandas()
-                        if not err and run_dialect != "sql":
-                            # pandas-dialect plans carry callable
-                            # exprs the Error64 pass can't read;
-                            # re-derive the codes from the sql parse
-                            # of the same query so `tombstone` still
-                            # renders (best-effort)
-                            pdf = self._merge_error_codes(
-                                q, facts, ecol, tcol, scol, tombcol,
-                                funcs, pdf,
-                            )
-                        return pdf, dict(res.dtypes)
+                        return res.toPandas(), dict(res.dtypes)
                     except Exception:  # noqa: BLE001 — retry w/o errs
                         if not err:
                             raise
@@ -609,46 +586,6 @@ class ReplSession:
                 if first_err is None:
                     first_err = exc
         raise first_err
-
-    def _merge_error_codes(
-        self, q, facts, ecol, tcol, scol, tombcol, funcs, pdf
-    ):
-        """Best-effort Error64 merge for results computed from a
-        pandas-dialect plan: parse the query again in the sql dialect
-        and join the standalone code pass's ``<name>_err`` columns, so
-        error nulls render ``tombstone``. Any failure leaves the
-        result code-less (plain ``None`` rendering)."""
-        from icicle_spark.plans import icicle_snapshot
-        from icicle_spark.source_lang import parse_program
-
-        try:
-            plans = parse_program(
-                [q], dialect="sql", entity_col=ecol, time_col=tcol,
-                seq_col=scol, tombstone_col=tombcol,
-                functions=funcs or None,
-            )
-            (_, p2), = plans.items()
-            if self.max_map_size is not None:
-                p2 = dataclasses.replace(
-                    p2, max_group_size=self.max_map_size
-                )
-            from icicle_spark.plans.errors import error_codes as _ec
-
-            errs = _ec(
-                facts, p2, snapshot=icicle_snapshot(self.snapshot)
-            ).toPandas()
-            pdf = pdf.merge(errs, on=ecol, how="left")
-            # a postcomp may null out of its OWN arithmetic while its
-            # folds read OK — upgrade to CannotCompute (run_plan's
-            # error branch does the same JVM-side)
-            for name, _e in p2.postcomps:
-                ecol_name = f"{name}_err"
-                if name in pdf.columns and ecol_name in pdf.columns:
-                    m = pdf[name].isna() & (pdf[ecol_name] == 0)
-                    pdf.loc[m, ecol_name] = 3
-        except Exception:  # noqa: BLE001 — codes are best-effort
-            pass
-        return pdf
 
     def _query(self, q: str) -> list[str]:
         try:

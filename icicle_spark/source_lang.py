@@ -24,7 +24,7 @@ IR was shaped by these contexts, Context.hs:25-37):
   freeze their folds at the bind point (a later ``filter`` narrows
   only later aggregates) and substitute into the postcomputation
 * juxtaposed scalar builtins ``double trunc log exp sqrt abs``
-  (rewritten per dialect; ``trunc`` is Catalyst-only)
+  (rewritten to Spark SQL calls)
 * ``fold x = INIT then STEP`` / ``fold1 x = INIT then STEP``
   (Context.hs:32-33) — compiled to :class:`CustomFold`; STEP/INIT are
   python-eval expressions over the bind name + fact columns (``fold1``
@@ -44,13 +44,16 @@ IR was shaped by these contexts, Context.hs:25-37):
   fold bind names. A bare element expression under ``latest N`` is
   an array result (collect).
 
-Element expressions pass through verbatim to the execution dialect:
-``dialect="sql"`` for the native Catalyst compiler, ``"pandas"`` for
-the Arrow fold executors (plain comparisons like ``value > 10`` and
-``location == "head"`` are valid in both). Postcomputation arithmetic
-is ALWAYS Spark-SQL (it runs on the aggregated frame, never inside an
-executor). Out-of-scope forms — tuples, ``now``, custom function
-definitions — raise ValueError naming the construct.
+Element expressions compile to Spark SQL (``location == "head"`` reads
+as equality there too), which every backend evaluates in the JVM —
+the Python executors receive them projected into columns
+(``plans.executor.project_exprs``). The one exception is an expression
+over a ``scan`` bind, directly or through a ``filter let`` bind: the
+bind exists only inside a frame, so it compiles to a vectorized pandas
+callable (``exprlang.to_callable``). Postcomputation arithmetic is
+Spark SQL too (it runs on the aggregated frame). Out-of-scope forms —
+tuples, ``now``, custom function definitions — raise ValueError naming
+the construct.
 """
 
 from __future__ import annotations
@@ -269,6 +272,13 @@ def _split_pipeline(q: str) -> list[str]:
     return out
 
 
+def _mentions(e, names: set[str]) -> bool:
+    """True if the expression text ``e`` reads any of ``names``."""
+    return isinstance(e, str) and any(
+        re.search(rf"\b{re.escape(n)}\b", e) for n in names
+    )
+
+
 def _strip_some(e: str) -> str:
     """`Some (expr)` / `Some expr` -> expr (the parser's Option
     constructors are erased; null IS None in the engine encoding)."""
@@ -282,14 +292,10 @@ def _strip_some(e: str) -> str:
 class _Builder:
     def __init__(
         self,
-        dialect: str,
         qname: str,
         skip_nulls: bool,
         big_data: bool = False,
     ) -> None:
-        if dialect not in ("sql", "pandas"):
-            raise ValueError("dialect must be 'sql' or 'pandas'")
-        self.dialect = dialect
         self.qname = qname
         self.skip_nulls = skip_nulls
         self.big_data = big_data
@@ -341,8 +347,7 @@ class _Builder:
             return None
         if len(self.filters) == 1:
             return self.filters[0]
-        j = " and " if self.dialect == "pandas" else " AND "
-        return j.join(f"({f})" for f in self.filters)
+        return " && ".join(f"({f})" for f in self.filters)
 
     def fresh(self) -> str:
         root = getattr(self, "_fresh_root", None) or self
@@ -369,58 +374,42 @@ class _Builder:
                 "inside windowed or latest"
             )
 
+        from icicle_spark import exprlang as X
+
+        # scan binds, and the filter-let binds that read them, exist
+        # only inside a frame: expressions over them compile to pandas
+        # callables, the only element expressions evaluated in Python
+        framed = {n for n, _, _ in self.scan_binds}
+        for n, e in self.binds:
+            if _mentions(e, framed):
+                framed.add(n)
+
         def J(x):
             if not isinstance(x, str):
                 return x
+            if _mentions(x, framed) and not re.fullmatch(r"\w+", x.strip()):
+                return X.to_callable(X.parse(_unmask(x, self.strlits)))
             if re.search(r"\bcase\b|\bif\b", x):
                 # element-position conditionals (Exp.hs Case / If,
-                # repl t13): exprlang renders them — CASE WHEN for
-                # the Catalyst dialect, a vectorized pandas callable
-                # for the Arrow executors (eval_expr takes either)
-                from icicle_spark import exprlang as X
-
-                ast = X.parse(_unmask(x, self.strlits))
-                if self.dialect == "sql":
-                    return X.to_sql(ast)
-                return X.to_callable(ast)
+                # repl t13): exprlang renders them as CASE WHEN
+                return X.to_sql(X.parse(_unmask(x, self.strlits)))
             if re.search(
                 r"\b(?:Some|None|Left|Right|ExceptTombstone)\b", x
-            ):
+            ) or re.search(r"/(?![=/])", x):
                 # constructor syntax in element position (t16
-                # `is_some (Some "hi")`): the juxta tables have no
-                # ctor forms — exprlang renders, juxta is the
-                # fallback for anything its grammar can't parse
-                from icicle_spark import exprlang as X
-
+                # `is_some (Some "hi")`: the juxta table has no ctor
+                # forms), and element-position DIVISION, a Possibly op:
+                # divide by zero -> null (t30-sea `newest (1/0)`
+                # golden: tombstone; raw ANSI SQL would throw).
+                # exprlang renders both; anything its grammar can't
+                # parse falls back to the juxta path
                 try:
-                    ast = X.parse(_unmask(x, self.strlits))
-                    if self.dialect == "sql":
-                        return X.to_sql(ast)
-                    return X.to_callable(ast)
+                    return X.to_sql(X.parse(_unmask(x, self.strlits)))
                 except SourceError:
                     raise
                 except Exception:
                     pass
-            if re.search(r"/(?![=/])", x):
-                # element-position DIVISION is a Possibly op: divide
-                # by zero -> null (t30-sea `newest (1/0)` golden:
-                # tombstone; raw pandas eval would give inf, raw ANSI
-                # SQL would throw). exprlang renders `/` null-on-zero
-                # in both dialects; anything its grammar can't parse
-                # falls back to the plain path (no division-free expr
-                # is affected).
-                from icicle_spark import exprlang as X
-
-                try:
-                    ast = X.parse(_unmask(x, self.strlits))
-                    if self.dialect == "sql":
-                        return X.to_sql(ast)
-                    return X.to_callable(ast)
-                except SourceError:
-                    raise
-                except Exception:
-                    pass
-            return _unmask(_juxta(x, self.dialect), self.strlits)
+            return _unmask(_juxta(x), self.strlits)
 
         return Feature(
             fname, agg, J(expr),
@@ -437,9 +426,7 @@ class _Builder:
             scans=tuple((n, a, J(e)) for n, a, e in self.scan_binds)
             if self.scan_binds else None,
             post_group_filter=J(
-                " and ".join(f"({p})" for p in self.post_filters)
-                if self.dialect == "pandas"
-                else " AND ".join(f"({p})" for p in self.post_filters)
+                " && ".join(f"({p})" for p in self.post_filters)
             )
             if self.post_filters else None,
             group_latest=self.group_latest,
@@ -454,7 +441,7 @@ def _child_builder(b: _Builder) -> _Builder:
     state (a subquery refines the outer stream), SHARES the parent's
     feature list and fresh-name counter (hidden folds land in the one
     fused plan — Fusion.hs semantics)."""
-    c = _Builder(b.dialect, b.qname, b.skip_nulls, b.big_data)
+    c = _Builder(b.qname, b.skip_nulls, b.big_data)
     c.filters = list(b.filters)
     c.binds = list(b.binds)
     c.lets = dict(b.lets)
@@ -718,7 +705,7 @@ def _render_post(b: _Builder, frag: str) -> str:
         if X.is_constant(ast):
             return _sql_value(X.unwrap_output(X.evaluate(ast, {})))
         return _now_sub(X.to_sql(ast))
-    return _now_sub(_unmask(_juxta(_safe_divisions(frag), "sql"), b.strlits))
+    return _now_sub(_unmask(_juxta(_safe_divisions(frag)), b.strlits))
 
 
 def _sql_value(v) -> str:
@@ -845,8 +832,6 @@ def _extract_aggs(b: _Builder, s: str) -> str:
             # ≡ sum/n, so it lowers to three hidden folds + a struct
             # postcomp; n=0 keeps the fold-init semantics (x=y=0 →
             # mean 0, sd 1, z_test 0), hence coalesce not nullif.
-            if b.dialect != "sql":
-                raise ValueError("circular_stats requires the sql dialect")
             a1, j = _scan_atom(s, j, kw)
             E = f"({_check_element(b, b.sub(a1), kw)})"
 
@@ -877,8 +862,6 @@ def _extract_aggs(b: _Builder, s: str) -> str:
             # numflips' v tomb (prelude.icicle:278-291): tombstones
             # lift to a distinct None state, so ⊥-runs collapse and
             # v→⊥ / ⊥→v transitions count as flips
-            if b.dialect != "sql":
-                raise ValueError("numflips' requires the sql dialect")
             a1, j = _scan_atom(s, j, kw)
             a2, j = _scan_atom(s, j, kw)  # tombstone flag: the engine
             # encodes tombstones as null VALUES (prepare_facts nulls
@@ -942,8 +925,7 @@ def _apply_context(b: _Builder, c: str) -> None:
     )
     if m:
         # literal pattern: equality filter (repl t04.1)
-        eq = "==" if b.dialect == "pandas" else "="
-        b.filters.append(f"({b.sub(m.group(2))}) {eq} {m.group(1)}")
+        b.filters.append(f"({b.sub(m.group(2))}) == {m.group(1)}")
         b._filter_since_latest = True
         return
     m = re.fullmatch(r"filter\s+(.+)", c, re.S)
@@ -1180,8 +1162,6 @@ def _apply_context(b: _Builder, c: str) -> None:
             # a fact's OUTER key fixes its bucket, so the nest is one
             # composite-key group; the output postcomp rebuilds the
             # map-of-maps shape (folds_ext.nest_map rationale).
-            if b.dialect != "sql":
-                raise ValueError("nested `group` requires the sql dialect")
             if b.nested_group:
                 raise ValueError("more than two group levels unsupported")
             b.nested_group = True
@@ -1368,8 +1348,6 @@ def _apply_one_let(b: _Builder, binding: str) -> None:
     )
     if mm:
         v, col, atail = mm.group(1), mm.group(2), mm.group(3).strip()
-        if b.dialect != "sql":
-            raise ValueError("array fold requires the sql dialect")
         if re.fullmatch(rf"count\s+(?:{re.escape(v)}|\(\s*\))", atail):
             b.lets[nm] = f"size({col})"
         elif re.fullmatch(rf"sum\s+{re.escape(v)}", atail):
@@ -1438,8 +1416,8 @@ _AGG_KW = re.compile(
 _AGG2_KW = {"covariance", "correlation", "gradient", "intercept"}
 
 # Juxtaposed scalar functions (Icicle application syntax `double x`,
-# prelude.icicle / Builtin.hs): rewritten per dialect. `log` is
-# natural log in both (Spark SQL's ln).
+# prelude.icicle / Builtin.hs): rewritten to Spark SQL calls. `log`
+# is natural log (Spark SQL's ln).
 _JUXTA_SQL = {
     "double": "double({})", "trunc": "int({})", "log": "ln({})",
     "exp": "exp({})", "sqrt": "sqrt({})", "abs": "abs({})",
@@ -1468,8 +1446,7 @@ _JUXTA_SQL = {
     "is_some": "(({}) IS NOT NULL)", "is_none": "(({}) IS NULL)",
     "box": "({})", "fst": "({}).f1", "snd": "({}).f2",
     "seq": "({1})", "not": "(NOT ({}))",
-    # text scalars (SURVEY §2.7; functions/text.py Column parity) —
-    # Catalyst-dialect only: regex/length have no pandas-eval form
+    # text scalars (SURVEY §2.7; functions/text.py Column parity)
     "strlen": "length({})", "tolower": "lower({})",
     "toupper": "upper({})",
     "grepl": "(({1}) RLIKE ({0}))",
@@ -1478,27 +1455,15 @@ _JUXTA_SQL = {
 _JUXTA_ARGN = {"atan2": 2, "days_between": 2, "index": 2,
                "get_or_else": 2, "seq": 2, "grepl": 2,
                "grepl_count": 2, "mod": 2, "int_div": 2, "pi": 0}
-_JUXTA_PD = {"double": "(({}) * 1.0)", "log": "log({})", "exp": "exp({})",
-             "mod": "(({0}) % ({1}))",
-             "pi": "3.141592653589793",
-             "sqrt": "sqrt({})", "abs": "abs({})",
-             "sin": "sin({})", "cos": "cos({})", "tan": "tan({})",
-             "floor": "floor({})",
-             "year_of": "(({}).dt.year)", "month_of": "(({}).dt.month)",
-             "day_of": "(({}).dt.day)"}
-
-
-def _juxta(s: str, dialect: str) -> str:
-    """`double x` / `log (x + 1)` -> dialect call syntax, recursively
+def _juxta(s: str) -> str:
+    """`double x` / `log (x + 1)` -> Spark SQL call syntax, recursively
     (also normalizes call syntax `log(x)` — same rewrite). Multi-arg
     builtins (`atan2 a b`, `index arr i`) consume one atom per
     argument — application binds tightest."""
-    if dialect == "sql":
-        # Icicle boolean operators: Spark SQL has no `&&`, and `||`
-        # is string CONCAT there — silently wrong on booleans. Runs
-        # on masked text, so literals never rewrite.
-        s = s.replace("||", " OR ").replace("&&", " AND ")
-    table = _JUXTA_SQL if dialect == "sql" else _JUXTA_PD
+    # Icicle boolean operators: Spark SQL has no `&&`, and `||` is
+    # string CONCAT there — silently wrong on booleans. Runs on masked
+    # text, so literals never rewrite.
+    s = s.replace("||", " OR ").replace("&&", " AND ")
     pat = re.compile(
         r"\b(" + "|".join(_JUXTA_SQL) + r")(?![\w'])"
     )
@@ -1511,17 +1476,13 @@ def _juxta(s: str, dialect: str) -> str:
             return "".join(out)
         out.append(s[i : m.start()])
         kw = m.group(1)
-        if kw not in table:
-            raise ValueError(
-                f"builtin {kw!r} has no {dialect!r}-dialect form"
-            )
         args: list[str] = []
         j = m.end()
         for _ in range(_JUXTA_ARGN.get(kw, 1)):
             atom, j = _scan_atom(s, j, kw)
             inner = atom[1:-1] if atom.startswith("(") else atom
-            args.append(_juxta(inner, dialect))
-        out.append(table[kw].format(*args))
+            args.append(_juxta(inner))
+        out.append(_JUXTA_SQL[kw].format(*args))
         i = j
 
 
@@ -1736,7 +1697,6 @@ def _days_in_fold() -> CustomFold:
 def parse_query_multi(
     q: str,
     name: str = "q0",
-    dialect: str = "sql",
     skip_nulls: bool = False,
     big_data: bool = False,
 ) -> tuple[str, list[Feature], list[tuple[str, str]], list[str]]:
@@ -1763,7 +1723,7 @@ def parse_query_multi(
     input_name = m.group(1)
     if len(segs) < 2:
         raise ValueError("query has no aggregate")
-    b = _Builder(dialect, name, skip_nulls, big_data)
+    b = _Builder(name, skip_nulls, big_data)
     b.strlits = _strlits
     for c in segs[1:-1]:
         _apply_context(b, c)
@@ -2000,7 +1960,7 @@ def parse_query_multi(
             # values (zebra test_map_double `Some (mean ...)`); a bare
             # `Some` in SQL would resolve to Spark's SOME aggregate
             body = re.sub(r"\bSome\b\s*", "", body)
-            return _juxta(_safe_divisions(body), "sql")
+            return _juxta(_safe_divisions(body))
 
         comps = _split_top_tuple(rewritten)
         if comps is not None:
@@ -2047,7 +2007,6 @@ def parse_query_multi(
 def parse_query(
     q: str,
     name: str = "q0",
-    dialect: str = "sql",
     skip_nulls: bool = False,
 ) -> tuple[str, Feature]:
     """Parse one `from INPUT ~> ... ~> AGG` query string; returns
@@ -2057,7 +2016,7 @@ def parse_query(
     a postcomputation — use :func:`parse_query_multi` /
     :func:`parse_program` for those."""
     input_name, feats, posts, _hidden = parse_query_multi(
-        q, name, dialect, skip_nulls
+        q, name, skip_nulls
     )
     if posts or len(feats) != 1:
         raise ValueError(
@@ -2081,6 +2040,9 @@ def parse_program(
     all queries over one attribute into a single pass —
     Core/Program/Fusion.hs:37-81). Returns {input_name: Plan}.
 
+    Element expressions compile to Spark SQL; ``dialect`` accepts only
+    ``"sql"`` and remains for callers that name it.
+
     ``functions`` supplies custom function definitions to inline at
     call sites (the repl ``:let f x = ...`` surface): either module
     SOURCE text (``f x = body`` declarations, signatures ignored) or
@@ -2090,6 +2052,10 @@ def parse_program(
         if isinstance(queries, dict)
         else ((f"q{i}", q) for i, q in enumerate(queries))
     )
+    if dialect != "sql":
+        raise ValueError(
+            f"dialect {dialect!r}: element expressions are Spark SQL only"
+        )
     funcs: Mapping[str, tuple[list[str], str]] = {}
     if isinstance(functions, str):
         funcs = _collect_functions(_top_level_blocks(functions))
@@ -2101,7 +2067,7 @@ def parse_program(
     for name, q in items:
         if funcs:
             q = inline_functions(q, funcs)
-        inp, fs, ps, hs = parse_query_multi(q, name, dialect, skip_nulls)
+        inp, fs, ps, hs = parse_query_multi(q, name, skip_nulls)
         feats.setdefault(inp, []).extend(fs)
         posts.setdefault(inp, []).extend(ps)
         hidden.setdefault(inp, []).extend(hs)
@@ -2113,7 +2079,6 @@ def parse_program(
             seq_col=seq_col,
             tombstone_col=tombstone_col,
             postcomps=tuple(posts[inp]),
-            expr_dialect=dialect,
             hidden=tuple(hidden[inp]),
         )
         for inp, fs in feats.items()
@@ -2379,7 +2344,6 @@ def _top_level_blocks(text: str) -> list[str]:
 
 def parse_dictionary_source(
     text: str,
-    dialect: str = "sql",
     skip_nulls: bool = False,
     entity_col: str = "entity",
     time_col: str = "time",
@@ -2464,13 +2428,12 @@ def parse_dictionary_source(
             q = _unmask(re.sub(r"\bin\b", "~>", q), _lits)
             try:
                 qinput, feats, posts, hidden = (
-                    parse_query_multi(q, name, dialect, skip_nulls)
+                    parse_query_multi(q, name, skip_nulls)
                 )
                 outputs.append(
                     DictionaryOutput(
                         name, qinput, features=tuple(feats),
                         postcomps=tuple(posts), hidden=tuple(hidden),
-                        dialect=dialect,
                     )
                 )
                 feature_inputs.add(qinput)
@@ -2512,7 +2475,6 @@ def collect_module_functions(
 
 def parse_dictionary_file(
     path: str,
-    dialect: str = "sql",
     skip_nulls: bool = False,
     entity_col: str = "entity",
     time_col: str = "time",
@@ -2524,7 +2486,7 @@ def parse_dictionary_file(
 
     with open(path, encoding="utf-8") as f:
         return parse_dictionary_source(
-            f.read(), dialect=dialect, skip_nulls=skip_nulls,
+            f.read(), skip_nulls=skip_nulls,
             entity_col=entity_col, time_col=time_col, seq_col=seq_col,
             base_dir=os.path.dirname(os.path.abspath(path)),
         )

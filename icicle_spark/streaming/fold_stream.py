@@ -61,7 +61,9 @@ def stream_fold(
     carrying the CURRENT fold values (running features). State per
     entity and feature is a constant-size accumulator:
     (sum, count, min, max, newest_t_us, newest_v) — the same mergeable
-    shape as plans.resume.
+    shape as plans.resume. Element strings are Spark SQL, projected
+    JVM-side by ``plans.executor.project_exprs`` as for the batch
+    executors (tombstoned facts included).
     """
     for f in plan.features:
         if not (isinstance(f.agg, Agg) and f.agg in _STREAMABLE):
@@ -71,6 +73,9 @@ def stream_fold(
                 "stream_fold supports plain folds; use stream_windowed_agg "
                 "for event-time windows"
             )
+    from icicle_spark.plans.executor import project_exprs
+
+    stream, plan = project_exprs(stream, plan)
     ecol, tcol = plan.entity_col, plan.time_col
     entity_type = dict(stream.dtypes)[ecol]
     out_schema = _out_schema(plan, entity_type)

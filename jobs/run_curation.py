@@ -65,18 +65,13 @@ def build_rules(args) -> list[tuple[str, str]]:
 
 
 def load_signal_dictionary(spec: str, id_col: str):
-    """Quality-signal Dictionaries for the curation pipeline:
-    ``(sql_dictionary, pandas_dictionary_or_None)``.
+    """The quality-signal Dictionary for the curation pipeline.
 
     ``path/to/dict.icicle[:entity,time,seq]`` parses dictionary
-    SOURCE twice — once per element-expression dialect, so each
-    input's fused plan can run on whichever backend supports it
-    (Catalyst when native-compilable, the Arrow executors otherwise).
-    The entity column defaults to the job's --id-col and the time
-    column to a synthetic instant (a curation corpus is point-in-time
-    — each doc is one fact). ``module.py:ATTR`` loads a prebuilt
-    Dictionary exactly like jobs/run_features.py (one dialect — its
-    features already target a backend)."""
+    SOURCE; the entity column defaults to the job's --id-col and the
+    time column to a synthetic instant (a curation corpus is
+    point-in-time — each doc is one fact). ``module.py:ATTR`` loads a
+    prebuilt Dictionary exactly like jobs/run_features.py."""
     import sys as _sys
 
     path, _, attr = spec.partition(":")
@@ -92,27 +87,18 @@ def load_signal_dictionary(spec: str, id_col: str):
         import os as _os
 
         kw["base_dir"] = _os.path.dirname(_os.path.abspath(path))
-        d_sql, skipped = parse_dictionary_source(
-            open(path).read(), dialect="sql", skip_nulls=True, **kw
+        d, skipped = parse_dictionary_source(
+            open(path).read(), skip_nulls=True, **kw
         )
         for name, why in skipped.items():
             print(f"dictionary: skipped {name}: {why}", file=_sys.stderr)
-        try:
-            d_pd, _ = parse_dictionary_source(
-                open(path).read(), dialect="pandas", skip_nulls=True,
-                **kw,
-            )
-        except ValueError:
-            # some builtins are Catalyst-only (regex/length) — fine
-            # as long as every such plan compiles natively
-            d_pd = None
-        return d_sql, d_pd
+        return d
     from jobs.run_features import load_dictionary
 
-    return load_dictionary(spec), None
+    return load_dictionary(spec)
 
 
-def dictionary_signals(spark, docs, d_sql, d_pd, id_col, snapshot):
+def dictionary_signals(spark, docs, d, id_col, snapshot):
     """Evaluate every declared output over the cleaned corpus and
     return ``[(input_name, signal_frame)]`` keyed by --id-col.
 
@@ -120,18 +106,16 @@ def dictionary_signals(spark, docs, d_sql, d_pd, id_col, snapshot):
     column is cast for the run and cast back for the join; inputs
     whose declared time column is absent from the corpus get one
     synthetic instant per doc (point-in-time semantics — aggregates
-    reduce each doc's single fact). Per input, the Catalyst compiler
-    runs when the plan is native-compilable, else the Arrow executor
-    runs the pandas-dialect parse."""
+    reduce each doc's single fact). Each input's plan runs on the
+    backend ``run_plan``'s 'auto' strategy chooses."""
     from pyspark.sql import functions as F
 
     from icicle_spark.plans import run_plan
-    from icicle_spark.plans.native import native_supported
 
     id_type = dict(docs.dtypes)[id_col]
     out = []
-    for name, inp in d_sql.inputs.items():
-        if d_sql._plans[name] is None:
+    for name, inp in d.inputs.items():
+        if d._plans[name] is None:
             continue
         fr = docs.withColumn(
             inp.entity_col, F.col(id_col).cast("string")
@@ -141,19 +125,8 @@ def dictionary_signals(spark, docs, d_sql, d_pd, id_col, snapshot):
                 inp.time_col,
                 F.lit("2000-01-01 00:00:00").cast("timestamp"),
             )
-        plan = d_sql.plan_for(name)
-        if native_supported(plan):
-            strategy = "native"
-        elif d_pd is not None:
-            plan, strategy = d_pd.plan_for(name), "auto"
-        else:
-            raise SystemExit(
-                f"dictionary input {name!r}: plan uses Catalyst-only "
-                "builtins but is not native-compilable"
-            )
-        facts = d_sql.load(spark, name, df=fr)
-        res = run_plan(facts, plan, snapshot=snapshot,
-                       strategy=strategy)
+        facts = d.load(spark, name, df=fr)
+        res = run_plan(facts, d.plan_for(name), snapshot=snapshot)
         ent = inp.entity_col
         res = res.withColumn(ent, F.col(ent).cast(id_type))
         if ent != id_col:
@@ -481,9 +454,9 @@ def main(argv: list[str] | None = None) -> int:
     if args.dictionary:
         # declared quality signals (.icicle feature outputs) join the
         # signal frame — one fused pass per declared input
-        d_sql, d_pd = load_signal_dictionary(args.dictionary, args.id_col)
+        d = load_signal_dictionary(args.dictionary, args.id_col)
         for name, res in dictionary_signals(
-            spark, docs, d_sql, d_pd, args.id_col, args.dict_snapshot
+            spark, docs, d, args.id_col, args.dict_snapshot
         ):
             dup = (set(res.columns) & set(sig.columns)) - {args.id_col}
             if dup:

@@ -50,7 +50,7 @@ def load_dictionary(spec: str):
         import os as _os
 
         d, skipped = parse_dictionary_source(
-            open(path).read(), dialect="sql",
+            open(path).read(),
             base_dir=_os.path.dirname(_os.path.abspath(path)), **kw
         )
         for name, why in skipped.items():

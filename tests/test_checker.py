@@ -42,6 +42,7 @@ from icicle_spark.checker import (  # noqa: E402
 from icicle_spark.source_lang import parse_query_multi  # noqa: E402
 
 REPL = "/root/reference/icicle-compiler/test/cli/repl"
+FIXTURE_REPL = os.path.join(os.path.dirname(__file__), "fixtures", "repl")
 
 
 def _fail(q):
@@ -285,12 +286,12 @@ def test_diagnose_passes_through_unrelated_errors():
 
 # ---------------------------------------------------- REPL rendering
 
-def test_repl_renders_reference_blocks(spark):
+def _assert_renders_error_blocks(spark, repl_dir):
     from icicle_spark.repl import ReplSession
 
     s = ReplSession(spark)
-    s.handle(f":load {REPL}/dictionary.icicle")
-    s.handle(f":load {REPL}/data.psv")
+    s.handle(f":load {repl_dir}/dictionary.icicle")
+    s.handle(f":load {repl_dir}/data.psv")
 
     out = "\n".join(s.handle("from salary ~> 5ea1"))
     assert "## Check error" in out
@@ -307,6 +308,15 @@ def test_repl_renders_reference_blocks(spark):
     out = "\n".join(s.handle('from salary ~> mean "oops'))
     assert "## Parse error" in out
     assert "expecting '\"'" in out
+
+
+def test_repl_renders_error_blocks(spark):
+    _assert_renders_error_blocks(spark, FIXTURE_REPL)
+
+
+@pytest.mark.skipif(not os.path.isdir(REPL), reason="reference tree not present")
+def test_repl_renders_reference_blocks(spark):
+    _assert_renders_error_blocks(spark, REPL)
 
 
 # --------------------- usefulness vs brute-force enumeration oracle

@@ -4,8 +4,14 @@ tests; check/compile/lsp never start a SparkSession."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
+
+import pytest
+
+FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures", "repl")
+REFERENCE_REPL = "/root/reference/icicle-compiler/test/cli/repl"
 
 DICT = """
 input events : Int
@@ -70,10 +76,14 @@ def test_lsp_serves_stdio():
     assert r.returncode == 1
 
 
+def test_fixture_dictionary_checks():
+    r = _run(["check", os.path.join(FIXTURES, "dictionary.icicle")])
+    assert r.returncode == 0
+    assert "ok: 3 inputs, 2 outputs" in r.stdout
+
+
+@pytest.mark.skipif(not os.path.isdir(REFERENCE_REPL), reason="reference tree not present")
 def test_reference_dictionary_checks():
-    r = _run(
-        ["check",
-         "/root/reference/icicle-compiler/test/cli/repl/dictionary.icicle"]
-    )
+    r = _run(["check", os.path.join(REFERENCE_REPL, "dictionary.icicle")])
     assert r.returncode == 0
     assert "5 inputs" in r.stdout

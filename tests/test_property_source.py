@@ -1,11 +1,9 @@
 """Property test over the SOURCE grammar: randomly generated query
 strings (contexts x aggregate-expression tails) must evaluate
 identically through the native Catalyst compiler and the cogroup
-executor — catching parser or backend divergence in one sweep.
-
-Generated forms stay in the cross-dialect expression subset (bare
-columns and `value > N` comparisons are valid in both Spark SQL and
-pandas-eval), so ONE query string runs on both backends."""
+executor — catching parser or backend divergence in one sweep. Element
+expressions are Spark SQL on every backend, so ONE query string runs
+on all of them."""
 
 from __future__ import annotations
 
@@ -66,9 +64,9 @@ def test_random_source_programs_commute(spark, facts):
     rng = np.random.default_rng(23)
     queries = {f"q{i}": _rand_query(rng) for i in range(30)}
     outs = {}
-    for strat, dialect in (("native", "sql"), ("cogroup", "pandas")):
+    for strat in ("native", "cogroup"):
         plan = parse_program(
-            queries, dialect=dialect, skip_nulls=True,
+            queries, skip_nulls=True,
             entity_col="entity", time_col="time", seq_col="seq",
         )["facts"]
         outs[strat] = (
@@ -205,16 +203,16 @@ def test_random_new_grammar_commutes(spark, facts):
 
     def _runs(queries, strats):
         outs = {}
-        for strat, dialect in strats:
+        for strat in strats:
             plan = parse_program(
-                queries, dialect=dialect, skip_nulls=True,
+                queries, skip_nulls=True,
                 entity_col="entity", time_col="time", seq_col="seq",
             )["facts"]
             outs[strat] = (
                 run_plan(facts, plan, snapshot=SNAP, strategy=strat)
                 .toPandas().set_index("entity").sort_index()
             )
-        base = outs.pop(next(iter(outs.keys())) if False else strats[0][0])
+        base = outs.pop(strats[0])
         for strat, other in outs.items():
             assert list(base.index) == list(other.index), strat
             for name, q in queries.items():
@@ -224,20 +222,20 @@ def test_random_new_grammar_commutes(spark, facts):
                         base.loc[e, name], other.loc[e, name],
                     )
 
-    _runs(native_ok, [("native", "sql"), ("vectorized", "pandas"),
-                      ("cogroup", "pandas")])
-    _runs(scans, [("vectorized", "pandas"), ("cogroup", "pandas")])
+    _runs(native_ok, ["native", "vectorized",
+                      "cogroup"])
+    _runs(scans, ["vectorized", "cogroup"])
 
     # late-round-4 classes: multi-binding lets (all three backends),
-    # circular_stats (sql-only dialect), filter-then-frame per key
+    # circular_stats, filter-then-frame per key
     # (native declines pg_before_latest by design)
     mlets = {f"m{i}": _rand_new_query(rng, "mlet") for i in range(5)}
-    _runs(mlets, [("native", "sql"), ("vectorized", "pandas"),
-                  ("cogroup", "pandas")])
+    _runs(mlets, ["native", "vectorized",
+                  "cogroup"])
     circs = {f"x{i}": _rand_new_query(rng, "circ") for i in range(5)}
-    _runs(circs, [("native", "sql"), ("vectorized", "sql"),
-                  ("cogroup", "sql")])
+    _runs(circs, ["native", "vectorized",
+                  "cogroup"])
     pgf_first = {
         f"pf{i}": _rand_new_query(rng, "pgf_first") for i in range(6)
     }
-    _runs(pgf_first, [("vectorized", "pandas"), ("cogroup", "pandas")])
+    _runs(pgf_first, ["vectorized", "cogroup"])

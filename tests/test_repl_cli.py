@@ -6,11 +6,16 @@ inputs, :let functions, big-data mode, multi-line blocks."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from icicle_spark.repl import ReplSession, render_value
 
-REPL_DIR = "/root/reference/icicle-compiler/test/cli/repl"
+# A dictionary and PSV written for these tests (salary, injury and
+# gender facts for homer and marge). Every expected row below is
+# derived by hand from tests/fixtures/repl/data.psv.
+REPL_DIR = os.path.join(os.path.dirname(__file__), "fixtures", "repl")
 
 
 @pytest.fixture()
@@ -26,7 +31,7 @@ def _rows(out: list[str]) -> list[str]:
 
 
 def test_t01_sum(sess):
-    # t01-sanity/script line 1; expected: homer|1500 marge|30
+    # homer 100+200+300+400+500, marge 0+10+20
     out = sess.handle("from salary ~> sum value")
     assert _rows(out) == ["homer|1500", "marge|30"]
 
@@ -45,6 +50,48 @@ def test_group_renders_assoc_list(sess):
     out = sess.handle("from injury ~> group location ~> count severity")
     rows = _rows(out)
     assert len(rows) == 1 and rows[0].startswith("homer|[ (")
+
+
+def test_filter_string_equality(sess):
+    # homer's head injuries: severity 1.0 + 3.5; marge has none
+    out = sess.handle('from injury ~> filter location == "head" ~> sum severity')
+    assert _rows(out) == ["homer|4.5"]
+
+
+def test_if_element(sess):
+    # homer 300+400+500 (the salaries above 250), marge none
+    out = sess.handle("from salary ~> sum (if value > 250 then value else 0)")
+    assert _rows(out) == ["homer|1200", "marge|0"]
+
+
+def test_case_element(sess):
+    # only homer's first salary is 100
+    out = sess.handle("from salary ~> sum (case value of 100 then 1 ; _ then 0)")
+    assert _rows(out) == ["homer|1", "marge|0"]
+
+
+def test_division_by_zero_is_an_error_value(sess):
+    # x / 0 is an error element: newest of it renders `tombstone`;
+    # in a sum it poisons homer (100 / 0) but not marge
+    # (0/-100 + 10/-90 + 20/-80)
+    out = sess.handle("from salary ~> newest (value / 0)")
+    assert _rows(out) == ["homer|tombstone", "marge|tombstone"]
+    out = sess.handle("from salary ~> sum (value / (value - 100))")
+    assert _rows(out) == [
+        "homer|tombstone", f"marge|{0 / -100 + 10 / -90 + 20 / -80!r}",
+    ]
+
+
+def test_scan_running_sum(sess):
+    # running sums homer 100 300 600 1000 1500, marge 0 10 30
+    out = sess.handle("from salary ~> scan z = sum value ~> latest 3 ~> z")
+    assert _rows(out) == ["homer|[ 600 , 1000 , 1500 ]", "marge|[ 0 , 10 , 30 ]"]
+
+
+def test_tombstone_fact_renders_tombstone(sess):
+    # marge's newest gender fact is the NA tombstone
+    out = sess.handle("from gender ~> newest value")
+    assert _rows(out) == ['homer|"male"', "marge|tombstone"]
 
 
 def test_snapshot_setting_changes_result(sess):

@@ -113,7 +113,7 @@ def test_resume_postcomp_parity(spark, facts):
     plan = parse_program(
         {"avg_manual": "from f ~> sum n_tok / count n_tok",
          "spread": "from f ~> max n_tok - min n_tok"},
-        dialect="sql", skip_nulls=True,
+        skip_nulls=True,
         entity_col="doc_id", time_col="event_time", seq_col="seq",
     )["f"]
     direct = (

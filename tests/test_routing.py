@@ -90,7 +90,7 @@ def _chords(events):
 def test_snapshot_folds_route_native(events):
     plan = _plan(FOLDS)
     assert choose_backend(plan, SNAP) == (
-        "native", "native_supported, no latest-N, dialect-safe")
+        "native", "native_supported, no latest-N")
     out = run_plan(events, plan, snapshot=SNAP)
     assert _python_nodes(out) == []
     assert not _broadcast_hint(out)
@@ -101,7 +101,7 @@ def test_snapshot_folds_route_native(events):
 def test_chord_folds_route_native_without_broadcast_hint(events):
     plan, chords = _plan(CHORD_FOLDS), _chords(events)
     assert choose_backend(plan, chords=chords) == (
-        "native", "native_supported, no latest-N, dialect-safe")
+        "native", "native_supported, no latest-N")
     out = run_plan(events, plan, chords=chords)
     assert _python_nodes(out) == []
     assert not _broadcast_hint(out)
@@ -116,7 +116,7 @@ def test_sql_dialect_where_routes_native(events):
     plan = _plan([
         Feature("click_cnt", Agg.COUNT, "value", where="event_type = 'click'",
                 skip_nulls=True),
-    ], expr_dialect="sql")
+    ])
     assert choose_backend(plan, SNAP)[0] == "native"
     out = run_plan(events, plan, snapshot=SNAP)
     assert _python_nodes(out) == []
@@ -124,9 +124,20 @@ def test_sql_dialect_where_routes_native(events):
                         strategy="cogroup"), ["user_id"])
 
 
+def test_equality_where_routes_native(events):
+    # `==` is Spark SQL equality too: asof_window_folds' where runs
+    # on the native compiler
+    plan = _plan(CLICKS)
+    assert choose_backend(plan, SNAP) == (
+        "native", "native_supported, no latest-N")
+    out = run_plan(events, plan, snapshot=SNAP)
+    assert _python_nodes(out) == []
+    _same(out, run_plan(events, plan, snapshot=SNAP, strategy="cogroup"),
+          ["user_id"])
+
+
 @pytest.mark.parametrize("features,reason", [
     (LATEST, "latest-N in ['latest5_sum', 'latest5_mean']: snapshot on vexec"),
-    (CLICKS, "pandas-dialect expressions in ['click_cnt']: snapshot on vexec"),
 ])
 def test_snapshot_keeps_arrow(events, features, reason):
     plan = _plan(features)

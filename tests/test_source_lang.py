@@ -48,10 +48,10 @@ def injury(spark):
     return spark.createDataFrame(pdf).cache()
 
 
-def _run(df, q, dialect, strategy, snap=SNAP):
-    _, f = parse_query(q, "r", dialect=dialect)
+def _run(df, q, strategy, snap=SNAP):
+    _, f = parse_query(q, "r")
     plans = parse_program(
-        [q], dialect=dialect, entity_col="entity", time_col="time",
+        [q], entity_col="entity", time_col="time",
         seq_col="seq",
     )
     plan = next(iter(plans.values()))
@@ -60,19 +60,19 @@ def _run(df, q, dialect, strategy, snap=SNAP):
 
 
 def test_t01_sum_and_filtered_count(salary):
-    r = _run(salary, "from salary ~> sum value", "sql", "native")
+    r = _run(salary, "from salary ~> sum value", "native")
     assert r.loc["homer", "q0"] == 1500 and r.loc["marge", "q0"] == 30
     r = _run(
         salary, "from salary ~> filter value > 10 ~> count value",
-        "sql", "native",
+        "native",
     )
     assert r.loc["homer", "q0"] == 5 and r.loc["marge", "q0"] == 1
 
 
 def test_latest_mean_and_count_unit(salary):
-    r = _run(salary, "from salary ~> latest 3 ~> mean value", "sql", "native")
+    r = _run(salary, "from salary ~> latest 3 ~> mean value", "native")
     assert r.loc["homer", "q0"] == 400.0 and r.loc["marge", "q0"] == 10.0
-    r = _run(salary, "from salary ~> count ()", "sql", "native")
+    r = _run(salary, "from salary ~> count ()", "native")
     assert r.loc["homer", "q0"] == 5 and r.loc["marge", "q0"] == 3
 
 
@@ -84,13 +84,13 @@ def test_t19_month_window(spark):
     df = spark.createDataFrame(pdf)
     r = _run(
         df, "from salary ~> windowed 3 months ~> sum value",
-        "sql", "native", snap=icicle_snapshot("1970-12-01"),
+        "native", snap=icicle_snapshot("1970-12-01"),
     )
     assert r.loc["homer", "q0"] == 10 + 11 + 12
     r = _run(
         df,
         "from salary ~> windowed between 1 months and 3 months ~> sum value",
-        "sql", "native", snap=icicle_snapshot("1970-12-01"),
+        "native", snap=icicle_snapshot("1970-12-01"),
     )
     assert r.loc["homer", "q0"] == 10 + 11
 
@@ -98,7 +98,7 @@ def test_t19_month_window(spark):
 def test_t02_group(salary):
     r = _run(
         salary, "from salary ~> group value ~> count value",
-        "pandas", "cogroup",
+        "cogroup",
     )
     assert {k: int(v) for k, v in r.loc["marge", "q0"].items()} == {
         "0": 1, "10": 1, "20": 1,
@@ -108,7 +108,7 @@ def test_t02_group(salary):
 def test_t04_1_literal_pattern(injury):
     r = _run(
         injury, 'from injury ~> filter let "head" = location ~> sum severity',
-        "sql", "native",
+        "native",
     )
     assert r.loc["homer", "q0"] == 3
 
@@ -116,7 +116,7 @@ def test_t04_1_literal_pattern(injury):
 def test_t17_filter_let_latest_array(salary):
     q = ("from salary ~> filter let Some zod = Some (value + 1) "
          "~> latest 3 ~> zod")
-    r = _run(salary, q, "pandas", "vectorized")
+    r = _run(salary, q, "vectorized")
     assert list(r.loc["homer", "q0"]) == [301.0, 401.0, 501.0]
     assert list(r.loc["marge", "q0"]) == [1.0, 11.0, 21.0]
     # line 28: the outer frame before the filter
@@ -124,7 +124,7 @@ def test_t17_filter_let_latest_array(salary):
           "Some (value + 1) ~> latest 3 ~> zod")
     _, f = parse_query(q2, "r")
     assert f.latest_outer == 4 and f.latest == 3
-    r2 = _run(salary, q2, "pandas", "vectorized")
+    r2 = _run(salary, q2, "vectorized")
     assert list(r2.loc["homer", "q0"]) == [301.0, 401.0, 501.0]
     # back-to-back latests collapse to the min
     _, f3 = parse_query("from salary ~> latest 4 ~> latest 3 ~> value")
@@ -134,11 +134,11 @@ def test_t17_filter_let_latest_array(salary):
 def test_let_substitution_and_max_by(salary):
     r = _run(
         salary, "from salary ~> let x = value * 2 ~> sum x",
-        "sql", "native",
+        "native",
     )
     assert r.loc["homer", "q0"] == 3000
     r = _run(
-        salary, "from salary ~> max_by value value", "sql", "native"
+        salary, "from salary ~> max_by value value", "native"
     )
     assert r.loc["homer", "q0"] == 500.0
 
@@ -226,15 +226,16 @@ FOLD_GOLDENS = {
 }
 
 
-@pytest.mark.parametrize("strategy,dialect", [
-    ("native", "sql"), ("auto", "pandas"), ("cogroup", "pandas"),
-])
-def test_aggregate_expressions_repl_goldens(salary, strategy, dialect):
+# ids keep the (strategy, dialect) names these cases had before element
+# strings became Spark SQL only
+@pytest.mark.parametrize("strategy", ["native", "auto", "cogroup"],
+                         ids=["native-sql", "auto-pandas", "cogroup-pandas"])
+def test_aggregate_expressions_repl_goldens(salary, strategy):
     qs = {k: q for k, (q, _, _) in AGG_EXPR_GOLDENS.items()}
-    if dialect == "pandas":
+    if strategy != "native":
         qs.update({k: q for k, (q, _, _) in FOLD_GOLDENS.items()})
     plan = parse_program(
-        qs, dialect=dialect, entity_col="entity", time_col="time",
+        qs, entity_col="entity", time_col="time",
         seq_col="seq",
     )["salary"]
     out = (
@@ -262,17 +263,18 @@ GROUP_FOLD_GOLDENS = {
 }
 
 
-@pytest.mark.parametrize("strategy,dialect", [
-    ("native", "sql"), ("cogroup", "pandas"),
-])
-def test_t09_group_folds_source(salary, strategy, dialect):
+# ids keep the (strategy, dialect) names these cases had before element
+# strings became Spark SQL only
+@pytest.mark.parametrize("strategy", ["native", "cogroup"],
+                         ids=["native-sql", "cogroup-pandas"])
+def test_t09_group_folds_source(salary, strategy):
     qs = {k: q for k, (q, _, _) in GROUP_FOLD_GOLDENS.items()}
     # OLDEST-valued groups compile natively via min_by on the
     # (time, seq) order struct
     qs["gfo"] = ("from salary ~> group fold (k, v) = "
                  "(group time ~> oldest value) ~> max v")
     plan = parse_program(
-        qs, dialect=dialect, skip_nulls=True,
+        qs, skip_nulls=True,
         entity_col="entity", time_col="time", seq_col="seq",
     )["salary"]
     out = (
@@ -291,7 +293,7 @@ def test_group_fold_argmax_key(salary):
     plan = parse_program(
         {"top": "from salary ~> group fold (k, v) = "
                 "(group value ~> count value) ~> max_by v k"},
-        dialect="sql", skip_nulls=True,
+        skip_nulls=True,
         entity_col="entity", time_col="time", seq_col="seq",
     )["salary"]
     out = (
@@ -315,7 +317,7 @@ def test_postcomp_chord_scope(salary, spark):
     )
     plan = parse_program(
         {"avg": "from salary ~> sum value / count value"},
-        dialect="sql", entity_col="entity", time_col="time", seq_col="seq",
+        entity_col="entity", time_col="time", seq_col="seq",
     )["salary"]
     out = (
         run_plan(salary, plan, chords=chords, strategy="native")
@@ -336,7 +338,7 @@ def test_postcomp_error_channel(spark):
     df = spark.createDataFrame(pdf)
     plan = parse_program(
         {"avg": "from f ~> sum value / count value"},
-        dialect="sql", entity_col="entity", time_col="time", seq_col="seq",
+        entity_col="entity", time_col="time", seq_col="seq",
     )["f"]
     out = (
         run_plan(df, plan, snapshot="2024-02-01", strategy="native",
@@ -434,8 +436,7 @@ def test_parse_dictionary_source_file(spark, tmp_path):
     )
     (tmp_path / "dict.icicle").write_text(DICT_SRC)
     d, skipped = parse_dictionary_file(
-        str(tmp_path / "dict.icicle"), dialect="pandas",
-        skip_nulls=True, seq_col="seq",
+        str(tmp_path / "dict.icicle"), skip_nulls=True, seq_col="seq",
     )
     assert sorted(d.inputs) == ["injury", "salary"]
     assert sorted(d.outputs) == [
@@ -519,7 +520,7 @@ def test_postcomp_folds_share_via_cse(salary):
             "avg": "from salary ~> sum value / count value",
             "s": "from salary ~> sum value",
         },
-        dialect="sql", entity_col="entity", time_col="time",
+        entity_col="entity", time_col="time",
         seq_col="seq",
     )["salary"]
     condensed, dups = plan.stripped().cse()
@@ -546,7 +547,7 @@ def test_postcomp_chordexec_path(salary, spark):
     )
     plan = parse_program(
         {"avg": "from salary ~> sum value / count value"},
-        dialect="pandas", entity_col="entity", time_col="time",
+        entity_col="entity", time_col="time",
         seq_col="seq",
     )["salary"]
     out = (
@@ -556,10 +557,11 @@ def test_postcomp_chordexec_path(salary, spark):
     assert list(out["avg"]) == [200.0, 300.0, 10.0]
 
 
-@pytest.mark.parametrize("strategy,dialect", [
-    ("native", "sql"), ("cogroup", "pandas"),
-])
-def test_t02_group_map_arithmetic(salary, strategy, dialect):
+# ids keep the (strategy, dialect) names these cases had before element
+# strings became Spark SQL only
+@pytest.mark.parametrize("strategy", ["native", "cogroup"],
+                         ids=["native-sql", "cogroup-pandas"])
+def test_t02_group_map_arithmetic(salary, strategy):
     """repl t02 'Throw some constants in for good measure':
     `group time ~> sum (value + 3) * 5` — per-key postcomp via
     transform_values; two-fold arithmetic zips maps."""
@@ -569,7 +571,7 @@ def test_t02_group_map_arithmetic(salary, strategy, dialect):
             "gmean": "from salary ~> group value ~> "
                      "sum value / count value",
         },
-        dialect=dialect, skip_nulls=True,
+        skip_nulls=True,
         entity_col="entity", time_col="time", seq_col="seq",
     )["salary"]
     out = (
@@ -630,9 +632,9 @@ def test_two_arg_prelude_aggregates(spark):
         )
         .toPandas().set_index("entity").sort_index()
     )
-    for strat, dialect in (("native", "sql"), ("cogroup", "pandas")):
+    for strat in ("native", "cogroup"):
         plan = parse_program(
-            qs, dialect=dialect, skip_nulls=True,
+            qs, skip_nulls=True,
             entity_col="entity", time_col="time", seq_col="seq",
         )["f"]
         out = (
@@ -659,7 +661,7 @@ def test_t16_regression_verbatim(salary):
             "corr": "from salary ~> correlation (double value) "
                     "(double (days time) / 365)",
         },
-        dialect="sql", skip_nulls=True,
+        skip_nulls=True,
         entity_col="entity", time_col="time", seq_col="seq",
     )["salary"]
     out = (
@@ -715,7 +717,7 @@ def test_review_fixes_string_literals_and_temporality(spark, salary):
     # the literal-pattern filter still evaluates (masked token path)
     r = _run(
         salary, 'from salary ~> filter let 100 = value ~> count value',
-        "sql", "native",
+        "native",
     )
     assert r.loc["homer", "q0"] == 1
 
@@ -732,7 +734,7 @@ def test_postcomp_err_covers_own_arithmetic(spark):
     df = spark.createDataFrame(pdf)
     plan = parse_program(
         {"avg": "from f ~> sum value / count value"},
-        dialect="sql", entity_col="entity", time_col="time",
+        entity_col="entity", time_col="time",
         seq_col="seq",
     )["f"]
     # snapshot before b's only fact: b has zero visible facts ->
@@ -746,10 +748,11 @@ def test_postcomp_err_covers_own_arithmetic(spark):
     assert pd.isna(out.loc["b", "avg"]) and out.loc["b", "avg_err"] == 3
 
 
-@pytest.mark.parametrize("strategy,dialect", [
-    ("native", "sql"), ("cogroup", "pandas"),
-])
-def test_t03_distinct_verbatim(salary, injury, strategy, dialect):
+# ids keep the (strategy, dialect) names these cases had before element
+# strings became Spark SQL only
+@pytest.mark.parametrize("strategy", ["native", "cogroup"],
+                         ids=["native-sql", "cogroup-pandas"])
+def test_t03_distinct_verbatim(salary, injury, strategy):
     """t03-distinct script lines VERBATIM through the parser."""
     plan = parse_program(
         {
@@ -757,7 +760,7 @@ def test_t03_distinct_verbatim(salary, injury, strategy, dialect):
             "dt": "from salary ~> distinct time ~> count value",
             "dtm": "from salary ~> distinct time ~> mean value",
         },
-        dialect=dialect, skip_nulls=True,
+        skip_nulls=True,
         entity_col="entity", time_col="time", seq_col="seq",
     )["salary"]
     r = (
@@ -769,7 +772,7 @@ def test_t03_distinct_verbatim(salary, injury, strategy, dialect):
     assert r.loc["homer", "dtm"] == 300.0 and r.loc["marge", "dtm"] == 0.0
     plan_i = parse_program(
         {"dl": "from injury ~> distinct location ~> count location"},
-        dialect=dialect, skip_nulls=True,
+        skip_nulls=True,
         entity_col="entity", time_col="time", seq_col="seq",
     )["injury"]
     ri = (
@@ -1057,7 +1060,7 @@ sum v =
     p = parse_program(
         {"m": "from salary ~> sum (mod2 (trunc value) 7)",
          "b": "from salary ~> max (boost value)"},
-        dialect="sql", skip_nulls=True,
+        skip_nulls=True,
         entity_col="entity", time_col="time", seq_col="seq",
         functions=mod,
     )["salary"]

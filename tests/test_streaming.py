@@ -97,11 +97,11 @@ def test_stream_fold_matches_batch(spark, stream_dir, tmp_path):
 
 def test_stream_fold_filter_let_parity(spark, stream_dir, tmp_path):
     """filter_let binds in streaming folds: a genuinely partial
-    pattern ((n_tok - 5) ** 0.5 is NaN below 5) drops the same facts
-    the batch executor drops."""
+    pattern (null below n_tok 5) drops the same facts the batch
+    executor drops."""
     batch_df = spark.read.parquet(stream_dir)
     stream = spark.readStream.schema(batch_df.schema).parquet(stream_dir)
-    bind = (("b", "(n_tok - 5) ** 0.5"),)
+    bind = (("b", "CASE WHEN n_tok >= 5 THEN sqrt(n_tok - 5) END"),)
     plan = Plan(
         [
             Feature("sb", Agg.SUM, "b", filter_let=bind, skip_nulls=True),
@@ -312,7 +312,7 @@ def test_stream_fold_postcomp_parity(spark, stream_dir, tmp_path):
     plan = parse_program(
         {"avg_manual": "from s ~> sum n_tok / count n_tok",
          "spread": "from s ~> max n_tok - min n_tok"},
-        dialect="sql", skip_nulls=True,
+        skip_nulls=True,
         entity_col="doc_id", time_col="event_time", seq_col="seq",
     )["s"]
     out = _run_stream(

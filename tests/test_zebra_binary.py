@@ -375,7 +375,7 @@ def test_zebra_nested_cli_golden(spark):
     got: dict[str, dict] = {}
     for name, q in QS.items():
         plans = parse_program(
-            [q], dialect="pandas", seq_col="seq",
+            [q], seq_col="seq",
             tombstone_col="tombstone",
         )
         (_, plan), = plans.items()

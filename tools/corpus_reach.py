@@ -105,7 +105,7 @@ def main() -> int:
         by_dir.setdefault(d, [0, 0])[1] += 1
         err: str | None = None
         try:
-            parse_query_multi(line, name="q", dialect="sql", big_data=big_data)
+            parse_query_multi(line, name="q", big_data=big_data)
             if kind == "error":
                 err = "ACCEPTED a query the reference REJECTS"
         except ValueError as e:

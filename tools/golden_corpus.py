@@ -390,7 +390,7 @@ class ReplState:
 
 
 def run_script(spark, script: str, verbose: bool = False,
-               strategy: str = "auto", dialect: str = "pandas"):
+               strategy: str = "auto"):
     """Replay one script dir; returns (verified, rejected, mismatches,
     skips) where mismatches/skips are [(query, reason)]."""
     import dataclasses
@@ -476,9 +476,7 @@ def run_script(spark, script: str, verbose: bool = False,
 
                 try:
                     qq = inline_functions(q, funcs) if funcs else q
-                    parse_query_multi(
-                        qq, dialect=dialect, big_data=state.big_data
-                    )
+                    parse_query_multi(qq, big_data=state.big_data)
                 except ValueError:
                     rejected += 1
                 else:
@@ -489,23 +487,19 @@ def run_script(spark, script: str, verbose: bool = False,
             if golden_rows is None:
                 skips.append((q, "golden block not entity|value rows"))
                 continue
-            # fallback ladder: the pandas-dialect Arrow executors
-            # cover the widest grammar; sql-only builtins route to
-            # the native Catalyst path; per-entity cogroup catches
-            # shapes the partition-vectorized executor declines.
-            configs = (
-                [(dialect, strategy), ("sql", "native"),
-                 ("sql", "auto"), ("pandas", "cogroup"),
-                 ("sql", "cogroup")]
-                if dialect != "sql"
-                else [(dialect, strategy)]
+            # fallback ladder (the repl's): native takes what it
+            # compiles, auto routes the rest to the Arrow executors,
+            # per-entity cogroup catches shapes they decline. An
+            # explicit native run has no fallback.
+            configs = [strategy] if strategy == "native" else list(
+                dict.fromkeys([strategy, "native", "auto", "cogroup"])
             )
             out = None
             first_err: Exception | None = None
-            for run_dialect, run_strategy in configs:
+            for run_strategy in configs:
                 try:
                     plans = parse_program(
-                        [q], dialect=run_dialect, seq_col="seq",
+                        [q], seq_col="seq",
                         tombstone_col="tombstone",
                         functions=funcs or None,
                     )
@@ -575,7 +569,7 @@ def main() -> int:
     ap.add_argument("-v", "--verbose", action="store_true")
     ap.add_argument("--dir", default=None)
     ap.add_argument("--strategy", default="auto",
-                    help="auto|cogroup|vectorized (pandas dialect) or native (sql)")
+                    help="auto|cogroup|vectorized|native")
     args = ap.parse_args()
 
     from icicle_spark.session import get_spark
@@ -590,10 +584,7 @@ def main() -> int:
         name = os.path.basename(os.path.dirname(script))
         if args.dir and name != args.dir:
             continue
-        dialect = "sql" if args.strategy == "native" else "pandas"
-        v, r, mm, sk = run_script(
-            spark, script, args.verbose, args.strategy, dialect
-        )
+        v, r, mm, sk = run_script(spark, script, args.verbose, args.strategy)
         tot_v += v
         tot_r += r
         all_mm.extend((name, q, why) for q, why in mm)
