@@ -186,6 +186,12 @@ class _FeatureArrays:
             except (TypeError, ValueError):
                 fvals = np.full(len(v), np.nan)
             z = np.where(np.isnan(fvals), 0.0, fvals)
+            if f.agg in (Agg.VARIANCE, Agg.SD) and len(v):
+                # variance is shift-invariant: sums of each entity's
+                # values minus its first value stay small, so
+                # s2 - s*s/n does not cancel at a large offset
+                first = pd.Series(fvals).groupby(self.codes).transform("first")
+                z = np.where(np.isnan(fvals), 0.0, fvals - first.to_numpy())
             self.cum = np.concatenate([[0.0], np.cumsum(z)])
             self.cumsq = np.concatenate([[0.0], np.cumsum(z * z)])
             if f.agg is Agg.DECAYED_SUM:

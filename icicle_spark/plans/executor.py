@@ -777,6 +777,10 @@ def run_plan(
             + [f.name for f in plan.features],
         )
 
+    # fresh attributes on the chord side: a chord table derived from
+    # the facts (entities cross-joined with times) otherwise shares
+    # the facts' entity attribute and the cogroup cannot resolve it
+    chords = chords.toDF(*chords.columns)
     return _realias(
         facts.groupBy(ecol)
         .cogroup(chords.groupBy(ecol))

@@ -1,35 +1,42 @@
 """Native plan compiler — pure DataFrame ops, no Python anywhere.
 
-Compiles a fold ``Plan`` into a single-scan Catalyst pipeline. The
-feature set is split by execution need:
+Compiles a fold ``Plan`` into a single-scan Catalyst pipeline. Every
+fold the table in ``plans.monoid`` covers is a partial state per key,
+finalized after the spine join; the feature set is split by
+execution need:
 
-* mergeable folds + latest-N  — ONE scan, two-stage salted
-  aggregation: stage 1 computes constant-size partial states per
-  (entity[, query_time], salt-of-seq); stage 2 merges per entity.
-  Skew-immune: a hot entity holding 30% of all rows spreads over
-  ``_SALT_BUCKETS`` tasks. latest-N rides along because top-N-by-
-  (time,seq) is a monoid (local tail in stage 1, merged tail in
-  stage 2). Measured alternative: a window-rank implementation of
-  latest-N did not finish in 10 minutes on the skewed 8M-row bench
-  (one task owns the hot entity's frame); the salted path takes
-  seconds.
-* non-mergeable aggregates (count_distinct, distinct_values,
-  max_by/min_by) — direct conditional aggregation per group key
-  (Spark's own partial aggregation handles these).
+* table folds without latest-N — ONE aggregate of states per key
+  (entity[, query_time]): one entity exchange, Spark's own partial
+  aggregation before it.
+* table folds + latest-N — ONE scan, two-stage salted aggregation:
+  stage 1 computes constant-size states per (key, salt-of-seq);
+  stage 2 merges them per key. Skew-immune: a hot entity holding 30%
+  of all rows spreads over ``_SALT_BUCKETS`` tasks. latest-N rides
+  along because top-N-by-(time,seq) is a monoid (local tail in stage
+  1, merged tail in stage 2). Measured alternative: a window-rank
+  implementation of latest-N did not finish in 10 minutes on the
+  skewed 8M-row bench (one task owns the hot entity's frame); the
+  salted path takes seconds.
+* aggregates outside the table (count_distinct, distinct_values,
+  max_by/min_by) — direct conditional aggregation per key.
 * numflips — prev-value helper column over an entity-time window,
-  then the same conditional aggregation (bounded cost: one sorted
-  exchange; avoid mixing with extreme skew, or use the Arrow
-  executor).
+  then its table state (bounded cost: one sorted exchange; avoid
+  mixing with extreme skew, or use the Arrow executor).
+* group maps and distinct folds — per-(key, group key) table folds,
+  then one map or aggregate per key.
 
 Fusion: N features still read the input ONCE (the analogue of the
 reference's Core fusion,
 /root/reference/icicle-core/src/Icicle/Core/Program/Fusion.hs:37-81).
 
 Scale: snapshot filters push to the parquet/Iceberg scan (partition
-pruning on time); the chord table broadcasts; exchanges carry only
-constant-size states, never raw fact rows. Plans the compiler can't
-express (group-maps, custom folds, distinct keys) raise and are
-routed to the vectorized Arrow executor by run_plan.
+pruning on time); chord tables join by shuffle unless the caller asks
+for a broadcast (``broadcast_chords``: explicit ``native`` does,
+``auto`` does not); exchanges carry only constant-size states, never
+raw fact rows, except the latest-N and numflips helper windows.
+Plans the compiler can't express (custom folds, scan binds, outer
+latest frames, callables) raise; run_plan sends them to the Python
+executors.
 """
 
 from __future__ import annotations
@@ -38,6 +45,7 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
+from icicle_spark.plans import monoid
 from icicle_spark.plans.ir import (
     Agg,
     Feature,
@@ -122,39 +130,6 @@ def native_supported(plan: Plan) -> bool:
     return all(_feature_native(f) for f in plan.features)
 
 
-def _plain_agg(agg: Agg, x: Column) -> Column:
-    if agg is Agg.SUM:
-        return F.sum(x.cast("double"))
-    if agg is Agg.COUNT:
-        return F.count(x)
-    if agg is Agg.MEAN:
-        return F.avg(x)
-    if agg is Agg.MIN:
-        return F.min(x.cast("double"))
-    if agg is Agg.MAX:
-        return F.max(x.cast("double"))
-    if agg is Agg.ANY:
-        return F.bool_or(x.cast("boolean"))
-    if agg is Agg.ALL:
-        return F.bool_and(x.cast("boolean"))
-    if agg is Agg.VARIANCE:
-        return F.var_samp(x.cast("double"))
-    if agg is Agg.SD:
-        return F.stddev_samp(x.cast("double"))
-    raise ValueError(f"not a group-native agg: {agg}")  # pragma: no cover
-
-
-# per-key value for a key whose every fact was guarded out by a
-# post-group filter: the fold's init (executor._EMPTY parity).
-# Aggregates absent here are legitimately null over an empty slice
-# (mean/min/max/variance/sd/newest/oldest); count is never null.
-_GROUP_EMPTY = {
-    Agg.SUM: lambda: F.lit(0.0),
-    Agg.ANY: lambda: F.lit(False),
-    Agg.ALL: lambda: F.lit(True),
-}
-
-
 def _key_str(base: DataFrame, kexpr: str) -> Column:
     """Group-key expression as a STRING map key, matching the Python
     executors' str() casing: Spark casts booleans to 'true'/'false'
@@ -183,39 +158,12 @@ def _order_cols(plan: Plan) -> list[Column]:
     return cols
 
 
-def _agg_col(
-    f: Feature, cond: Column, tcol: str, extra: Column | None,
-    qt: Column | None = None,
-) -> Column:
-    """One conditional aggregate for one feature; ``extra`` is the
-    helper-column condition (latest rank) to conjoin."""
-    if extra is not None:
-        cond = cond & extra
+def _agg_col(f: Feature, cond: Column, tcol: str) -> Column:
+    """The folds outside the table (``monoid``): one conditional
+    aggregate each, finished in place."""
     x = F.when(cond, F.expr(f.expr))
     agg = f.agg
-    if agg is Agg.SUM:
-        out = F.coalesce(F.sum(x), F.lit(0.0))
-    elif agg is Agg.COUNT:
-        out = F.coalesce(F.sum(F.when(cond & x.isNotNull(), 1).otherwise(0)), F.lit(0))
-    elif agg is Agg.MEAN:
-        out = F.avg(x)
-    elif agg is Agg.MIN:
-        out = F.min(x)
-    elif agg is Agg.MAX:
-        out = F.max(x)
-    elif agg is Agg.VARIANCE:
-        out = F.var_samp(x)
-    elif agg is Agg.SD:
-        out = F.stddev_samp(x)
-    elif agg is Agg.NEWEST:
-        out = F.max_by(x, F.when(cond & x.isNotNull(), F.col(tcol)))
-    elif agg is Agg.OLDEST:
-        out = F.min_by(x, F.when(cond & x.isNotNull(), F.col(tcol)))
-    elif agg is Agg.ANY:
-        out = F.coalesce(F.bool_or(x.cast("boolean")), F.lit(False))
-    elif agg is Agg.ALL:
-        out = F.coalesce(F.bool_and(x.cast("boolean")), F.lit(True))
-    elif agg is Agg.COUNT_DISTINCT:
+    if agg is Agg.COUNT_DISTINCT:
         out = F.count_distinct(x)
     elif agg is Agg.DISTINCT_VALUES:
         out = F.sort_array(F.collect_set(x.cast("string")))
@@ -230,39 +178,13 @@ def _agg_col(
         else:
             key = F.struct(F.expr(f.by).alias("b"), (-t_us).alias("t"))
             out = F.max_by(x, F.when(cond, key))
-    elif agg is Agg.DECAYED_SUM:
-        import math
-
-        lam = math.log(2.0) / (float(f.half_life_days) * 86_400.0)
-        age_s = (
-            F.unix_micros(qt.cast("timestamp"))
-            - F.unix_micros(F.col(tcol).cast("timestamp"))
-        ).cast("double") / F.lit(1e6)
-        out = F.coalesce(
-            F.sum(
-                F.when(cond, F.expr(f.expr).cast("double") * F.exp(-F.lit(lam) * age_s))
-            ),
-            F.lit(0.0),
-        )
-    elif agg is Agg.NUMFLIPS:
-        # __prev_<name> holds the previous matching value (window stage)
-        prev = F.col(f"__prev_{f.name}")
-        flip = F.when(
-            cond & prev.isNotNull() & (F.expr(f.expr) != prev), 1
-        ).otherwise(0)
-        out = F.coalesce(F.sum(flip), F.lit(0))
     else:  # pragma: no cover
         raise ValueError(f"not native: {agg}")
-    if not f.skip_nulls and agg is not Agg.COUNT:
+    if not f.skip_nulls:
         # Possibly semantics: a null (error/tombstone) element in the
         # final visible slice poisons the aggregate.
         poison = F.max(F.when(cond & F.expr(f.expr).isNull(), 1).otherwise(0))
         out = F.when(poison == 1, F.lit(None)).otherwise(out)
-    elif not f.skip_nulls:
-        poison = F.max(F.when(cond & F.expr(f.expr).isNull(), 1).otherwise(0))
-        out = F.when(poison == 1, F.lit(None)).otherwise(
-            F.coalesce(F.sum(F.when(cond, 1).otherwise(0)), F.lit(0))
-        )
     return out.alias(f.name)
 
 
@@ -342,290 +264,103 @@ def _visibility(
     return cond
 
 
-_INIT: dict[Agg, Any] = {
-    Agg.DECAYED_SUM: 0.0,
-    Agg.SUM: 0.0, Agg.COUNT: 0, Agg.ANY: False, Agg.ALL: True,
-    Agg.COUNT_DISTINCT: 0, Agg.NUMFLIPS: 0,
+# empty values of the folds outside the table (``_agg_col``)
+_DIRECT_EMPTY = {
+    Agg.COUNT_DISTINCT: lambda: F.lit(0),
+    Agg.DISTINCT_VALUES: lambda: F.array().cast("array<string>"),
 }
 
 
-def _fill_inits(out: DataFrame, plan: Plan, marker: str) -> DataFrame:
-    """Entities/chords with zero visible facts get fold init values
-    (the empty-fold path — reference Core/Eval/Stream.hs:76-99)."""
-    for f in plan.features:
-        if isinstance(f.agg, Agg) and f.agg in _INIT:
-            out = out.withColumn(
-                f.name,
-                F.when(F.col(marker).isNull(), F.lit(_INIT[f.agg])).otherwise(
-                    F.col(f.name)
-                ),
-            )
-        elif isinstance(f.agg, Agg) and f.agg is Agg.DISTINCT_VALUES:
-            out = out.withColumn(
-                f.name,
-                F.when(
-                    F.col(marker).isNull(), F.array().cast("array<string>")
-                ).otherwise(F.col(f.name)),
-            )
-    return out.drop(marker)
-
-
-def _helper_stage(
-    df: DataFrame, plan: Plan, qt: Column, part_keys: list[str]
-) -> tuple[DataFrame, dict[str, Column]]:
-    """Add per-feature window helper columns; returns (df, extra_conds)."""
-    extras: dict[str, Column] = {}
-    order = _order_cols(plan)
-    w_fwd = (
-        W.partitionBy(*part_keys)
-        .orderBy(*order)
-        .rowsBetween(W.currentRow, W.unboundedFollowing)
-    )
-    w_back = (
-        W.partitionBy(*part_keys)
-        .orderBy(*order)
+def _prev_values(
+    df: DataFrame, plan: Plan, feats: list[Feature], vis, keys: list[str]
+) -> DataFrame:
+    """``__prev_<name>``: each NUMFLIPS feature's previous visible
+    value in (time, seq) order per key — the column its fold state
+    counts flips against. ``vis(f)`` is the feature's visibility."""
+    w = (
+        W.partitionBy(*keys)
+        .orderBy(*_order_cols(plan))
         .rowsBetween(W.unboundedPreceding, -1)
     )
-    new_cols: list[tuple[str, Column]] = []
-    for f in plan.features:
-        cond = _visibility(f, qt, plan.time_col)
-        if f.latest is not None:
-            rank_cond = cond
-            if f.skip_nulls:
-                # skip_nulls drops nulls BEFORE the latest-N buffer
-                rank_cond = cond & F.expr(f.expr).isNotNull()
-            col = f"__rank_{f.name}"
-            new_cols.append(
-                (col, F.sum(F.when(rank_cond, 1).otherwise(0)).over(w_fwd))
-            )
-            extras[f.name] = (F.col(col) <= f.latest) & (
-                rank_cond if f.skip_nulls else F.lit(True)
-            )
-        if f.agg is Agg.NUMFLIPS:
-            new_cols.append(
-                (
-                    f"__prev_{f.name}",
-                    F.last(F.when(cond, F.expr(f.expr)), ignorenulls=True).over(
-                        w_back
-                    ),
-                )
-            )
-    for name, col in new_cols:
-        df = df.withColumn(name, col)
-    return df, extras
+    for f in feats:
+        df = df.withColumn(
+            f"__prev_{f.name}",
+            F.last(F.when(vis(f), F.expr(f.expr)), ignorenulls=True).over(w),
+        )
+    return df
 
 
 _SALT_BUCKETS = 64
 
 
-def _tail_slice(arr: Column, n: int) -> Column:
-    """Last n elements of an array (safe when size < n)."""
-    return F.slice(arr, F.greatest(F.size(arr) - (n - 1), F.lit(1)), n)
-
-
-def _finalize_latest(f: Feature, arr: Column) -> Column:
-    """Fold the merged last-N struct array into the feature value."""
-    vs = F.transform(arr, lambda x: x["v"])
-    n = F.size(arr)
-    agg = f.agg
-    if agg is Agg.SUM:
-        out = F.coalesce(
-            F.aggregate(vs, F.lit(0.0), lambda a, v: a + v.cast("double")),
-            F.lit(0.0),
-        )
-    elif agg is Agg.COUNT:
-        out = F.size(F.filter(vs, lambda v: v.isNotNull())).cast("bigint")
-    elif agg is Agg.MEAN:
-        out = F.when(
-            n > 0,
-            F.aggregate(vs, F.lit(0.0), lambda a, v: a + v.cast("double")) / n,
-        )
-    elif agg is Agg.MIN:
-        out = F.array_min(vs)
-    elif agg is Agg.MAX:
-        out = F.array_max(vs)
-    elif agg is Agg.NEWEST:
-        out = F.when(n > 0, F.element_at(arr, -1)["v"])
-    elif agg is Agg.OLDEST:
-        out = F.when(n > 0, F.element_at(arr, 1)["v"])
-    elif agg is Agg.VARIANCE or agg is Agg.SD:
-        s = F.aggregate(vs, F.lit(0.0), lambda a, v: a + v.cast("double"))
-        s2 = F.aggregate(
-            vs, F.lit(0.0), lambda a, v: a + v.cast("double") * v.cast("double")
-        )
-        var = F.when(n > 1, (s2 - s * s / n) / (n - 1))
-        out = F.sqrt(var) if agg is Agg.SD else var
-    elif agg is Agg.ANY:
-        out = F.coalesce(
-            F.exists(vs, lambda v: v.cast("boolean")), F.lit(False)
-        )
-    elif agg is Agg.ALL:
-        out = F.coalesce(
-            F.forall(vs, lambda v: v.cast("boolean")), F.lit(True)
-        )
-    elif agg is Agg.COUNT_DISTINCT:
-        out = F.size(F.array_distinct(F.filter(vs, lambda v: v.isNotNull()))).cast(
-            "bigint"
-        )
-    elif agg is Agg.DISTINCT_VALUES:
-        out = F.array_sort(
-            F.array_distinct(F.transform(vs, lambda v: v.cast("string")))
-        )
-    elif agg is Agg.MAX_BY or agg is Agg.MIN_BY:
-        bs = F.transform(arr, lambda x: x["b"])
-        target = F.array_max(bs) if agg is Agg.MAX_BY else F.array_min(bs)
-        out = F.element_at(
-            F.filter(arr, lambda x: x["b"] == target), 1
-        )["v"]
-    # DECAYED_SUM + latest intentionally has no arm: _feature_native
-    # rejects the combination, so it routes to the executor fallback;
-    # the final else raises rather than leaving a half-wired branch.
-    elif agg is Agg.NUMFLIPS:
-        pair = F.aggregate(
-            vs,
-            F.struct(F.lit(None).cast("string").alias("prev"), F.lit(0).alias("k")),
-            lambda acc, v: F.struct(
-                v.cast("string").alias("prev"),
-                F.when(
-                    acc["prev"].isNotNull() & (v.cast("string") != acc["prev"]),
-                    acc["k"] + 1,
-                ).otherwise(acc["k"]).alias("k"),
-            ),
-        )
-        out = pair["k"].cast("bigint")
-    else:  # pragma: no cover
-        raise ValueError(f"latest does not support {agg}")
-    if not f.skip_nulls:
-        poison = F.exists(vs, lambda v: v.isNull())
-        out = F.when(poison, F.lit(None)).otherwise(out)
-    return out
-
-
-def _merge_final(f: Feature, c: Column) -> Column:
-    """Aggregate-merge partial fold states (resume._state_expr shape)
-    across salt buckets and finalize — the N-way version of
-    resume._merge_expr for time-independent folds."""
-    p = F.coalesce(F.bool_or(c["p"]), F.lit(False))
-    agg = f.agg
-    if agg in (Agg.SUM, Agg.DECAYED_SUM):
-        # decay states across salt buckets share the same query time,
-        # so the merge is a plain sum of the weighted partials
-        out = F.coalesce(F.sum(c["s"]), F.lit(0.0))
-    elif agg is Agg.COUNT:
-        out = F.coalesce(F.sum(c["c"]), F.lit(0)).cast("bigint")
-    elif agg is Agg.MEAN:
-        n = F.sum(c["c"])
-        out = F.when(n > 0, F.sum(c["s"]) / n)
-    elif agg is Agg.MIN:
-        out = F.min(c["m"])
-    elif agg is Agg.MAX:
-        out = F.max(c["m"])
-    elif agg in (Agg.NEWEST, Agg.OLDEST):
-        pick = F.max_by if agg is Agg.NEWEST else F.min_by
-        key = F.when(
-            c["tv"].isNotNull(), F.struct(c["tv"]["t"].alias("t"), c["tv"]["q"].alias("q"))
-        )
-        out = pick(c["tv"], key)["v"]
-    elif agg is Agg.ANY:
-        out = F.coalesce(F.bool_or(c["b"]), F.lit(False))
-    elif agg is Agg.ALL:
-        out = F.coalesce(F.bool_and(c["b"]), F.lit(True))
-    elif agg in (Agg.VARIANCE, Agg.SD):
-        n = F.sum(c["n"])
-        s = F.sum(c["s"])
-        s2 = F.sum(c["s2"])
-        var = F.when(n > 1, (s2 - s * s / n) / (n - 1))
-        out = F.sqrt(var) if agg is Agg.SD else var
-    else:  # pragma: no cover
-        raise ValueError(f"not mergeable: {agg}")
-    if not f.skip_nulls:
-        out = F.when(p, F.lit(None)).otherwise(out)
-    return out
+def _st(f: Feature) -> str:
+    return f"__st_{f.name}"
 
 
 def _two_stage(
     base: DataFrame,
     plan: Plan,
-    mergeable: list[Feature],
+    folds: list[Feature],
     latest_feats: list[Feature],
     qt: Column,
-    keys: list[str] | None = None,
+    keys: list[str],
 ) -> DataFrame:
-    """ONE scan for all mergeable + latest features: stage 1 partials
-    per (entity, salt-of-seq), stage 2 merge per entity. The exchange
+    """ONE scan for all table folds + latest features: stage 1 states
+    per (key, salt-of-seq), stage 2 merges them per key. The exchange
     carries only constant-size states — skew-immune and single-pass
     over the input (the multi-subtree alternative re-scans the table
     once per feature family, 3-6x the I/O at 100 TB)."""
-    from icicle_spark.plans.resume import _state_expr
-
-    ecol, tcol = plan.entity_col, plan.time_col
+    tcol = plan.time_col
     scol = plan.seq_col or tcol
     # salt MATERIALIZES as a column: the rank window partitions and
     # the stage-1 groupBy then share one attribute, so Catalyst
     # satisfies the aggregate's distribution with the window's
-    # exchange instead of re-shuffling all rows a second time
-    # (guide §2.4 — plan verified: Exchange(entity, salt) appears
-    # once, reused by Window and HashAggregate)
+    # exchange instead of re-shuffling all rows a second time (pinned
+    # by test_fold_plans' exchange tests)
     base = base.withColumn(
         "__salt", F.pmod(F.xxhash64(F.col(scol)), F.lit(_SALT_BUCKETS))
     )
     salt = F.col("__salt")
-    s1_aggs: list[Column] = []
-    s2_aggs: list[Column] = []
-    for f in mergeable:
-        s1_aggs.append(
-            _state_expr(f, plan, _visibility(f, qt, tcol), qt).alias(f"__st_{f.name}")
-        )
-        s2_aggs.append(_merge_final(f, F.col(f"__st_{f.name}")).alias(f.name))
+    # Rank stage: a salted exchange + Tungsten sort, then an O(n)
+    # running conditional count from the NEWEST row backwards =
+    # rank-from-end among each feature's own cond rows. Each stage-1
+    # frame then collects at most N structs per (key, salt) — object
+    # churn is bounded, unlike collecting the whole bucket (measured
+    # 85% of the fused pass) or an unbounded-following window frame
+    # (did not finish on the hot entity).
+    w_desc = (
+        W.partitionBy(*[F.col(k) for k in keys], salt)
+        .orderBy(F.desc(tcol), F.desc(scol))
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    )
+    conds = {f.name: _visibility(f, qt, tcol) for f in folds}
     for f in latest_feats:
         cond = _visibility(f, qt, tcol)
         if f.skip_nulls:
             cond = cond & F.expr(f.expr).isNotNull()
-        fields = [
-            F.col(tcol).alias("t"),
-            F.col(scol).cast("double").alias("s"),
-            F.expr(f.expr).alias("v"),
-        ]
-        if f.by is not None:
-            fields.append(F.expr(f.by).alias("b"))
-        keep = cond & (F.col(f"__rk_{f.name}") <= f.latest)
-        s1_aggs.append(
-            F.array_sort(
-                F.collect_list(F.when(keep, F.struct(*fields)))
-            ).alias(f"__p_{f.name}")
-        )
-        merged = _tail_slice(
-            F.array_sort(F.flatten(F.collect_list(F.col(f"__p_{f.name}")))),
-            f.latest,
-        )
-        s2_aggs.append(_finalize_latest(f, merged).alias(f.name))
-    keys = keys or [ecol]
-    if latest_feats:
-        # Rank stage: a salted exchange + Tungsten sort, then an O(n)
-        # running conditional count from the NEWEST row backwards =
-        # rank-from-end among each feature's own cond rows. The
-        # collect_list in stage 1 then holds at most N structs per
-        # (entity, salt) — object churn is bounded, unlike collecting
-        # the whole bucket (measured 85% of the fused pass) or an
-        # unbounded-following window frame (did not finish on the hot
-        # entity).
-        w_desc = (
-            W.partitionBy(*[F.col(k) for k in keys], salt)
-            .orderBy(F.desc(tcol), F.desc(scol))
-            .rowsBetween(W.unboundedPreceding, W.currentRow)
-        )
-        ranked = base
-        for f in latest_feats:
-            cond = _visibility(f, qt, tcol)
-            if f.skip_nulls:
-                cond = cond & F.expr(f.expr).isNotNull()
-            ranked = ranked.withColumn(
-                f"__rk_{f.name}",
-                F.sum(F.when(cond, 1).otherwise(0)).over(w_desc),
-            )
-        base = ranked
-    s1 = base.groupBy(*[F.col(k) for k in keys], salt).agg(*s1_aggs)
-    return s1.groupBy(*keys).agg(F.count(F.lit(1)).alias("__nl"), *s2_aggs)
+        rk = f"__rk_{f.name}"
+        base = base.withColumn(rk, F.sum(F.when(cond, 1).otherwise(0)).over(w_desc))
+        conds[f.name] = cond & (F.col(rk) <= f.latest)
+    feats = folds + latest_feats
+    s1 = base.groupBy(*[F.col(k) for k in keys], salt).agg(
+        *[monoid.state(f, plan, conds[f.name], qt).alias(_st(f)) for f in feats]
+    )
+    return s1.groupBy(*keys).agg(
+        *[monoid.merge(f, F.col(_st(f))).alias(_st(f)) for f in feats]
+    )
+
+
+def _group_fold(
+    f: Feature, plan: Plan, cond: Column, qt: Column, gv: Column
+) -> Column:
+    """One key's fold value inside a group map: the table's fold over
+    the key's rows, values read as double (count/mean/any/all keep
+    their own input)."""
+    if f.agg not in (Agg.COUNT, Agg.MEAN, Agg.ANY, Agg.ALL):
+        gv = gv.cast("double")
+    return monoid.finalize(
+        f, monoid.state(f, plan, cond, qt, gv, merge_key=False)
+    )
 
 
 def _compile_scoped(
@@ -636,11 +371,15 @@ def _compile_scoped(
     keys: list[str],
 ) -> DataFrame:
     """Shared snapshot/chord compilation after visibility is set up:
-    split features into mergeable-plain + latest (single-scan salted
-    two-stage), direct aggregates, and numflips (window helpers)."""
-    from icicle_spark.plans.resume import _STATEFUL
+    table folds become per-key states (one aggregate, or the salted
+    two stages when a latest-N frame rides along), finalized after
+    the spine join; the rest are direct aggregates, numflips (window
+    helpers), groups and distincts."""
+    tcol = plan.time_col
 
-    ecol, tcol = plan.entity_col, plan.time_col
+    def vis(f: Feature) -> Column:
+        return _visibility(f, qt, tcol)
+
     group_feats = [f for f in plan.features if f.group is not None]
     dist_feats = [
         f for f in plan.features if f.distinct is not None and f.group is None
@@ -653,57 +392,44 @@ def _compile_scoped(
         f for f in scalar_feats
         if f.agg is Agg.NUMFLIPS and f.latest is None
     ]
-    plain_feats = [
+    folds = [
         f for f in scalar_feats
-        if f.latest is None and f.agg is not Agg.NUMFLIPS
+        if f.latest is None and f.agg is not Agg.NUMFLIPS and monoid.has_state(f)
     ]
-    mergeable = [
-        f for f in plain_feats
-        if f.agg in _STATEFUL and f.agg is not Agg.NUMFLIPS
+    direct_feats = [
+        f for f in scalar_feats if f.latest is None and not monoid.has_state(f)
     ]
-    direct_feats = [f for f in plain_feats if f not in mergeable]
     out = spine
+    single = [] if latest_feats else folds
     if latest_feats:
-        lat = _two_stage(base, plan, mergeable, latest_feats, qt, keys)
+        lat = _two_stage(base, plan, folds, latest_feats, qt, keys)
         out = out.join(lat, on=keys, how="left")
-        # init-fill ONLY rows absent from the sub-result (no visible
-        # facts at all) — a poisoned null stays null.
-        for f in latest_feats + mergeable:
-            if f.agg in _INIT:
+    if single or direct_feats:
+        agged = base.groupBy(*keys).agg(
+            F.count(F.lit(1)).alias("__n"),
+            *[
+                monoid.state(f, plan, vis(f), qt, merge_key=False).alias(_st(f))
+                for f in single
+            ],
+            *[_agg_col(f, vis(f), tcol) for f in direct_feats],
+        )
+        out = out.join(agged, on=keys, how="left")
+        for f in direct_feats:
+            if f.agg in _DIRECT_EMPTY:
+                # no visible facts at all: the fold's empty value (a
+                # poisoned null, from a present row, stays null)
                 out = out.withColumn(
                     f.name,
-                    F.when(
-                        F.col("__nl").isNull(), F.lit(_INIT[f.agg])
-                    ).otherwise(F.col(f.name)),
+                    F.when(F.col("__n").isNull(), _DIRECT_EMPTY[f.agg]())
+                    .otherwise(F.col(f.name)),
                 )
-        out = out.drop("__nl")
-    else:
-        direct_feats = plain_feats
-    if direct_feats:
-        aggs = [
-            _agg_col(f, _visibility(f, qt, tcol), tcol, None, qt)
-            for f in direct_feats
-        ]
-        agged = base.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n"), *aggs)
-        out = out.join(agged, on=keys, how="left")
-        out = _fill_inits(
-            out,
-            Plan(direct_feats, entity_col=ecol, time_col=tcol,
-                 seq_col=plan.seq_col),
-            "__n",
-        )
+        out = out.drop("__n")
     if flip_feats:
-        fl_plan = Plan(
-            flip_feats, entity_col=ecol, time_col=tcol, seq_col=plan.seq_col
+        fbase = _prev_values(base, plan, flip_feats, vis, keys)
+        agged = fbase.groupBy(*keys).agg(
+            *[monoid.state(f, plan, vis(f), qt).alias(_st(f)) for f in flip_feats]
         )
-        fbase, _ = _helper_stage(base, fl_plan, qt, keys)
-        aggs = [
-            _agg_col(f, _visibility(f, qt, tcol), tcol, None, qt)
-            for f in flip_feats
-        ]
-        agged = fbase.groupBy(*keys).agg(F.count(F.lit(1)).alias("__nf"), *aggs)
         out = out.join(agged, on=keys, how="left")
-        out = _fill_inits(out, fl_plan, "__nf")
     # FUSE group features that share (group key, window, where,
     # filter_let) under plain skip_nulls semantics: one per-(entity,
     # key) aggregate and one map assembly evaluate ALL of them, where
@@ -739,20 +465,14 @@ def _compile_scoped(
             gk.alias("__gk"),
             F.expr(f0.group).alias("__gkr"),
             *[F.expr(f.expr).alias(f"__gv{i}") for i, f in enumerate(batch)],
-            F.struct(*_order_cols(plan)).alias("__gord"),
+            *_order_cols(plan),
         )
         per_aggs: list[Column] = []
         for i, f in enumerate(batch):
             gv = F.col(f"__gv{i}")
-            if f.agg in (Agg.NEWEST, Agg.OLDEST):
-                pick = F.max_by if f.agg is Agg.NEWEST else F.min_by
-                agg_c = pick(
-                    gv.cast("double"),
-                    F.when(gv.isNotNull(), F.col("__gord")),
-                )
-            else:
-                agg_c = _plain_agg(f.agg, gv)
-            per_aggs.append(agg_c.alias(f"__v{i}"))
+            per_aggs.append(
+                _group_fold(f, plan, F.lit(True), qt, gv).alias(f"__v{i}")
+            )
             per_aggs.append(F.count(gv).alias(f"__n{i}"))
         per_key = rows.groupBy(*keys, "__gk").agg(
             F.min("__gkr").alias("__gkr"), *per_aggs
@@ -821,7 +541,7 @@ def _compile_scoped(
                     & ex.isNotNull()
                 ).alias("__pgok"),
                 F.lit(0).alias("__gp"),
-                F.struct(*_order_cols(plan)).alias("__gord"),
+                *_order_cols(plan),
             )
         elif f.skip_nulls:
             # skip_nulls: null elements / null keys silently drop
@@ -832,7 +552,7 @@ def _compile_scoped(
                 ex.alias("__gv"),
                 F.lit(True).alias("__pgok"),
                 F.lit(0).alias("__gp"),
-                F.struct(*_order_cols(plan)).alias("__gord"),
+                *_order_cols(plan),
             )
         else:
             # Possibly semantics: ANY visible null element or null
@@ -845,7 +565,7 @@ def _compile_scoped(
                 F.when(ok, ex).alias("__gv"),
                 F.lit(True).alias("__pgok"),
                 F.when(ok, 0).otherwise(1).alias("__gp"),
-                F.struct(*_order_cols(plan)).alias("__gord"),
+                *_order_cols(plan),
             )
         if f.group_latest is not None:
             # `group k ~> latest N`: frame the last N facts PER KEY
@@ -854,41 +574,20 @@ def _compile_scoped(
             # aggregate groups on, so Catalyst reuses one exchange.
             wgl = W.partitionBy(
                 *[F.col(k) for k in keys], F.col("__gk")
-            ).orderBy(F.col("__gord").desc())
+            ).orderBy(*[c.desc() for c in _order_cols(plan)])
             rows = (
                 rows.withColumn("__rn", F.row_number().over(wgl))
                 .where(F.col("__rn") <= F.lit(f.group_latest))
                 .drop("__rn")
             )
-        gv = (
-            F.when(F.col("__pgok"), F.col("__gv"))
-            if pgf is not None
-            else F.col("__gv")
-        )
-        if f.agg in (Agg.NEWEST, Agg.OLDEST):
-            # value at the stream-order extreme per key (fold1 pair
-            # semantics, prelude.icicle newest/oldest): arg-extreme
-            # on the (time, seq) order struct; guarded-out rows get a
-            # null order and are ignored by max_by/min_by
-            pick = F.max_by if f.agg is Agg.NEWEST else F.min_by
-            per_key_agg = pick(
-                F.col("__gv").cast("double"),
-                F.when(F.col("__pgok"), F.col("__gord"))
-                if pgf is not None
-                else F.col("__gord"),
-            )
-        else:
-            per_key_agg = _plain_agg(f.agg, gv)
+        # a guarded-out row (post-group filter) still establishes its
+        # key; a fully-guarded key's slot holds the fold's empty value
+        # (executor _EMPTY parity: the t02 'counts of zero')
         per_key = rows.groupBy(*keys, "__gk").agg(
-            per_key_agg.alias("__v"), F.max("__gp").alias("__gp"),
+            _group_fold(f, plan, F.col("__pgok"), qt, F.col("__gv")).alias("__v"),
+            F.max("__gp").alias("__gp"),
             F.min("__gkr").alias("__gkr"),
         )
-        if pgf is not None and f.agg in _GROUP_EMPTY:
-            # a fully-guarded key's slot holds the fold's init
-            # (executor _EMPTY parity: the t02 'counts of zero')
-            per_key = per_key.withColumn(
-                "__v", F.coalesce(F.col("__v"), _GROUP_EMPTY[f.agg]())
-            )
         # Data.Map iteration order (plans/maporder.py): sort entries
         # by the TYPED key before assembling the map — `group fold
         # (k, v)` postcomps and rendered maps then iterate exactly as
@@ -947,25 +646,30 @@ def _compile_scoped(
             .where(F.col("__rn") == 1)
         )
         marker = f"__nd_{f.name}"
+        if monoid.has_state(f):
+            val = monoid.state(f, plan, F.lit(True), qt, merge_key=False)
+        else:
+            val = _agg_col(f, F.lit(True), tcol)
         agged = firsts.groupBy(*keys).agg(
-            F.count(F.lit(1)).alias(marker),
-            _agg_col(f, F.lit(True), tcol, None, qt),
-        )
-        # bounded distinct state (maxMapSize, t03 ':set max-map-size'):
-        # more distinct keys than the bound -> error value (null);
-        # marker stays non-null so _fill_inits won't resurrect an init
-        agged = agged.withColumn(
-            f.name,
-            F.when(
-                F.col(marker) <= F.lit(plan.max_group_size), F.col(f.name)
-            ),
+            F.count(F.lit(1)).alias(marker), val.alias("__dv")
         )
         out = out.join(agged, on=keys, how="left")
-        out = _fill_inits(
-            out,
-            Plan([f], entity_col=ecol, time_col=tcol, seq_col=plan.seq_col),
-            marker,
-        )
+        if monoid.has_state(f):
+            val = monoid.finalize(f, F.col("__dv"))
+        else:
+            val = F.when(
+                F.col(marker).isNull(), _DIRECT_EMPTY[f.agg]()
+            ).otherwise(F.col("__dv"))
+        # bounded distinct state (maxMapSize, t03 ':set max-map-size'):
+        # more distinct keys than the bound -> error value (null)
+        out = out.withColumn(
+            f.name,
+            F.when(
+                F.coalesce(F.col(marker), F.lit(0))
+                <= F.lit(plan.max_group_size),
+                val,
+            ),
+        ).drop(marker, "__dv")
         if not f.skip_nulls:
             # a null distinct KEY anywhere visible poisons the whole
             # fold (Possibly key, t03.1 — executor parity)
@@ -977,7 +681,15 @@ def _compile_scoped(
                 f.name,
                 F.when(F.col(kp).isNull(), F.col(f.name)),
             ).drop(kp)
-    return out.select(*keys, *[f.name for f in plan.features])
+    folded = {f.name for f in scalar_feats if f not in direct_feats}
+    return out.select(
+        *keys,
+        *[
+            monoid.finalize(f, F.col(_st(f))).alias(f.name)
+            if f.name in folded else F.col(f.name)
+            for f in plan.features
+        ],
+    )
 
 
 def compile_native(

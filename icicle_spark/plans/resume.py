@@ -16,15 +16,15 @@ Spark-native equivalent:
 ``run_plan(facts[:T1], plan, snapshot=T1)`` while reading ONLY the
 incremental slice — the property tests assert this equivalence.
 
-States are merge-able partial accumulators (struct columns), one per
-feature:
+Each feature's checkpoint column ``__f_<name>`` is its partial state
+from the Catalyst fold table (``plans.monoid``: state, merge and
+finalize per fold, the same ones native's aggregates use), next to
+``__ck_time``. Resuming unions the checkpoint rows with the
+increment's states as one more partial, then merges and finalizes
+them. A checkpoint whose state layout does not match the table's
+(say, written by an older version, or for another plan) is refused
+by a schema check; re-run ``fold_states`` to rebuild it.
 
-    SUM (s, p)  COUNT (c, p)  MEAN (s, c, p)  MIN/MAX (m, p)
-    NEWEST/OLDEST (t, q, v, p)  ANY/ALL (b, p)  VAR/SD (n, s, s2, p)
-    NUMFLIPS (ft, fv, lt, lv, k, p)      # disjoint-time merge
-    latest-N (arr of (t, q, v), p)       # top-N monoid
-
-(p = poisoned: a null element was seen — Possibly error propagation.)
 Windowed features carry no state: a days-before window at query time
 T1 only needs facts >= T1 - N days, which live inside the incremental
 slice whenever the checkpoint cadence is shorter than the window
@@ -37,39 +37,23 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from icicle_spark.plans.ir import Agg, Feature, Plan
-from icicle_spark.plans.native import _INIT, _visibility, prepare_facts
-
-_STATEFUL = {
-    Agg.SUM, Agg.COUNT, Agg.MEAN, Agg.MIN, Agg.MAX, Agg.NEWEST, Agg.OLDEST,
-    Agg.ANY, Agg.ALL, Agg.VARIANCE, Agg.SD, Agg.NUMFLIPS, Agg.DECAYED_SUM,
-}
-
-
-def _lam(f: Feature) -> float:
-    import math
-
-    return math.log(2.0) / (float(f.half_life_days) * 86_400.0)
+from icicle_spark.plans import monoid
+from icicle_spark.plans.ir import Agg, Feature, Plan, apply_postcomps
+from icicle_spark.plans.native import (
+    _feature_native,
+    _prev_values,
+    _visibility,
+    prepare_facts,
+)
 
 
 def resumable(plan: Plan) -> bool:
+    """Every feature has a table state (and compiles natively)."""
     return all(
-        isinstance(f.agg, Agg)
-        and (f.agg in _STATEFUL or f.latest is not None)
-        and f.group is None
+        f.group is None
         and f.distinct is None
-        and isinstance(f.expr, str)
-        and (f.where is None or isinstance(f.where, str))
-        and (
-            f.filter_let is None
-            or all(isinstance(e, str) for _, e in f.filter_let)
-        )
-        and f.latest_outer is None
-        and not f.scans
-        and not (
-            f.agg is Agg.DECAYED_SUM
-            and (f.half_life_days is None or f.latest is not None)
-        )
+        and _feature_native(f)
+        and monoid.has_state(f)
         for f in plan.features
     )
 
@@ -84,286 +68,56 @@ def required_history(plan: Plan) -> int | None:
     return max(days) if days else None
 
 
-def _scol(plan: Plan) -> Column:
-    return F.col(plan.seq_col) if plan.seq_col else F.lit(0).cast("bigint")
-
-
-def _state_expr(f: Feature, plan: Plan, cond: Column, qt: Column) -> Column:
-    """Merge-able accumulator for one feature over cond rows."""
-    x = F.when(cond, F.expr(f.expr))
-    p = F.coalesce(F.max(F.when(cond & F.expr(f.expr).isNull(), True)), F.lit(False))
-    if f.skip_nulls:
-        p = F.lit(False)
-        x = F.when(cond & F.expr(f.expr).isNotNull(), F.expr(f.expr))
-    tcol, q = F.col(plan.time_col), _scol(plan)
-    if f.latest is not None:
-        key = F.when(
-            cond & (F.expr(f.expr).isNotNull() if f.skip_nulls else F.lit(True)),
-            F.struct(
-                tcol.alias("t"), q.cast("double").alias("q"),
-                F.expr(f.expr).cast("double").alias("v"),
-            ),
-        )
-        arr = F.slice(
-            a := F.array_sort(F.collect_list(key)),
-            F.greatest(F.size(a) - (f.latest - 1), F.lit(1)),
-            f.latest,
-        )
-        return F.struct(arr.alias("arr"), p.alias("p"))
-    agg = f.agg
-    if agg is Agg.DECAYED_SUM:
-        # state = decayed sum AS AT the checkpoint time; merge rescales
-        # it to the resume snapshot with e^(-lam * delta_t)
-        age = (
-            F.unix_micros(qt.cast("timestamp"))
-            - F.unix_micros(tcol.cast("timestamp"))
-        ).cast("double") / F.lit(1e6)
-        xw = F.when(
-            cond & F.expr(f.expr).isNotNull(),
-            F.expr(f.expr).cast("double") * F.exp(-F.lit(_lam(f)) * age),
-        )
-        return F.struct(F.sum(xw).alias("s"), p.alias("p"))
-    if agg is Agg.SUM:
-        return F.struct(F.sum(x).alias("s"), p.alias("p"))
-    if agg is Agg.COUNT:
-        c = F.sum(F.when(cond, 1).otherwise(0)) if not f.skip_nulls else F.count(x)
-        return F.struct(c.cast("bigint").alias("c"), p.alias("p"))
-    if agg is Agg.MEAN:
-        return F.struct(
-            F.sum(x).alias("s"), F.count(x).cast("bigint").alias("c"), p.alias("p")
-        )
-    if agg is Agg.MIN:
-        return F.struct(F.min(x).alias("m"), p.alias("p"))
-    if agg is Agg.MAX:
-        return F.struct(F.max(x).alias("m"), p.alias("p"))
-    if agg in (Agg.NEWEST, Agg.OLDEST):
-        pick = F.max_by if agg is Agg.NEWEST else F.min_by
-        key = F.when(cond & x.isNotNull(), F.struct(tcol.alias("t"), q.alias("q")))
-        return F.struct(
-            pick(F.struct(tcol.alias("t"), q.alias("q"), x.alias("v")), key).alias(
-                "tv"
-            ),
-            p.alias("p"),
-        )
-    if agg is Agg.ANY:
-        return F.struct(
-            F.coalesce(F.bool_or(x.cast("boolean")), F.lit(False)).alias("b"),
-            p.alias("p"),
-        )
-    if agg is Agg.ALL:
-        return F.struct(
-            F.coalesce(F.bool_and(x.cast("boolean")), F.lit(True)).alias("b"),
-            p.alias("p"),
-        )
-    if agg in (Agg.VARIANCE, Agg.SD):
-        xd = x.cast("double")
-        return F.struct(
-            F.count(x).cast("bigint").alias("n"),
-            F.sum(xd).alias("s"),
-            F.sum(xd * xd).alias("s2"),
-            p.alias("p"),
-        )
-    if agg is Agg.NUMFLIPS:
-        xs = x.cast("string")
-        key_first = F.when(cond & x.isNotNull(), F.struct(tcol.alias("t"), q.alias("q")))
-        # flips inside the slice need ordered comparison: use the
-        # window helper columns added by fold_states (__prev_<name>)
-        prev = F.col(f"__prev_{f.name}")
-        flip = F.when(cond & prev.isNotNull() & (F.expr(f.expr) != prev), 1).otherwise(0)
-        return F.struct(
-            F.min_by(xs, key_first).alias("fv"),
-            F.max_by(xs, key_first).alias("lv"),
-            F.coalesce(F.sum(flip), F.lit(0)).cast("bigint").alias("k"),
-            p.alias("p"),
-        )
-    raise ValueError(f"not resumable: {agg}")
-
-
-def _merge_expr(
-    f: Feature, o: Column, n: Column, decay_scale: Column | None = None
-) -> Column:
-    """Merge old-state ``o`` with new-state ``n`` (time-disjoint,
-    old strictly earlier)."""
-    p = F.coalesce(o["p"], F.lit(False)) | F.coalesce(n["p"], F.lit(False))
-    if f.latest is not None:
-        both = F.concat(
-            F.coalesce(o["arr"], F.array()), F.coalesce(n["arr"], F.array())
-        )
-        arr = F.slice(
-            s := F.array_sort(both),
-            F.greatest(F.size(s) - (f.latest - 1), F.lit(1)),
-            f.latest,
-        )
-        return F.struct(arr.alias("arr"), p.alias("p"))
-    agg = f.agg
-    if agg is Agg.DECAYED_SUM:
-        s = F.when(
-            o["s"].isNull() & n["s"].isNull(), F.lit(None)
-        ).otherwise(
-            F.coalesce(o["s"] * decay_scale, F.lit(0.0))
-            + F.coalesce(n["s"], F.lit(0.0))
-        )
-        return F.struct(s.alias("s"), p.alias("p"))
-    if agg is Agg.SUM:
-        s = F.when(
-            o["s"].isNull() & n["s"].isNull(), F.lit(None)
-        ).otherwise(F.coalesce(o["s"], F.lit(0.0)) + F.coalesce(n["s"], F.lit(0.0)))
-        return F.struct(s.alias("s"), p.alias("p"))
-    if agg is Agg.COUNT:
-        return F.struct(
-            (F.coalesce(o["c"], F.lit(0)) + F.coalesce(n["c"], F.lit(0))).alias("c"),
-            p.alias("p"),
-        )
-    if agg is Agg.MEAN:
-        return F.struct(
-            (F.coalesce(o["s"], F.lit(0.0)) + F.coalesce(n["s"], F.lit(0.0))).alias("s"),
-            (F.coalesce(o["c"], F.lit(0)) + F.coalesce(n["c"], F.lit(0))).alias("c"),
-            p.alias("p"),
-        )
-    if agg is Agg.MIN:
-        return F.struct(F.least(o["m"], n["m"]).alias("m"), p.alias("p"))
-    if agg is Agg.MAX:
-        return F.struct(F.greatest(o["m"], n["m"]).alias("m"), p.alias("p"))
-    if agg is Agg.NEWEST:
-        tv = F.coalesce(n["tv"], o["tv"])  # new slice is strictly later
-        return F.struct(tv.alias("tv"), p.alias("p"))
-    if agg is Agg.OLDEST:
-        tv = F.coalesce(o["tv"], n["tv"])
-        return F.struct(tv.alias("tv"), p.alias("p"))
-    if agg is Agg.ANY:
-        return F.struct(
-            (F.coalesce(o["b"], F.lit(False)) | F.coalesce(n["b"], F.lit(False))).alias("b"),
-            p.alias("p"),
-        )
-    if agg is Agg.ALL:
-        return F.struct(
-            (F.coalesce(o["b"], F.lit(True)) & F.coalesce(n["b"], F.lit(True))).alias("b"),
-            p.alias("p"),
-        )
-    if agg in (Agg.VARIANCE, Agg.SD):
-        return F.struct(
-            (F.coalesce(o["n"], F.lit(0)) + F.coalesce(n["n"], F.lit(0))).alias("n"),
-            (F.coalesce(o["s"], F.lit(0.0)) + F.coalesce(n["s"], F.lit(0.0))).alias("s"),
-            (F.coalesce(o["s2"], F.lit(0.0)) + F.coalesce(n["s2"], F.lit(0.0))).alias("s2"),
-            p.alias("p"),
-        )
-    if agg is Agg.NUMFLIPS:
-        boundary = F.when(
-            o["lv"].isNotNull() & n["fv"].isNotNull() & (o["lv"] != n["fv"]), 1
-        ).otherwise(0)
-        return F.struct(
-            F.coalesce(o["fv"], n["fv"]).alias("fv"),
-            F.coalesce(n["lv"], o["lv"]).alias("lv"),
-            (
-                F.coalesce(o["k"], F.lit(0))
-                + F.coalesce(n["k"], F.lit(0))
-                + boundary
-            ).alias("k"),
-            p.alias("p"),
-        )
-    raise ValueError(f"not resumable: {agg}")
-
-
-def _finalize_expr(f: Feature, st: Column) -> Column:
-    base: Column
-    if f.latest is not None:
-        vs = F.transform(st["arr"], lambda x: x["v"])
-        nn = F.size(st["arr"])
-        agg = f.agg
-        if agg is Agg.SUM:
-            base = F.coalesce(
-                F.aggregate(vs, F.lit(0.0), lambda a, v: a + v), F.lit(0.0)
-            )
-        elif agg is Agg.COUNT:
-            base = nn.cast("bigint")
-        elif agg is Agg.MEAN:
-            base = F.when(
-                nn > 0, F.aggregate(vs, F.lit(0.0), lambda a, v: a + v) / nn
-            )
-        elif agg is Agg.MIN:
-            base = F.array_min(vs)
-        elif agg is Agg.MAX:
-            base = F.array_max(vs)
-        elif agg is Agg.NEWEST:
-            base = F.when(nn > 0, F.element_at(st["arr"], -1)["v"])
-        elif agg is Agg.OLDEST:
-            base = F.when(nn > 0, F.element_at(st["arr"], 1)["v"])
-        else:
-            raise ValueError(f"latest resume does not support {agg}")
-    else:
-        agg = f.agg
-        if agg in (Agg.SUM, Agg.DECAYED_SUM):
-            base = F.coalesce(st["s"], F.lit(0.0))
-        elif agg is Agg.COUNT:
-            base = F.coalesce(st["c"], F.lit(0)).cast("bigint")
-        elif agg is Agg.MEAN:
-            base = F.when(st["c"] > 0, st["s"] / st["c"])
-        elif agg in (Agg.MIN, Agg.MAX):
-            base = st["m"]
-        elif agg in (Agg.NEWEST, Agg.OLDEST):
-            base = st["tv"]["v"]
-        elif agg is Agg.ANY:
-            base = F.coalesce(st["b"], F.lit(False))
-        elif agg is Agg.ALL:
-            base = F.coalesce(st["b"], F.lit(True))
-        elif agg in (Agg.VARIANCE, Agg.SD):
-            var = F.when(
-                st["n"] > 1, (st["s2"] - st["s"] * st["s"] / st["n"]) / (st["n"] - 1)
-            )
-            base = F.sqrt(var) if agg is Agg.SD else var
-        elif agg is Agg.NUMFLIPS:
-            base = F.coalesce(st["k"], F.lit(0)).cast("bigint")
-        else:
-            raise ValueError(f"not resumable: {agg}")
-    if not f.skip_nulls:
-        base = F.when(F.coalesce(st["p"], F.lit(False)), F.lit(None)).otherwise(base)
-    return base.alias(f.name)
-
-
-def _needs_prev(plan: Plan) -> list[Feature]:
-    return [f for f in plan.features if f.agg is Agg.NUMFLIPS]
+def _flips(feats: list[Feature]) -> list[Feature]:
+    return [f for f in feats if f.agg is Agg.NUMFLIPS and f.latest is None]
 
 
 def fold_states(facts: DataFrame, plan: Plan, as_of: Any) -> DataFrame:
-    """Mergeable per-entity fold states over facts strictly before
-    ``as_of`` — the checkpoint table (entity, __f_<name> structs)."""
+    """Per-entity fold states over facts strictly before ``as_of`` —
+    the checkpoint table (entity, __f_<name> structs, __ck_time)."""
     if not resumable(plan):
         raise ValueError("plan not resumable")
     plan = plan.condensed()
+    ecol, tcol = plan.entity_col, plan.time_col
     qt = F.lit(as_of).cast("timestamp")
+
+    def vis(f: Feature) -> Column:
+        return _visibility(f, qt, tcol)
+
     # same element semantics as compile_native: tombstones null every
     # non-key column (so they poison / drop), filter_let binds
     # materialize (so the Some pattern fails on null binds)
-    base = prepare_facts(facts, plan).where(F.col(plan.time_col) < qt)
-    flips = _needs_prev(plan)
-    if flips:
-        from icicle_spark.plans.native import _helper_stage
+    base = prepare_facts(facts, plan).where(F.col(tcol) < qt)
+    # windowed features carry no state: resume recomputes them from
+    # the increment (see required_history)
+    stateful = [f for f in plan.features if f.window is None]
+    if not stateful:  # all-windowed plan: checkpoint is just the entity set
+        return base.select(ecol).distinct().withColumn("__ck_time", qt)
+    base = _prev_values(base, plan, _flips(stateful), vis, [ecol])
+    return base.groupBy(ecol).agg(
+        *[monoid.state(f, plan, vis(f), qt).alias(f"__f_{f.name}") for f in stateful]
+    ).withColumn("__ck_time", qt)
 
-        base, _ = _helper_stage(
-            base,
-            Plan(flips, entity_col=plan.entity_col, time_col=plan.time_col,
-                 seq_col=plan.seq_col),
-            qt,
-            [plan.entity_col],
-        )
-    # NOTE: windowed features intentionally checkpoint the UNWINDOWED
-    # where-filtered state only when stateful; at resume time windowed
-    # features are recomputed from the incremental slice (see
-    # required_history). Their state here is ignored.
-    aggs = [
-        _state_expr(f, plan, _visibility(f, qt, plan.time_col), qt).alias(
-            f"__f_{f.name}"
-        )
-        for f in plan.features
-        if f.window is None
-    ]
-    if not aggs:  # all-windowed plan: checkpoint is just the entity set
-        return (
-            base.select(plan.entity_col).distinct().withColumn("__ck_time", qt)
-        )
-    return base.groupBy(plan.entity_col).agg(*aggs).withColumn(
-        "__ck_time", qt
-    )
+
+def _check_layout(states: DataFrame, inc: DataFrame, feats: list[Feature]) -> None:
+    """Each checkpoint state must have the table's layout (schema only,
+    no Spark job)."""
+    have = {fl.name: fl.dataType for fl in states.schema.fields}
+    for f in feats:
+        col = f"__f_{f.name}"
+        want = inc.schema[col].dataType.simpleString()
+        got = have.get(col)
+        if got is None:
+            raise ValueError(
+                f"checkpoint has no state for feature {f.name!r}; "
+                "re-run fold_states to rebuild it"
+            )
+        if got.simpleString() != want:
+            raise ValueError(
+                f"checkpoint state for feature {f.name!r} is "
+                f"{got.simpleString()}, the fold table's is {want}; "
+                "re-run fold_states to rebuild it"
+            )
 
 
 def resume_plan(
@@ -385,98 +139,51 @@ def resume_plan(
     plan, _dups = plan.stripped().cse()
     ecol, tcol = plan.entity_col, plan.time_col
     qt = F.lit(snapshot).cast("timestamp")
-    ck = states.select(F.max("__ck_time")).first()[0]
-    inc = prepare_facts(new_facts, plan).where(
-        (F.col(tcol) >= F.lit(ck)) & (F.col(tcol) < qt)
-    )
-
-    flips = _needs_prev(plan)
-    base = inc
-    if flips:
-        from icicle_spark.plans.native import _helper_stage
-
-        base, _ = _helper_stage(
-            base,
-            Plan(flips, entity_col=ecol, time_col=tcol, seq_col=plan.seq_col),
-            qt,
-            [ecol],
-        )
-    stateless = [f for f in plan.features if f.window is not None]
     stateful = [f for f in plan.features if f.window is None]
-    new_states = base.groupBy(ecol).agg(
-        *[
-            _state_expr(f, plan, _visibility(f, qt, tcol), qt).alias(f"__n_{f.name}")
-            for f in stateful
-        ]
+    cols = {f.name: f"__f_{f.name}" for f in plan.features}
+    ck = states.select(F.max("__ck_time")).first()[0]
+    ckt = F.lit(ck).cast("timestamp")
+
+    def vis(f: Feature) -> Column:
+        # resumed folds read only facts from the checkpoint on; windowed
+        # ones read their whole window (required_history)
+        cond = _visibility(f, qt, tcol)
+        return cond & (F.col(tcol) >= ckt) if f.window is None else cond
+
+    # a row filter the scan can push down: the increment, plus the
+    # windows' lookback before the checkpoint
+    hist = required_history(plan)
+    lo = ckt if hist is None else ckt - F.expr(f"INTERVAL {hist} DAYS")
+    inc = prepare_facts(new_facts, plan).where(
+        (F.col(tcol) >= lo) & (F.col(tcol) < qt)
     )
-    joined = states.drop("__ck_time").join(new_states, on=ecol, how="full")
-    import pandas as _pd
-
-    delta_s = (_pd.Timestamp(snapshot) - _pd.Timestamp(ck)).total_seconds()
-    finals = [
-        _finalize_expr(
-            f,
-            _merge_expr(
-                f,
-                F.col(f"__f_{f.name}"),
-                F.col(f"__n_{f.name}"),
-                decay_scale=(
-                    F.lit(float(__import__("math").exp(-_lam(f) * delta_s)))
-                    if f.agg is Agg.DECAYED_SUM
-                    else None
-                ),
-            ),
+    inc = _prev_values(inc, plan, _flips(plan.features), vis, [ecol])
+    inc_states = inc.groupBy(ecol).agg(*[
+        monoid.state(f, plan, vis(f), qt).alias(cols[f.name])
+        for f in plan.features
+    ])
+    _check_layout(states, inc_states, stateful)
+    ck_states = states.select(
+        ecol,
+        *[
+            monoid.rebase(f, F.col(cols[f.name]), F.col("__ck_time"), qt)
+            .alias(cols[f.name])
+            for f in stateful
+        ],
+    )
+    out = (
+        ck_states.unionByName(inc_states, allowMissingColumns=True)
+        .groupBy(ecol)
+        .agg(*[monoid.merge(f, F.col(cols[f.name])).alias(cols[f.name])
+               for f in plan.features])
+        .select(
+            ecol,
+            *[monoid.finalize(f, F.col(cols[f.name])).alias(f.name)
+              for f in plan.features],
         )
-        for f in stateful
-    ]
-    out = joined.select(ecol, F.lit(1).alias("__s"), *finals)
-    if stateless:
-        # windowed features recomputed from the incremental slice
-        # (window start >= checkpoint by the required_history contract)
-        from icicle_spark.plans.native import compile_native
-
-        win_plan = Plan(
-            stateless, entity_col=ecol, time_col=tcol, seq_col=plan.seq_col,
-            tombstone_col=plan.tombstone_col,
-        )
-        win = compile_native(new_facts, win_plan, snapshot=snapshot).withColumn(
-            "__w", F.lit(1)
-        )
-        out = out.join(win, on=ecol, how="full")
-        # entities with state but no incremental facts at all: their
-        # window slice is empty -> fold init (poison nulls from rows
-        # that ARE in `win` stay null via the __w marker)
-        for f in stateless:
-            if isinstance(f.agg, Agg) and f.agg in _INIT:
-                out = out.withColumn(
-                    f.name,
-                    F.when(
-                        F.col("__w").isNull(), F.lit(_INIT[f.agg])
-                    ).otherwise(F.col(f.name)),
-                )
-        out = out.drop("__w")
-        # entities known only from the window spine (first facts are
-        # still in the future): stateful folds take init values
-        for f in stateful:
-            if isinstance(f.agg, Agg) and f.agg in _INIT and f.latest is None:
-                out = out.withColumn(
-                    f.name,
-                    F.when(
-                        F.col("__s").isNull(), F.lit(_INIT[f.agg])
-                    ).otherwise(F.col(f.name)),
-                )
-            elif f.latest is not None and f.agg in _INIT:
-                out = out.withColumn(
-                    f.name,
-                    F.when(
-                        F.col("__s").isNull(), F.lit(_INIT[f.agg])
-                    ).otherwise(F.col(f.name)),
-                )
-    out = out.drop("__s").select(ecol, *[f.name for f in plan.features])
+    )
     # re-emit CSE-shared folds, then the postcomp stage (same contract
     # as run_plan / compile_native)
-    from icicle_spark.plans.ir import apply_postcomps
-
     for dup, kept in _dups.items():
         out = out.withColumn(dup, F.col(kept))
     return apply_postcomps(out, full, now_sql=f"TIMESTAMP '{snapshot}'")

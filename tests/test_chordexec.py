@@ -230,3 +230,38 @@ def test_windowed_minmax_vectorized_and_native_agree(spark, data):
             assert (
                 (av.isna() & ov.isna()) | np.isclose(av, ov, equal_nan=True)
             ).all(), col
+
+
+def test_chords_derived_from_facts_every_strategy(spark, data):
+    """A chord table built from the facts themselves (entities
+    cross-joined with query times) shares the facts' entity attribute;
+    every strategy must still resolve it and give the same answer."""
+    facts, _, _ = data
+    times = spark.createDataFrame(
+        pd.DataFrame({"query_time": pd.to_datetime(["2024-02-01", "2024-03-15"])})
+    )
+    chords = facts.select("entity").distinct().crossJoin(times)
+    plan = Plan(
+        [
+            Feature("s", Agg.SUM, "value", skip_nulls=True),
+            Feature("c", Agg.COUNT, "value", skip_nulls=True),
+            Feature("nw", Agg.NEWEST, "value", skip_nulls=True),
+        ],
+        entity_col="entity", time_col="time", seq_col="seq",
+    )
+    outs = {
+        s: run_plan(facts, plan, chords=chords, strategy=s)
+        .toPandas()
+        .sort_values(["entity", "query_time"])
+        .reset_index(drop=True)
+        for s in ("cogroup", "auto", "native", "vectorized")
+    }
+    ref = outs.pop("cogroup")
+    assert len(ref) == 2 * facts.select("entity").distinct().count()
+    for s, out in outs.items():
+        assert (out["entity"] == ref["entity"]).all(), s
+        for c in ("s", "c", "nw"):
+            assert np.allclose(
+                out[c].astype("float64"), ref[c].astype("float64"),
+                equal_nan=True,
+            ), (s, c)

@@ -238,3 +238,45 @@ def test_fusion_and_cse(spark):
     assert [f.name for f in fused.features] == ["a", "b", "a2"]
     condensed = fused.condensed()
     assert [f.name for f in condensed.features] == ["a", "b"]
+
+
+def _exchange_keys(df) -> list[tuple[str, ...]]:
+    """Hash-partitioning keys (attribute names, ids stripped) of every
+    shuffle exchange in the physical plan, with AQE off so the plan is
+    the one Catalyst planned rather than a re-optimized stage graph."""
+    import re
+
+    spark = df.sparkSession
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    return [
+        tuple(re.sub(r"#\d+L?$", "", a.strip()) for a in m.split(","))
+        for m in re.findall(r"Exchange hashpartitioning\(([^)]*), \d+", plan)
+    ]
+
+
+def test_salted_plan_exchanges(spark, facts):
+    """A snapshot plan with a latest-N feature shuffles the facts once
+    by (entity, salt): the rank window and the stage-1 aggregate share
+    that exchange, and stage 2 adds one entity exchange. The spine's
+    distinct is the only other exchange."""
+    plan = Plan(
+        [
+            Feature("s", Agg.SUM, "n_tok", skip_nulls=True),
+            Feature("l3", Agg.MEAN, "n_tok", latest=3, skip_nulls=True),
+        ],
+        entity_col="doc_id", time_col="event_time", seq_col="seq",
+    )
+    keys = _exchange_keys(compile_native(facts, plan, snapshot=SNAPSHOT))
+    assert sorted(keys) == [("doc_id",), ("doc_id",), ("doc_id", "__salt")]
+
+
+def test_single_stage_plan_exchanges(spark, facts):
+    """Without latest-N every fold is one aggregate behind one entity
+    exchange of the facts (plus the spine's)."""
+    keys = _exchange_keys(compile_native(facts, _plan(True), snapshot=SNAPSHOT))
+    assert keys == [("doc_id",), ("doc_id",)]
