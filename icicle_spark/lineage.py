@@ -11,7 +11,8 @@ executes a plan, writes the output, and records:
   rows, entity range (the shuffle-side lineage unit; entity-hash
   partitioning means partition membership is reproducible)
 * run record      — plan fingerprint (sha256 of the canonical plan),
-  snapshot time, row counts in/out, wall seconds, engine strategy,
+  snapshot time, row counts in/out, wall seconds (split into the
+  plan build and the write), engine strategy,
   the backend that strategy chose and why, relevant spark conf
 
 The manifests are written as PARQUET DATAFRAMES under
@@ -112,8 +113,9 @@ def run_with_lineage(
         facts, plan, snapshot=snapshot, chords=chords, strategy=strategy,
         assume_arranged=assume_arranged,
     )
+    built = time.time()
     result.write.mode("overwrite").parquet(out_path)
-    wall = time.time() - t0
+    done = time.time()
     written = spark.read.parquet(out_path)
     lineage_dir = os.path.join(out_path, "_lineage")
     inputs_path = os.path.join(lineage_dir, "inputs")
@@ -147,7 +149,10 @@ def run_with_lineage(
         "route_reason": route_reason,
         "rows_in": in_sum["rows"],
         "rows_out": out_sum["rows"],
-        "wall_seconds": round(wall, 3),
+        "wall_seconds": round(done - t0, 3),
+        # the driver-side plan build, then the Spark job that writes it
+        "build_seconds": round(built - t0, 3),
+        "write_seconds": round(done - built, 3),
         "input_files": in_sum["n_files"],
         "input_time_range": [in_sum["min_time"], in_sum["max_time"]],
         "output_partitions": out_sum["n_parts"],

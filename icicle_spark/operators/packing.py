@@ -273,12 +273,17 @@ def bin_pack_documents(
     are packed by the classic FFD heuristic
     (sort by length desc, place each doc into the lowest-numbered bin
     with room, new bin otherwise) via one ``applyInPandas`` per
-    segment. Strictly tighter fill than
-    class packing on mixed-length corpora (FFD uses <= 11/9 OPT + 1
-    bins per segment), still deterministic, but sequential per
-    segment — size segments accordingly. Not SQL-replayable
-    (rows-only in the driver gate); fill superiority and bin validity
-    are pytest-pinned instead.
+    segment. Per segment it never uses more bins than class packing
+    of that segment alone (it places documents class by class, longest
+    first, and a bin opened for class-``c`` documents takes ``c`` of
+    them before another opens), and at most 11/9 OPT + 1. It is NOT
+    always tighter than class packing overall: class bins mix
+    segments, so many small segments can cost FFD more bins in total
+    (five one-token documents in five segments: one class bin, five
+    FFD bins). Still deterministic, but sequential per segment — size
+    segments accordingly. Not SQL-replayable (rows-only in the driver
+    gate); the per-segment bound and bin validity are pytest-pinned
+    instead.
     """
     if seq_len <= 0:
         raise ValueError("seq_len must be positive")

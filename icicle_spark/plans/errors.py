@@ -37,7 +37,13 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
 from icicle_spark.plans.ir import Agg, CustomFold, Feature, Plan
-from icicle_spark.plans.native import _order_cols, _visibility, _with_binds
+from icicle_spark.plans.monoid import ident
+from icicle_spark.plans.native import (
+    _order_cols,
+    _visibility,
+    _with_binds,
+    snapshot_sql,
+)
 
 ERR_OK = 0
 ERR_TOMBSTONE = 1
@@ -166,17 +172,19 @@ def error_codes(
         tomb = F.lit(False)
 
     if snapshot is not None:
-        qt = F.lit(snapshot).cast("timestamp")
+        qt = snapshot_sql(snapshot)
         keys = [ecol]
-        base = facts.where(F.col(tcol) < qt)
+        base = facts.where(F.col(tcol) < F.expr(qt))
         spine = facts.select(ecol).distinct()
     else:
-        qt = F.col("query_time")
+        qt = ident("query_time")
         keys = [ecol, "query_time"] + (
             ["label"] if "label" in chords.columns else []
         )
         rhs = F.broadcast(chords) if broadcast_chords else chords
-        base = facts.join(rhs, on=ecol, how="inner").where(F.col(tcol) < qt)
+        base = facts.join(rhs, on=ecol, how="inner").where(
+            F.col(tcol) < F.col(qt)
+        )
         spine = chords
 
     # tombstoned facts are null ELEMENTS for the value backends; for
@@ -189,7 +197,7 @@ def error_codes(
     base = _with_binds(base, plan)
     aggs = []
     for f in plan.features:
-        frame = _visibility(f, qt, tcol)
+        frame = F.expr(_visibility(f, qt, tcol))
         if f.filter_let is not None:
             frame = frame & ~tomb
         if f.latest_outer is not None:
@@ -197,7 +205,7 @@ def error_codes(
             # (latest A ~> filter ~> ...): rank over the PRE-filter
             # visibility, then conjoin — the outer buffer can empty a
             # stream that has older matching elements.
-            vis_only = _visibility(f, qt, tcol, include_filters=False)
+            vis_only = F.expr(_visibility(f, qt, tcol, include_filters=False))
             w_out = (
                 W.partitionBy(*keys)
                 .orderBy(*_order_cols(plan))

@@ -14,6 +14,14 @@ and the latest-N frame, is written once as
   included. A null state (no rows at all) finalizes to the fold's
   empty value, ``EMPTY`` (reference Core/Eval/Stream.hs:76-99).
 
+Everything here is Spark SQL text: arguments (``cond``, ``qt``, the
+element and state columns) and results are SQL strings, and lambdas
+are SQL lambdas (``x -> ...``). A caller hands each finished string to
+the JVM once (``F.expr`` or ``selectExpr``); building the same
+expression as a tree of ``Column`` objects costs one py4j round trip
+per node. Every identifier is backtick-quoted by ``ident``; element
+strings are Spark SQL already and are embedded as ``(expr)``.
+
 Its consumers: native's single-stage aggregate (``state`` per key),
 native's salted two-stage aggregate (``state`` per (key, salt), then
 ``merge`` per key), ``resume.fold_states`` (``state`` per entity: the
@@ -41,9 +49,7 @@ visible value in stream order) on the rows they aggregate.
 from __future__ import annotations
 
 import math
-from typing import Any, Callable
-
-from pyspark.sql import Column, functions as F
+from typing import Any
 
 from icicle_spark.plans.ir import Agg, Feature, Plan
 
@@ -70,283 +76,294 @@ def has_state(f: Feature) -> bool:
     )
 
 
+def ident(name: str) -> str:
+    """A column name as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def lit(v: bool | float) -> str:
+    """A Python bool or float as a typed SQL literal (floats are
+    DOUBLE, as ``F.lit`` makes them; ``0.0`` alone would be a decimal)."""
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    return f"{v!r}D"
+
+
 def _lam(f: Feature) -> float:
     return math.log(2.0) / (float(f.half_life_days) * 86_400.0)
 
 
-def _seconds(later: Column, earlier: Column) -> Column:
+def _seconds(later: str, earlier: str) -> str:
     return (
-        F.unix_micros(later.cast("timestamp"))
-        - F.unix_micros(earlier.cast("timestamp"))
-    ).cast("double") / F.lit(1e6)
+        f"CAST(unix_micros(CAST({later} AS TIMESTAMP))"
+        f" - unix_micros(CAST({earlier} AS TIMESTAMP)) AS DOUBLE) / 1000000D"
+    )
 
 
-def _order_key(plan: Plan) -> Column:
+def _order_key(plan: Plan) -> str:
     """Stream order (time, seq) as one scalar: the time in microseconds,
     or with a seq column t_us * 10^20 + seq as a decimal(38, 0). A pick
     by a scalar key keeps every aggregation buffer mutable, so Spark
     plans a hash aggregate (a struct buffer forces a sort aggregate)."""
-    t_us = F.unix_micros(F.col(plan.time_col).cast("timestamp"))
+    t_us = f"unix_micros(CAST({ident(plan.time_col)} AS TIMESTAMP))"
     if not plan.seq_col:
         return t_us
-    return t_us.cast("decimal(38,0)") * F.expr(
-        "CAST(1e20 AS DECIMAL(38,0))"
-    ) + F.col(plan.seq_col).cast("decimal(38,0)")
-
-
-def _tqv(plan: Plan, v: Column) -> Column:
-    q = F.col(plan.seq_col) if plan.seq_col else F.lit(0).cast("bigint")
-    return F.struct(
-        F.col(plan.time_col).alias("t"), q.alias("q"), v.alias("v")
+    return (
+        f"CAST({t_us} AS DECIMAL(38,0)) * CAST(1e20 AS DECIMAL(38,0))"
+        f" + CAST({ident(plan.seq_col)} AS DECIMAL(38,0))"
     )
 
 
-def _tail(arr: Column, n: int) -> Column:
+def _tqv(plan: Plan, v: str, **more: str) -> str:
+    q = ident(plan.seq_col) if plan.seq_col else "CAST(0 AS BIGINT)"
+    return _struct(t=ident(plan.time_col), q=q, v=v, **more)
+
+
+def _tail(arr: str, n: int) -> str:
     """Last n elements of an array (safe when it is shorter)."""
-    return F.slice(arr, F.greatest(F.size(arr) - (n - 1), F.lit(1)), n)
+    return f"slice({arr}, greatest(size({arr}) - {n - 1}, 1), {n})"
+
+
+def _struct(**fields: str) -> str:
+    return "named_struct(" + ", ".join(
+        f"'{k}', {v}" for k, v in fields.items()
+    ) + ")"
 
 
 def state(
-    f: Feature, plan: Plan, cond: Column, qt: Column,
-    x: Column | None = None, merge_key: bool = True,
-) -> Column:
+    f: Feature, plan: Plan, cond: str, qt: str,
+    x: str | None = None, merge_key: bool = True,
+) -> str:
     """Partial accumulator of ``f`` over the ``cond`` rows. ``x`` is
-    the element column (default: ``f.expr``). ``merge_key=False`` leaves
-    out the NEWEST/OLDEST order key ``k``, which only ``merge`` reads:
-    for a state that is finalized as it is."""
-    x = F.expr(f.expr) if x is None else x
+    the element (default: ``f.expr``). ``merge_key=False`` leaves out
+    the NEWEST/OLDEST order key ``k``, which only ``merge`` reads: for
+    a state that is finalized as it is."""
+    x = f"({f.expr})" if x is None else x
     if f.latest is not None:
-        keep = cond & x.isNotNull() if f.skip_nulls else cond
-        row = _tqv(plan, x)
-        if f.by is not None:
-            row = row.withField("b", F.expr(f.by))
-        arr = _tail(F.array_sort(F.collect_list(F.when(keep, row))), f.latest)
-        return F.struct(arr.alias("arr"))
-    seen = cond & x.isNotNull()
-    xv = F.when(seen, x)
+        keep = f"({cond}) AND {x} IS NOT NULL" if f.skip_nulls else cond
+        row = _tqv(plan, x, **({} if f.by is None else {"b": f"({f.by})"}))
+        arr = f"array_sort(collect_list(CASE WHEN {keep} THEN {row} END))"
+        return _struct(arr=_tail(arr, f.latest))
+    seen = f"({cond}) AND {x} IS NOT NULL"
+    xv = f"CASE WHEN {seen} THEN {x} END"
     p = (
-        F.lit(False) if f.skip_nulls
-        else F.coalesce(F.bool_or(cond & x.isNull()), F.lit(False))
+        "false" if f.skip_nulls
+        else f"coalesce(bool_or(({cond}) AND {x} IS NULL), false)"
     )
     agg = f.agg
     if agg is Agg.SUM:
-        fields = [F.sum(xv).alias("s")]
+        fields = {"s": f"sum({xv})"}
     elif agg is Agg.DECAYED_SUM:
-        w = F.exp(-F.lit(_lam(f)) * _seconds(qt, F.col(plan.time_col)))
-        fields = [F.sum(xv.cast("double") * w).alias("s")]
+        w = f"exp({lit(-_lam(f))} * ({_seconds(qt, ident(plan.time_col))}))"
+        fields = {"s": f"sum(CAST({xv} AS DOUBLE) * {w})"}
     elif agg is Agg.COUNT:
-        fields = [F.count(xv).alias("c")]
+        fields = {"c": f"count({xv})"}
     elif agg is Agg.MEAN:
-        fields = [F.sum(xv).alias("s"), F.count(xv).alias("c")]
+        fields = {"s": f"sum({xv})", "c": f"count({xv})"}
     elif agg in (Agg.MIN, Agg.MAX):
-        fields = [(F.min if agg is Agg.MIN else F.max)(xv).alias("m")]
+        fields = {"m": f"{'min' if agg is Agg.MIN else 'max'}({xv})"}
     elif agg in (Agg.ANY, Agg.ALL):
-        pick = F.bool_or if agg is Agg.ANY else F.bool_and
-        fields = [pick(xv.cast("boolean")).alias("b")]
+        pick = "bool_or" if agg is Agg.ANY else "bool_and"
+        fields = {"b": f"{pick}(CAST({xv} AS BOOLEAN))"}
     elif agg in (Agg.NEWEST, Agg.OLDEST):
-        key = F.when(seen, _order_key(plan))
-        k, v = _pick(agg, x, key)
-        fields = [k, v] if merge_key else [v]
+        fields = _pick(agg, x, f"CASE WHEN {seen} THEN {_order_key(plan)} END")
+        if not merge_key:
+            del fields["k"]
     elif agg in (Agg.VARIANCE, Agg.SD):
-        xd = xv.cast("double")
-        fields = [
-            F.count(xd).alias("n"), F.avg(xd).alias("mean"),
-            (F.var_pop(xd) * F.count(xd)).alias("m2"),
-        ]
+        xd = f"CAST({xv} AS DOUBLE)"
+        fields = {
+            "n": f"count({xd})", "mean": f"avg({xd})",
+            "m2": f"var_pop({xd}) * count({xd})",
+        }
     elif agg is Agg.NUMFLIPS:
-        prev = F.col(f"__prev_{f.name}")
-        flip = F.when(cond & prev.isNotNull() & (x != prev), 1).otherwise(0)
-        tqv = F.when(seen, _tqv(plan, x))
-        fields = [
-            F.min(tqv).alias("first"), F.max(tqv).alias("last"),
-            F.sum(flip).cast("bigint").alias("k"),
-        ]
+        prev = ident(f"__prev_{f.name}")
+        flip = (
+            f"CASE WHEN ({cond}) AND {prev} IS NOT NULL AND {x} != {prev}"
+            " THEN 1 ELSE 0 END"
+        )
+        tqv = f"CASE WHEN {seen} THEN {_tqv(plan, x)} END"
+        fields = {
+            "first": f"min({tqv})", "last": f"max({tqv})",
+            "k": f"CAST(sum({flip}) AS BIGINT)",
+        }
     else:  # pragma: no cover — has_state gates every caller
         raise ValueError(f"no fold state for {agg}")
-    return F.struct(*fields, p.alias("p"))
+    return _struct(**fields, p=p)
 
 
-def _pick(agg: Agg, v: Column, key: Column) -> list[Column]:
+def _pick(agg: Agg, v: str, key: str) -> dict[str, str]:
     """NEWEST/OLDEST state fields: the extreme order key and the value
     at it."""
-    ext, by = (F.max, F.max_by) if agg is Agg.NEWEST else (F.min, F.min_by)
-    return [ext(key).alias("k"), by(v, key).alias("v")]
+    ext, by = ("max", "max_by") if agg is Agg.NEWEST else ("min", "min_by")
+    return {"k": f"{ext}({key})", "v": f"{by}({v}, {key})"}
 
 
-def _fold(states: Column, step: Callable[[Column, Column], Column]) -> Column:
-    """Left fold of a non-empty array of states with ``step``; null on
-    an empty array."""
-    return F.aggregate(
-        F.slice(states, 2, F.size(states)),
-        F.try_element_at(states, F.lit(1)),
-        step,
+def _fold(states: str, step: str) -> str:
+    """Left fold of a non-empty array of states with the SQL lambda
+    ``step`` over ``__a`` and ``__b``; null on an empty array."""
+    return (
+        f"aggregate(slice({states}, 2, size({states})),"
+        f" try_element_at({states}, 1), (__a, __b) -> {step})"
     )
 
 
-def _chan(a: Column, b: Column) -> Column:
-    """Chan's pairwise update of (n, mean, m2), as Spark's own
-    CentralMomentAgg merges partial buffers."""
-    n = a["n"] + b["n"]
-    d = b["mean"] - a["mean"]
-    w = b["n"] / n
-
-    def pick(both: Column, field: str) -> Column:
-        return (
-            F.when(b["n"] == 0, a[field]).when(a["n"] == 0, b[field])
-            .otherwise(both)
-        )
-
-    return F.struct(
-        n.alias("n"),
-        pick(a["mean"] + d * w, "mean").alias("mean"),
-        pick(a["m2"] + b["m2"] + d * d * a["n"] * w, "m2").alias("m2"),
-        (a["p"] | b["p"]).alias("p"),
+def _pick_nonempty(both: str, field: str) -> str:
+    return (
+        f"CASE WHEN __b.n = 0 THEN __a.{field} WHEN __a.n = 0"
+        f" THEN __b.{field} ELSE {both} END"
     )
 
 
-def _flips(a: Column, b: Column) -> Column:
-    """Concatenate two time-ordered NUMFLIPS partials: a flip at the
-    seam when a's last value differs from b's first."""
-    seam = F.when(a["last"]["v"] != b["first"]["v"], 1).otherwise(0)
-    return F.struct(
-        F.coalesce(a["first"], b["first"]).alias("first"),
-        F.coalesce(b["last"], a["last"]).alias("last"),
-        (a["k"] + b["k"] + seam).alias("k"),
-        (a["p"] | b["p"]).alias("p"),
-    )
+# Chan's pairwise update of (n, mean, m2), as Spark's own
+# CentralMomentAgg merges partial buffers
+_CHAN = _struct(
+    n="__a.n + __b.n",
+    mean=_pick_nonempty(
+        "__a.mean + (__b.mean - __a.mean) * (__b.n / (__a.n + __b.n))", "mean"
+    ),
+    m2=_pick_nonempty(
+        "__a.m2 + __b.m2 + (__b.mean - __a.mean) * (__b.mean - __a.mean)"
+        " * __a.n * (__b.n / (__a.n + __b.n))",
+        "m2",
+    ),
+    p="__a.p OR __b.p",
+)
+
+# concatenate two time-ordered NUMFLIPS partials: a flip at the seam
+# when a's last value differs from b's first
+_FLIPS = _struct(
+    first="coalesce(__a.`first`, __b.`first`)",
+    last="coalesce(__b.`last`, __a.`last`)",
+    k="__a.k + __b.k"
+    " + CASE WHEN __a.`last`.v != __b.`first`.v THEN 1 ELSE 0 END",
+    p="__a.p OR __b.p",
+)
 
 
-def merge(f: Feature, c: Column) -> Column:
+def merge(f: Feature, c: str) -> str:
     """Aggregate a column of ``f``'s states into one state."""
     if f.latest is not None:
-        arr = F.array_sort(F.flatten(F.collect_list(c["arr"])))
-        return F.struct(_tail(arr, f.latest).alias("arr"))
+        arr = f"array_sort(flatten(collect_list({c}.arr)))"
+        return _struct(arr=_tail(arr, f.latest))
     agg = f.agg
     if agg in (Agg.VARIANCE, Agg.SD):
-        return _fold(F.collect_list(c), _chan)
+        return _fold(f"collect_list({c})", _CHAN)
     if agg is Agg.NUMFLIPS:
         # partials are time-disjoint: order them by their first fact
-        return _fold(F.array_sort(F.collect_list(c)), _flips)
+        return _fold(f"array_sort(collect_list({c}))", _FLIPS)
     if agg in (Agg.SUM, Agg.DECAYED_SUM):
-        fields = [F.sum(c["s"]).alias("s")]
+        fields = {"s": f"sum({c}.s)"}
     elif agg is Agg.COUNT:
-        fields = [F.sum(c["c"]).alias("c")]
+        fields = {"c": f"sum({c}.c)"}
     elif agg is Agg.MEAN:
-        fields = [F.sum(c["s"]).alias("s"), F.sum(c["c"]).alias("c")]
+        fields = {"s": f"sum({c}.s)", "c": f"sum({c}.c)"}
     elif agg in (Agg.MIN, Agg.MAX):
-        fields = [(F.min if agg is Agg.MIN else F.max)(c["m"]).alias("m")]
+        fields = {"m": f"{'min' if agg is Agg.MIN else 'max'}({c}.m)"}
     elif agg in (Agg.ANY, Agg.ALL):
-        pick = F.bool_or if agg is Agg.ANY else F.bool_and
-        fields = [pick(c["b"]).alias("b")]
+        pick = "bool_or" if agg is Agg.ANY else "bool_and"
+        fields = {"b": f"{pick}({c}.b)"}
     elif agg in (Agg.NEWEST, Agg.OLDEST):
-        fields = _pick(agg, c["v"], c["k"])
+        fields = _pick(agg, f"{c}.v", f"{c}.k")
     else:  # pragma: no cover
         raise ValueError(f"no fold state for {agg}")
-    p = F.coalesce(F.bool_or(c["p"]), F.lit(False))
-    return F.struct(*fields, p.alias("p"))
+    return _struct(**fields, p=f"coalesce(bool_or({c}.p), false)")
 
 
-def rebase(f: Feature, st: Column, at: Column, qt: Column) -> Column:
+def rebase(f: Feature, st: str, at: str, qt: str) -> str:
     """Move a state computed as at ``at`` to the later query time
     ``qt``: a decayed sum decays by e^(-lam * (qt - at)); every other
     state is time-free."""
     if f.agg is not Agg.DECAYED_SUM or f.latest is not None:
         return st
-    decay = F.exp(-F.lit(_lam(f)) * _seconds(qt, at))
-    return st.withField("s", st["s"] * decay)
+    decay = f"exp({lit(-_lam(f))} * ({_seconds(qt, at)}))"
+    return _struct(s=f"{st}.s * {decay}", p=f"{st}.p")
 
 
-def finalize(f: Feature, st: Column) -> Column:
+def finalize(f: Feature, st: str) -> str:
     """The value of ``f`` from its state (null state: the empty fold)."""
     if f.latest is not None:
-        return _finalize_frame(f, st["arr"])
+        return _finalize_frame(f, f"{st}.arr")
     agg = f.agg
-    if agg in (Agg.SUM, Agg.DECAYED_SUM):
-        out = F.coalesce(st["s"], F.lit(EMPTY[agg]))
-    elif agg is Agg.COUNT:
-        out = F.coalesce(st["c"], F.lit(EMPTY[agg]).cast("bigint"))
+    if agg in (Agg.SUM, Agg.DECAYED_SUM, Agg.ANY, Agg.ALL):
+        field = "s" if agg in (Agg.SUM, Agg.DECAYED_SUM) else "b"
+        out = f"coalesce({st}.{field}, {lit(EMPTY[agg])})"
+    elif agg in (Agg.COUNT, Agg.NUMFLIPS):
+        field = "c" if agg is Agg.COUNT else "k"
+        out = f"coalesce({st}.{field}, CAST({EMPTY[agg]} AS BIGINT))"
     elif agg is Agg.MEAN:
-        out = F.when(st["c"] > 0, st["s"] / st["c"])
+        out = f"CASE WHEN {st}.c > 0 THEN {st}.s / {st}.c END"
     elif agg in (Agg.MIN, Agg.MAX):
-        out = st["m"]
+        out = f"{st}.m"
     elif agg in (Agg.NEWEST, Agg.OLDEST):
-        out = st["v"]
-    elif agg in (Agg.ANY, Agg.ALL):
-        out = F.coalesce(st["b"], F.lit(EMPTY[agg]))
+        out = f"{st}.v"
     elif agg in (Agg.VARIANCE, Agg.SD):
-        var = F.when(st["n"] > 1, st["m2"] / (st["n"] - 1))
-        out = F.sqrt(var) if agg is Agg.SD else var
-    elif agg is Agg.NUMFLIPS:
-        out = F.coalesce(st["k"], F.lit(EMPTY[agg]).cast("bigint"))
+        var = f"CASE WHEN {st}.n > 1 THEN {st}.m2 / ({st}.n - 1) END"
+        out = f"sqrt({var})" if agg is Agg.SD else var
     else:  # pragma: no cover
         raise ValueError(f"no fold state for {agg}")
     if not f.skip_nulls:
-        out = F.when(F.coalesce(st["p"], F.lit(False)), F.lit(None)).otherwise(out)
+        out = f"CASE WHEN coalesce({st}.p, false) THEN NULL ELSE {out} END"
     return out
 
 
-def _finalize_frame(f: Feature, arr: Column) -> Column:
+def _finalize_frame(f: Feature, arr: str) -> str:
     """Fold a latest-N frame (oldest first) into the feature value; in
     Possibly mode a null element inside the frame poisons it."""
-    arr = F.coalesce(arr, F.array())
-    vs = F.transform(arr, lambda x: x["v"])
-    n = F.size(arr)
-    dsum = F.aggregate(vs, F.lit(0.0), lambda a, v: a + v.cast("double"))
+    arr = f"coalesce({arr}, array())"
+    vs = f"transform({arr}, __e -> __e.v)"
+    n = f"size({arr})"
+    dsum = f"aggregate({vs}, 0.0D, (__s, __v) -> __s + CAST(__v AS DOUBLE))"
     agg = f.agg
     if agg is Agg.SUM:
-        out = F.coalesce(dsum, F.lit(0.0))
+        out = f"coalesce({dsum}, 0.0D)"
     elif agg is Agg.COUNT:
-        out = F.size(F.filter(vs, lambda v: v.isNotNull())).cast("bigint")
+        out = f"CAST(size(filter({vs}, __v -> __v IS NOT NULL)) AS BIGINT)"
     elif agg is Agg.MEAN:
-        out = F.when(n > 0, dsum / n)
+        out = f"CASE WHEN {n} > 0 THEN {dsum} / {n} END"
     elif agg in (Agg.MIN, Agg.MAX):
-        out = (F.array_min if agg is Agg.MIN else F.array_max)(vs)
-    elif agg is Agg.NEWEST:
-        out = F.when(n > 0, F.element_at(arr, -1)["v"])
-    elif agg is Agg.OLDEST:
-        out = F.when(n > 0, F.element_at(arr, 1)["v"])
+        out = f"{'array_min' if agg is Agg.MIN else 'array_max'}({vs})"
+    elif agg in (Agg.NEWEST, Agg.OLDEST):
+        at = -1 if agg is Agg.NEWEST else 1
+        out = f"CASE WHEN {n} > 0 THEN element_at({arr}, {at}).v END"
     elif agg in (Agg.VARIANCE, Agg.SD):
         # two passes over at most N values: the mean, then squared
         # deviations from it (no cancellation at large offsets)
-        mean = dsum / n
-        m2 = F.aggregate(
-            vs, F.lit(0.0),
-            lambda a, v: a + (v.cast("double") - mean) * (v.cast("double") - mean),
-        )
-        var = F.when(n > 1, m2 / (n - 1))
-        out = F.sqrt(var) if agg is Agg.SD else var
+        d = f"(CAST(__w AS DOUBLE) - {dsum} / {n})"
+        m2 = f"aggregate({vs}, 0.0D, (__m, __w) -> __m + {d} * {d})"
+        var = f"CASE WHEN {n} > 1 THEN {m2} / ({n} - 1) END"
+        out = f"sqrt({var})" if agg is Agg.SD else var
     elif agg in (Agg.ANY, Agg.ALL):
-        test = F.exists if agg is Agg.ANY else F.forall
-        out = F.coalesce(test(vs, lambda v: v.cast("boolean")), F.lit(EMPTY[agg]))
+        test = "exists" if agg is Agg.ANY else "forall"
+        out = (
+            f"coalesce({test}({vs}, __v -> CAST(__v AS BOOLEAN)),"
+            f" {lit(EMPTY[agg])})"
+        )
     elif agg is Agg.COUNT_DISTINCT:
-        out = F.size(
-            F.array_distinct(F.filter(vs, lambda v: v.isNotNull()))
-        ).cast("bigint")
+        out = (
+            f"CAST(size(array_distinct(filter({vs}, __v -> __v IS NOT NULL)))"
+            " AS BIGINT)"
+        )
     elif agg is Agg.DISTINCT_VALUES:
-        out = F.array_sort(
-            F.array_distinct(F.transform(vs, lambda v: v.cast("string")))
+        out = (
+            f"array_sort(array_distinct("
+            f"transform({vs}, __v -> CAST(__v AS STRING))))"
         )
     elif agg in (Agg.MAX_BY, Agg.MIN_BY):
-        bs = F.transform(arr, lambda x: x["b"])
-        target = F.array_max(bs) if agg is Agg.MAX_BY else F.array_min(bs)
-        out = F.try_element_at(
-            F.filter(arr, lambda x: x["b"] == target), F.lit(1)
-        )["v"]
+        ext = "array_max" if agg is Agg.MAX_BY else "array_min"
+        target = f"{ext}(transform({arr}, __y -> __y.b))"
+        out = f"try_element_at(filter({arr}, __x -> __x.b = {target}), 1).v"
     elif agg is Agg.NUMFLIPS:
-        pair = F.aggregate(
-            vs,
-            F.struct(F.lit(None).cast("string").alias("prev"), F.lit(0).alias("k")),
-            lambda acc, v: F.struct(
-                v.cast("string").alias("prev"),
-                F.when(
-                    acc["prev"].isNotNull() & (v.cast("string") != acc["prev"]),
-                    acc["k"] + 1,
-                ).otherwise(acc["k"]).alias("k"),
-            ),
+        step = (
+            "named_struct('prev', CAST(__v AS STRING), 'k',"
+            " CASE WHEN __c.prev IS NOT NULL AND CAST(__v AS STRING) != __c.prev"
+            " THEN __c.k + 1 ELSE __c.k END)"
         )
-        out = pair["k"].cast("bigint")
+        out = (
+            f"CAST(aggregate({vs}, named_struct('prev', CAST(NULL AS STRING),"
+            f" 'k', 0), (__c, __v) -> {step}).k AS BIGINT)"
+        )
     else:  # pragma: no cover
         raise ValueError(f"latest does not fold {agg}")
     if not f.skip_nulls:
-        out = F.when(F.exists(vs, lambda v: v.isNull()), F.lit(None)).otherwise(out)
+        out = f"CASE WHEN exists({vs}, __v -> __v IS NULL) THEN NULL ELSE {out} END"
     return out

@@ -2,12 +2,14 @@
 
 Compiles a fold ``Plan`` into a single-scan Catalyst pipeline. Every
 fold the table in ``plans.monoid`` covers is a partial state per key,
-finalized after the spine join; the feature set is split by
+finalized in the last projection; the feature set is split by
 execution need:
 
 * table folds without latest-N — ONE aggregate of states per key
   (entity[, query_time]): one entity exchange, Spark's own partial
-  aggregation before it.
+  aggregation before it. At a snapshot this aggregate reads every
+  fact (visibility is inside each fold's condition) and is itself
+  the spine: one row per entity, no distinct and no join.
 * table folds + latest-N — ONE scan, two-stage salted aggregation:
   stage 1 computes constant-size states per (key, salt-of-seq);
   stage 2 merges them per key. Skew-immune: a hot entity holding 30%
@@ -25,14 +27,24 @@ execution need:
 * group maps and distinct folds — per-(key, group key) table folds,
   then one map or aggregate per key.
 
+The latest-N, numflips, group and distinct paths read only the
+visible facts and left-join onto the spine. A chord table is the
+spine in chord scope; the facts join its distinct keys.
+
+Plans are built as Spark SQL text (``plans.monoid``): each aggregate
+column and each projection goes to the JVM as one string (``F.expr``
+or ``selectExpr``). A ``Column``-tree build costs a py4j round trip
+per node — about 1,370 for a 7-fold plan, against about 60 here.
+
 Fusion: N features still read the input ONCE (the analogue of the
 reference's Core fusion,
 /root/reference/icicle-core/src/Icicle/Core/Program/Fusion.hs:37-81).
 
-Scale: snapshot filters push to the parquet/Iceberg scan (partition
-pruning on time); chord tables join by shuffle unless the caller asks
-for a broadcast (``broadcast_chords``: explicit ``native`` does,
-``auto`` does not); exchanges carry only constant-size states, never
+Scale: the visible-range filter pushes to the parquet/Iceberg scan
+(partition pruning on time) on every path but the snapshot spine;
+chord tables join by shuffle unless the caller asks for a broadcast
+(``broadcast_chords``: explicit ``native`` does, ``auto`` does
+not); exchanges carry only constant-size states, never
 raw fact rows, except the latest-N and numflips helper windows.
 Plans the compiler can't express (custom folds, scan binds, outer
 latest frames, callables) raise; run_plan sends them to the Python
@@ -41,11 +53,15 @@ executors.
 
 from __future__ import annotations
 
+import calendar
+import datetime
+import time
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, Window as W, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from icicle_spark.plans import monoid
+from icicle_spark.plans.monoid import ident
 from icicle_spark.plans.ir import (
     Agg,
     Feature,
@@ -130,62 +146,88 @@ def native_supported(plan: Plan) -> bool:
     return all(_feature_native(f) for f in plan.features)
 
 
-def _key_str(base: DataFrame, kexpr: str) -> Column:
+def snapshot_sql(snapshot: Any) -> str:
+    """The snapshot instant as a SQL timestamp, the same value
+    ``F.lit(snapshot).cast("timestamp")`` gives: a string is cast in
+    the session time zone, a date is its midnight there, and a
+    ``datetime`` (``pd.Timestamp`` included) is the instant py4j sends
+    for it (naive values read as the driver's local time)."""
+    if snapshot is None:
+        return "CAST(NULL AS TIMESTAMP)"
+    if isinstance(snapshot, datetime.datetime):
+        secs = (
+            calendar.timegm(snapshot.utctimetuple()) if snapshot.tzinfo
+            else time.mktime(snapshot.timetuple())
+        )
+        return f"timestamp_micros({int(secs) * 1_000_000 + snapshot.microsecond})"
+    if isinstance(snapshot, datetime.date):
+        return f"CAST(DATE '{snapshot.isoformat()}' AS TIMESTAMP)"
+    if isinstance(snapshot, str):
+        text = snapshot.replace("\\", "\\\\").replace("'", "\\'")
+        return f"CAST('{text}' AS TIMESTAMP)"
+    raise TypeError(f"snapshot must be a str, date or datetime: {snapshot!r}")
+
+
+def named(sql: str, name: str) -> Column:
+    """One SQL expression, aliased, as a Column: a single JVM call."""
+    return F.expr(f"{sql} AS {ident(name)}")
+
+
+def _key_str(base: DataFrame, kexpr: str) -> str:
     """Group-key expression as a STRING map key, matching the Python
     executors' str() casing: Spark casts booleans to 'true'/'false'
     while str(numpy.bool_) is 'True'/'False' — a silent cross-backend
     map-key divergence for `group (value > 0)`-style keys."""
-    k = F.expr(kexpr)
     from pyspark.sql.types import BooleanType, DateType, TimestampNTZType, TimestampType
 
-    dtype = base.select(k.alias("__k")).schema[0].dataType
+    k = f"({kexpr})"
+    dtype = base.selectExpr(f"{k} AS __k").schema[0].dataType
     if isinstance(dtype, BooleanType):
-        return F.when(k, F.lit("True")).when(~k, F.lit("False"))
+        return f"CASE WHEN {k} THEN 'True' WHEN NOT {k} THEN 'False' END"
     if isinstance(dtype, (TimestampType, TimestampNTZType)):
         # maporder.key_str parity: midnight times render as dates
-        return F.when(
-            F.date_trunc("DAY", k) == k, F.date_format(k, "yyyy-MM-dd")
-        ).otherwise(F.date_format(k, "yyyy-MM-dd HH:mm:ss"))
+        return (
+            f"CASE WHEN date_trunc('DAY', {k}) = {k}"
+            f" THEN date_format({k}, 'yyyy-MM-dd')"
+            f" ELSE date_format({k}, 'yyyy-MM-dd HH:mm:ss') END"
+        )
     if isinstance(dtype, DateType):
-        return F.date_format(k, "yyyy-MM-dd")
-    return k.cast("string")
+        return f"date_format({k}, 'yyyy-MM-dd')"
+    return f"CAST({k} AS STRING)"
 
 
-def _order_cols(plan: Plan) -> list[Column]:
-    cols = [F.col(plan.time_col)]
+def _order_cols(plan: Plan) -> list[str]:
+    cols = [ident(plan.time_col)]
     if plan.seq_col:
-        cols.append(F.col(plan.seq_col))
+        cols.append(ident(plan.seq_col))
     return cols
 
 
-def _agg_col(f: Feature, cond: Column, tcol: str) -> Column:
+def _agg_col(f: Feature, cond: str, tcol: str) -> str:
     """The folds outside the table (``monoid``): one conditional
     aggregate each, finished in place."""
-    x = F.when(cond, F.expr(f.expr))
+    x = f"CASE WHEN {cond} THEN ({f.expr}) END"
     agg = f.agg
     if agg is Agg.COUNT_DISTINCT:
-        out = F.count_distinct(x)
+        out = f"count(DISTINCT {x})"
     elif agg is Agg.DISTINCT_VALUES:
-        out = F.sort_array(F.collect_set(x.cast("string")))
+        out = f"sort_array(collect_set(CAST({x} AS STRING)))"
     elif agg in (Agg.MAX_BY, Agg.MIN_BY):
         # ties on the key keep the FIRST fact in stream order, like the
         # reference's strict-compare fold (prelude.icicle:172-191):
         # composite key (by, ±time) makes earliest win either way.
-        t_us = F.unix_micros(F.col(tcol).cast("timestamp"))
-        if agg is Agg.MIN_BY:
-            key = F.struct(F.expr(f.by).alias("b"), t_us.alias("t"))
-            out = F.min_by(x, F.when(cond, key))
-        else:
-            key = F.struct(F.expr(f.by).alias("b"), (-t_us).alias("t"))
-            out = F.max_by(x, F.when(cond, key))
+        t_us = f"unix_micros(CAST({ident(tcol)} AS TIMESTAMP))"
+        pick, t = ("min_by", t_us) if agg is Agg.MIN_BY else ("max_by", f"-{t_us}")
+        key = f"named_struct('b', ({f.by}), 't', {t})"
+        out = f"{pick}({x}, CASE WHEN {cond} THEN {key} END)"
     else:  # pragma: no cover
         raise ValueError(f"not native: {agg}")
     if not f.skip_nulls:
         # Possibly semantics: a null (error/tombstone) element in the
         # final visible slice poisons the aggregate.
-        poison = F.max(F.when(cond & F.expr(f.expr).isNull(), 1).otherwise(0))
-        out = F.when(poison == 1, F.lit(None)).otherwise(out)
-    return out.alias(f.name)
+        poison = f"max(CASE WHEN {cond} AND ({f.expr}) IS NULL THEN 1 ELSE 0 END)"
+        out = f"CASE WHEN {poison} = 1 THEN NULL ELSE {out} END"
+    return out
 
 
 def prepare_facts(facts: DataFrame, plan: Plan) -> DataFrame:
@@ -204,23 +246,20 @@ def null_tombstoned(facts: DataFrame, plan: Plan) -> DataFrame:
     ecol, tcol = plan.entity_col, plan.time_col
     if plan.tombstone_col is None or plan.tombstone_col not in facts.columns:
         return facts
-    tb = F.coalesce(F.col(plan.tombstone_col).cast("boolean"), F.lit(False))
+    tb = f"coalesce(CAST({ident(plan.tombstone_col)} AS BOOLEAN), false)"
     keep = {ecol, tcol, plan.tombstone_col, plan.seq_col}
-    return facts.select(
-        *[
-            F.when(~tb, F.col(c)).otherwise(F.lit(None)).alias(c)
-            if c not in keep
-            else F.col(c)
-            for c in facts.columns
-        ]
-    )
+    return facts.selectExpr(*[
+        ident(c) if c in keep
+        else f"CASE WHEN NOT {tb} THEN {ident(c)} END AS {ident(c)}"
+        for c in facts.columns
+    ])
 
 
 def _with_binds(facts: DataFrame, plan: Plan) -> DataFrame:
     """Materialize every filter_let bind as a physical column (one
-    projection — Catalyst folds it into the scan stage). Must run
-    AFTER tombstone nulling so tombstoned facts bind to null and the
-    Some-pattern drops them."""
+    projection each — Catalyst folds them into the scan stage; a bind
+    may read an earlier one). Must run AFTER tombstone nulling so
+    tombstoned facts bind to null and the Some-pattern drops them."""
     added: set[str] = set()
     for f in plan.features:
         for b, e in (f.filter_let or ()):
@@ -230,45 +269,48 @@ def _with_binds(facts: DataFrame, plan: Plan) -> DataFrame:
                 raise ValueError(
                     f"filter_let bind {b!r} shadows a fact column"
                 )
-            facts = facts.withColumn(b, F.expr(e))
+            facts = facts.selectExpr("*", f"({e}) AS {ident(b)}")
             added.add(b)
     return facts
 
 
 def _visibility(
-    f: Feature, qt: Column, tcol: str, include_filters: bool = True
-) -> Column:
+    f: Feature, qt: str, tcol: str, include_filters: bool = True
+) -> str:
     """Per-feature visibility condition. ``include_filters=False``
     stops after the time/window stage — the pre-filter frame an outer
     latest buffer truncates (Feature.latest_outer)."""
-    cond = F.col(tcol) < qt  # strict: zero temporal leakage
+    t = ident(tcol)
+    conds = [f"{t} < {qt}"]  # strict: zero temporal leakage
     if f.window is not None:
-        cond &= F.col(tcol) >= qt - F.expr(
-            f.window.sql_interval(f.window.newer_than_days)
+        conds.append(
+            f"{t} >= {qt} - {f.window.sql_interval(f.window.newer_than_days)}"
         )
         if f.window.older_than_days:
-            cond &= F.col(tcol) <= qt - F.expr(
-                f.window.sql_interval(f.window.older_than_days)
+            conds.append(
+                f"{t} <= {qt} - "
+                f"{f.window.sql_interval(f.window.older_than_days)}"
             )
-    if not include_filters:
-        return cond
-    if f.filter_let is not None:
+    if include_filters:
         # `filter let Some b = e`: the pattern fails on null binds.
         # Bind columns are materialized on the facts AFTER tombstone
         # nulling (compile_native / errors handle raw-tombstone cases),
         # so a tombstoned fact's bind is null and drops here too.
-        for b, _ in f.filter_let:
-            cond &= F.col(b).isNotNull()
-    if f.where is not None:
-        cond &= F.coalesce(F.expr(f.where).cast("boolean"), F.lit(False))
-    return cond
+        conds += [f"{ident(b)} IS NOT NULL" for b, _ in f.filter_let or ()]
+        if f.where is not None:
+            conds.append(f"coalesce(CAST(({f.where}) AS BOOLEAN), false)")
+    return " AND ".join(conds)
 
 
 # empty values of the folds outside the table (``_agg_col``)
 _DIRECT_EMPTY = {
-    Agg.COUNT_DISTINCT: lambda: F.lit(0),
-    Agg.DISTINCT_VALUES: lambda: F.array().cast("array<string>"),
+    Agg.COUNT_DISTINCT: "0",
+    Agg.DISTINCT_VALUES: "CAST(array() AS array<string>)",
 }
+
+
+def _over(parts: list[str], order: str, frame: str = "") -> str:
+    return f"OVER (PARTITION BY {', '.join(parts)} ORDER BY {order}{frame})"
 
 
 def _prev_values(
@@ -277,17 +319,17 @@ def _prev_values(
     """``__prev_<name>``: each NUMFLIPS feature's previous visible
     value in (time, seq) order per key — the column its fold state
     counts flips against. ``vis(f)`` is the feature's visibility."""
-    w = (
-        W.partitionBy(*keys)
-        .orderBy(*_order_cols(plan))
-        .rowsBetween(W.unboundedPreceding, -1)
+    if not feats:
+        return df
+    over = _over(
+        [*map(ident, keys)], ", ".join(_order_cols(plan)),
+        " ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING",
     )
-    for f in feats:
-        df = df.withColumn(
-            f"__prev_{f.name}",
-            F.last(F.when(vis(f), F.expr(f.expr)), ignorenulls=True).over(w),
-        )
-    return df
+    return df.selectExpr("*", *[
+        f"last(CASE WHEN {vis(f)} THEN ({f.expr}) END, true) {over}"
+        f" AS {ident(f'__prev_{f.name}')}"
+        for f in feats
+    ])
 
 
 _SALT_BUCKETS = 64
@@ -302,7 +344,7 @@ def _two_stage(
     plan: Plan,
     folds: list[Feature],
     latest_feats: list[Feature],
-    qt: Column,
+    qt: str,
     keys: list[str],
 ) -> DataFrame:
     """ONE scan for all table folds + latest features: stage 1 states
@@ -311,16 +353,13 @@ def _two_stage(
     over the input (the multi-subtree alternative re-scans the table
     once per feature family, 3-6x the I/O at 100 TB)."""
     tcol = plan.time_col
-    scol = plan.seq_col or tcol
+    t, s = ident(tcol), ident(plan.seq_col or tcol)
     # salt MATERIALIZES as a column: the rank window partitions and
     # the stage-1 groupBy then share one attribute, so Catalyst
     # satisfies the aggregate's distribution with the window's
     # exchange instead of re-shuffling all rows a second time (pinned
     # by test_fold_plans' exchange tests)
-    base = base.withColumn(
-        "__salt", F.pmod(F.xxhash64(F.col(scol)), F.lit(_SALT_BUCKETS))
-    )
-    salt = F.col("__salt")
+    base = base.selectExpr("*", f"pmod(xxhash64({s}), {_SALT_BUCKETS}) AS __salt")
     # Rank stage: a salted exchange + Tungsten sort, then an O(n)
     # running conditional count from the NEWEST row backwards =
     # rank-from-end among each feature's own cond rows. Each stage-1
@@ -328,56 +367,74 @@ def _two_stage(
     # churn is bounded, unlike collecting the whole bucket (measured
     # 85% of the fused pass) or an unbounded-following window frame
     # (did not finish on the hot entity).
-    w_desc = (
-        W.partitionBy(*[F.col(k) for k in keys], salt)
-        .orderBy(F.desc(tcol), F.desc(scol))
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    over = _over(
+        [*map(ident, keys), "__salt"], f"{t} DESC, {s} DESC",
+        " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW",
     )
     conds = {f.name: _visibility(f, qt, tcol) for f in folds}
+    ranks = []
     for f in latest_feats:
         cond = _visibility(f, qt, tcol)
         if f.skip_nulls:
-            cond = cond & F.expr(f.expr).isNotNull()
-        rk = f"__rk_{f.name}"
-        base = base.withColumn(rk, F.sum(F.when(cond, 1).otherwise(0)).over(w_desc))
-        conds[f.name] = cond & (F.col(rk) <= f.latest)
+            cond = f"{cond} AND ({f.expr}) IS NOT NULL"
+        rk = ident(f"__rk_{f.name}")
+        ranks.append(f"sum(CASE WHEN {cond} THEN 1 ELSE 0 END) {over} AS {rk}")
+        conds[f.name] = f"{cond} AND {rk} <= {f.latest}"
     feats = folds + latest_feats
-    s1 = base.groupBy(*[F.col(k) for k in keys], salt).agg(
-        *[monoid.state(f, plan, conds[f.name], qt).alias(_st(f)) for f in feats]
+    s1 = base.selectExpr("*", *ranks).groupBy(*keys, "__salt").agg(
+        *[named(monoid.state(f, plan, conds[f.name], qt), _st(f)) for f in feats]
     )
     return s1.groupBy(*keys).agg(
-        *[monoid.merge(f, F.col(_st(f))).alias(_st(f)) for f in feats]
+        *[named(monoid.merge(f, ident(_st(f))), _st(f)) for f in feats]
     )
 
 
-def _group_fold(
-    f: Feature, plan: Plan, cond: Column, qt: Column, gv: Column
-) -> Column:
+def _group_fold(f: Feature, plan: Plan, cond: str, qt: str, gv: str) -> str:
     """One key's fold value inside a group map: the table's fold over
     the key's rows, values read as double (count/mean/any/all keep
     their own input)."""
     if f.agg not in (Agg.COUNT, Agg.MEAN, Agg.ANY, Agg.ALL):
-        gv = gv.cast("double")
+        gv = f"CAST({gv} AS DOUBLE)"
     return monoid.finalize(
         f, monoid.state(f, plan, cond, qt, gv, merge_key=False)
     )
 
 
+def _entry_map(present: str, v: str) -> str:
+    """Per-entity map of the per-key rows whose ``present`` holds.
+    Data.Map iteration order (plans/maporder.py): entries sort by the
+    TYPED key ``__gkr`` before the map is assembled — `group fold
+    (k, v)` postcomps and rendered maps then iterate exactly as the
+    reference's Data.Map accumulator does."""
+    row = f"named_struct('r', __gkr, 'k', __gk, 'v', {v})"
+    return (
+        "map_from_entries(transform(array_sort(collect_list("
+        f"CASE WHEN {present} THEN {row} END)),"
+        " __e -> named_struct('key', __e.k, 'value', __e.v)))"
+    )
+
+
 def _compile_scoped(
-    spine: DataFrame,
+    spine: DataFrame | None,
+    rows: DataFrame,
     base: DataFrame,
     plan: Plan,
-    qt: Column,
+    qt: str,
     keys: list[str],
 ) -> DataFrame:
-    """Shared snapshot/chord compilation after visibility is set up:
-    table folds become per-key states (one aggregate, or the salted
-    two stages when a latest-N frame rides along), finalized after
-    the spine join; the rest are direct aggregates, numflips (window
-    helpers), groups and distincts."""
+    """Shared snapshot/chord compilation after visibility is set up.
+    Table folds become per-key states: one aggregate over ``rows`` (or
+    the salted two stages over ``base`` when a latest-N frame rides
+    along), finalized in the last projection; the rest are direct
+    aggregates, numflips (window helpers), groups and distincts over
+    the visible ``base``, left-joined by key. ``spine=None`` makes that
+    single-stage aggregate the spine: run over every fact (visibility
+    sits inside each condition), it has one row per entity."""
     tcol = plan.time_col
+    kcols = [ident(k) for k in keys]
+    order = ", ".join(_order_cols(plan))
 
-    def vis(f: Feature) -> Column:
+    def vis(f: Feature) -> str:
         return _visibility(f, qt, tcol)
 
     group_feats = [f for f in plan.features if f.group is not None]
@@ -399,35 +456,37 @@ def _compile_scoped(
     direct_feats = [
         f for f in scalar_feats if f.latest is None and not monoid.has_state(f)
     ]
-    out = spine
+    # the last projection's expression per output column (default:
+    # the joined column of that name)
+    final: dict[str, str] = {}
     single = [] if latest_feats else folds
-    if latest_feats:
-        lat = _two_stage(base, plan, folds, latest_feats, qt, keys)
-        out = out.join(lat, on=keys, how="left")
-    if single or direct_feats:
-        agged = base.groupBy(*keys).agg(
-            F.count(F.lit(1)).alias("__n"),
+    out = spine
+    if spine is None or single or direct_feats:
+        agged = rows.groupBy(*keys).agg(
+            # the visible rows: 0 when an entity has facts, none visible
+            named(f"count_if({ident(tcol)} < {qt})", "__n"),
             *[
-                monoid.state(f, plan, vis(f), qt, merge_key=False).alias(_st(f))
+                named(monoid.state(f, plan, vis(f), qt, merge_key=False), _st(f))
                 for f in single
             ],
-            *[_agg_col(f, vis(f), tcol) for f in direct_feats],
+            *[named(_agg_col(f, vis(f), tcol), f.name) for f in direct_feats],
         )
-        out = out.join(agged, on=keys, how="left")
+        out = agged if spine is None else out.join(agged, on=keys, how="left")
         for f in direct_feats:
             if f.agg in _DIRECT_EMPTY:
                 # no visible facts at all: the fold's empty value (a
                 # poisoned null, from a present row, stays null)
-                out = out.withColumn(
-                    f.name,
-                    F.when(F.col("__n").isNull(), _DIRECT_EMPTY[f.agg]())
-                    .otherwise(F.col(f.name)),
+                final[f.name] = (
+                    f"CASE WHEN coalesce(__n, 0) = 0 THEN {_DIRECT_EMPTY[f.agg]}"
+                    f" ELSE {ident(f.name)} END"
                 )
-        out = out.drop("__n")
+    if latest_feats:
+        lat = _two_stage(base, plan, folds, latest_feats, qt, keys)
+        out = out.join(lat, on=keys, how="left")
     if flip_feats:
         fbase = _prev_values(base, plan, flip_feats, vis, keys)
         agged = fbase.groupBy(*keys).agg(
-            *[monoid.state(f, plan, vis(f), qt).alias(_st(f)) for f in flip_feats]
+            *[named(monoid.state(f, plan, vis(f), qt), _st(f)) for f in flip_feats]
         )
         out = out.join(agged, on=keys, how="left")
     # FUSE group features that share (group key, window, where,
@@ -458,56 +517,29 @@ def _compile_scoped(
         fused_feats.extend(batch)
         f0 = batch[0]
         gk = _key_str(base, f0.group)
-        rows = base.where(
-            _visibility(f0, qt, tcol) & F.expr(f0.group).isNotNull()
-        ).select(
-            *[F.col(k) for k in keys],
-            gk.alias("__gk"),
-            F.expr(f0.group).alias("__gkr"),
-            *[F.expr(f.expr).alias(f"__gv{i}") for i, f in enumerate(batch)],
+        grows = base.where(f"{vis(f0)} AND ({f0.group}) IS NOT NULL").selectExpr(
+            *kcols,
+            f"{gk} AS __gk",
+            f"({f0.group}) AS __gkr",
+            *[f"({f.expr}) AS __gv{i}" for i, f in enumerate(batch)],
             *_order_cols(plan),
         )
-        per_aggs: list[Column] = []
+        per_aggs: list[Column] = [F.expr("min(__gkr) AS __gkr")]
         for i, f in enumerate(batch):
-            gv = F.col(f"__gv{i}")
             per_aggs.append(
-                _group_fold(f, plan, F.lit(True), qt, gv).alias(f"__v{i}")
+                F.expr(f"{_group_fold(f, plan, 'true', qt, f'__gv{i}')} AS __v{i}")
             )
-            per_aggs.append(F.count(gv).alias(f"__n{i}"))
-        per_key = rows.groupBy(*keys, "__gk").agg(
-            F.min("__gkr").alias("__gkr"), *per_aggs
-        )
-        map_aggs = [
-            F.map_from_entries(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                F.col(f"__n{i}") > 0,
-                                F.struct(
-                                    F.col("__gkr").alias("r"),
-                                    F.col("__gk").alias("k"),
-                                    F.col(f"__v{i}").alias("v"),
-                                ),
-                            )
-                        )
-                    ),
-                    lambda e: F.struct(
-                        e["k"].alias("key"), e["v"].alias("value")
-                    ),
-                )
-            ).alias(f.name)
+            per_aggs.append(F.expr(f"count(__gv{i}) AS __n{i}"))
+        per_key = grows.groupBy(*keys, "__gk").agg(*per_aggs)
+        m = per_key.groupBy(*keys).agg(*[
+            named(_entry_map(f"__n{i} > 0", f"__v{i}"), f.name)
             for i, f in enumerate(batch)
-        ]
-        m = per_key.groupBy(*keys).agg(*map_aggs)
+        ])
         out = out.join(m, on=keys, how="left")
         for f in batch:
-            val = F.coalesce(
-                F.col(f.name), F.expr("map()").cast(feature_dtype(f))
-            )
-            out = out.withColumn(
-                f.name,
-                F.when(F.size(val) <= F.lit(plan.max_group_size), val),
+            val = f"coalesce({ident(f.name)}, CAST(map() AS {feature_dtype(f)}))"
+            final[f.name] = (
+                f"CASE WHEN size({val}) <= {plan.max_group_size} THEN {val} END"
             )
     for f in group_feats:
         if f in fused_feats:
@@ -517,54 +549,41 @@ def _compile_scoped(
         # finished entries into a map per entity. Rows are pre-filtered
         # by this feature's full visibility so absent keys never
         # surface with init values (executor parity).
-        ex = F.expr(f.expr)
+        ex, gexpr = f"({f.expr})", f"({f.group})"
         gk = _key_str(base, f.group)
         pgf = f.post_group_filter
         # skip_nulls (enforced by the support gate) drops null values
         # AND null group keys, like the Arrow executors
-        ok = ex.isNotNull() & F.expr(f.group).isNotNull()
+        ok = f"{ex} IS NOT NULL AND {gexpr} IS NOT NULL"
         if f.skip_nulls and pgf is not None:
             # post-group filter (t02-groups:11-13, ToCore/Fold.hs:
             # 275-285): every visible fact ESTABLISHES its key — only
             # the fold step is guarded, so fully-filtered keys emit
             # the fold's init. A null element still establishes but
             # never reaches the guarded step (skip_nulls).
-            rows = base.where(
-                _visibility(f, qt, tcol) & F.expr(f.group).isNotNull()
-            ).select(
-                *[F.col(k) for k in keys],
-                gk.alias("__gk"),
-                F.expr(f.group).alias("__gkr"),
-                ex.alias("__gv"),
-                (
-                    F.coalesce(F.expr(pgf).cast("boolean"), F.lit(False))
-                    & ex.isNotNull()
-                ).alias("__pgok"),
-                F.lit(0).alias("__gp"),
-                *_order_cols(plan),
+            grows = base.where(f"{vis(f)} AND {gexpr} IS NOT NULL").selectExpr(
+                *kcols, f"{gk} AS __gk", f"{gexpr} AS __gkr", f"{ex} AS __gv",
+                f"coalesce(CAST(({pgf}) AS BOOLEAN), false) AND {ex} IS NOT NULL"
+                " AS __pgok",
+                "0 AS __gp", *_order_cols(plan),
             )
         elif f.skip_nulls:
             # skip_nulls: null elements / null keys silently drop
-            rows = base.where(_visibility(f, qt, tcol) & ok).select(
-                *[F.col(k) for k in keys],
-                gk.alias("__gk"),
-                F.expr(f.group).alias("__gkr"),
-                ex.alias("__gv"),
-                F.lit(True).alias("__pgok"),
-                F.lit(0).alias("__gp"),
-                *_order_cols(plan),
+            grows = base.where(f"{vis(f)} AND {ok}").selectExpr(
+                *kcols, f"{gk} AS __gk", f"{gexpr} AS __gkr", f"{ex} AS __gv",
+                "true AS __pgok", "0 AS __gp", *_order_cols(plan),
             )
         else:
             # Possibly semantics: ANY visible null element or null
             # key poisons the WHOLE map (executor parity, t03.1) —
             # keep the row as a poison marker instead of dropping it
-            rows = base.where(_visibility(f, qt, tcol)).select(
-                *[F.col(k) for k in keys],
-                F.when(ok, gk).alias("__gk"),
-                F.when(ok, F.expr(f.group)).alias("__gkr"),
-                F.when(ok, ex).alias("__gv"),
-                F.lit(True).alias("__pgok"),
-                F.when(ok, 0).otherwise(1).alias("__gp"),
+            grows = base.where(vis(f)).selectExpr(
+                *kcols,
+                f"CASE WHEN {ok} THEN {gk} END AS __gk",
+                f"CASE WHEN {ok} THEN {gexpr} END AS __gkr",
+                f"CASE WHEN {ok} THEN {ex} END AS __gv",
+                "true AS __pgok",
+                f"CASE WHEN {ok} THEN 0 ELSE 1 END AS __gp",
                 *_order_cols(plan),
             )
         if f.group_latest is not None:
@@ -572,124 +591,83 @@ def _compile_scoped(
             # (t17-latest:4-8) before the guarded fold. The rank
             # window partitions on the same (keys, __gk) the per-key
             # aggregate groups on, so Catalyst reuses one exchange.
-            wgl = W.partitionBy(
-                *[F.col(k) for k in keys], F.col("__gk")
-            ).orderBy(*[c.desc() for c in _order_cols(plan)])
-            rows = (
-                rows.withColumn("__rn", F.row_number().over(wgl))
-                .where(F.col("__rn") <= F.lit(f.group_latest))
+            desc = ", ".join(f"{c} DESC" for c in _order_cols(plan))
+            grows = (
+                grows.selectExpr(
+                    "*", f"row_number() {_over([*kcols, '__gk'], desc)} AS __rn"
+                )
+                .where(f"__rn <= {f.group_latest}")
                 .drop("__rn")
             )
         # a guarded-out row (post-group filter) still establishes its
         # key; a fully-guarded key's slot holds the fold's empty value
         # (executor _EMPTY parity: the t02 'counts of zero')
-        per_key = rows.groupBy(*keys, "__gk").agg(
-            _group_fold(f, plan, F.col("__pgok"), qt, F.col("__gv")).alias("__v"),
-            F.max("__gp").alias("__gp"),
-            F.min("__gkr").alias("__gkr"),
+        per_key = grows.groupBy(*keys, "__gk").agg(
+            F.expr(f"{_group_fold(f, plan, '__pgok', qt, '__gv')} AS __v"),
+            F.expr("max(__gp) AS __gp"),
+            F.expr("min(__gkr) AS __gkr"),
         )
-        # Data.Map iteration order (plans/maporder.py): sort entries
-        # by the TYPED key before assembling the map — `group fold
-        # (k, v)` postcomps and rendered maps then iterate exactly as
-        # the reference's Data.Map accumulator does
+        poison = ident(f"__poison_{f.name}")
         m = per_key.groupBy(*keys).agg(
-            F.map_from_entries(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                F.col("__gk").isNotNull(),
-                                F.struct(
-                                    F.col("__gkr").alias("r"),
-                                    F.col("__gk").alias("k"),
-                                    F.col("__v").alias("v"),
-                                ),
-                            )
-                        )
-                    ),
-                    lambda e: F.struct(e["k"].alias("key"), e["v"].alias("value")),
-                )
-            ).alias(f.name),
-            F.max("__gp").alias(f"__poison_{f.name}"),
+            named(_entry_map("__gk IS NOT NULL", "__v"), f.name),
+            F.expr(f"max(__gp) AS {poison}"),
         )
         out = out.join(m, on=keys, how="left")
-        val = F.coalesce(
-            F.col(f.name), F.expr("map()").cast(feature_dtype(f))
-        )
+        val = f"coalesce({ident(f.name)}, CAST(map() AS {feature_dtype(f)}))"
         # maxMapSize analogue: overflow -> error value (null);
         # Possibly poison -> null map
-        out = out.withColumn(
-            f.name,
-            F.when(
-                (F.size(val) <= F.lit(plan.max_group_size))
-                & (F.coalesce(F.col(f"__poison_{f.name}"), F.lit(0)) == 0),
-                val,
-            ),
-        ).drop(f"__poison_{f.name}")
+        final[f.name] = (
+            f"CASE WHEN size({val}) <= {plan.max_group_size}"
+            f" AND coalesce({poison}, 0) = 0 THEN {val} END"
+        )
     for f in dist_feats:
         # `distinct k`: first fact per (entity, key) in stream order
         # (ToCore/Fold.hs:477-559), then a plain aggregate over those
         # firsts — one rank exchange + one agg exchange.
-        ex = F.expr(f.expr)
-        vis = _visibility(f, qt, tcol)
-        key_ok = F.expr(f.distinct).isNotNull()
+        dk = f"({f.distinct})"
         # skip_nulls drops null elements before the firsts pass; in
         # Possibly mode they stay — a null FIRST poisons via _agg_col
-        cond = vis & key_ok & (ex.isNotNull() if f.skip_nulls
-                               else F.lit(True))
-        w = W.partitionBy(
-            *[F.col(k) for k in keys], F.expr(f.distinct)
-        ).orderBy(*_order_cols(plan))
+        cond = f"{vis(f)} AND {dk} IS NOT NULL"
+        if f.skip_nulls:
+            cond += f" AND ({f.expr}) IS NOT NULL"
         firsts = (
             base.where(cond)
-            .withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
+            .selectExpr("*", f"row_number() {_over([*kcols, dk], order)} AS __rn")
+            .where("__rn = 1")
         )
-        marker = f"__nd_{f.name}"
+        marker, dv = ident(f"__nd_{f.name}"), ident(f"__dv_{f.name}")
         if monoid.has_state(f):
-            val = monoid.state(f, plan, F.lit(True), qt, merge_key=False)
+            val = monoid.state(f, plan, "true", qt, merge_key=False)
         else:
-            val = _agg_col(f, F.lit(True), tcol)
+            val = _agg_col(f, "true", tcol)
         agged = firsts.groupBy(*keys).agg(
-            F.count(F.lit(1)).alias(marker), val.alias("__dv")
+            F.expr(f"count(1) AS {marker}"), F.expr(f"{val} AS {dv}")
         )
         out = out.join(agged, on=keys, how="left")
         if monoid.has_state(f):
-            val = monoid.finalize(f, F.col("__dv"))
+            val = monoid.finalize(f, dv)
         else:
-            val = F.when(
-                F.col(marker).isNull(), _DIRECT_EMPTY[f.agg]()
-            ).otherwise(F.col("__dv"))
+            val = f"CASE WHEN {marker} IS NULL THEN {_DIRECT_EMPTY[f.agg]} ELSE {dv} END"
         # bounded distinct state (maxMapSize, t03 ':set max-map-size'):
         # more distinct keys than the bound -> error value (null)
-        out = out.withColumn(
-            f.name,
-            F.when(
-                F.coalesce(F.col(marker), F.lit(0))
-                <= F.lit(plan.max_group_size),
-                val,
-            ),
-        ).drop(marker, "__dv")
+        val = f"CASE WHEN coalesce({marker}, 0) <= {plan.max_group_size} THEN {val} END"
         if not f.skip_nulls:
             # a null distinct KEY anywhere visible poisons the whole
             # fold (Possibly key, t03.1 — executor parity)
-            kp = f"__kp_{f.name}"
-            pois = base.where(vis & ~key_ok).groupBy(*keys).agg(
-                F.lit(1).alias(kp)
+            kp = ident(f"__kp_{f.name}")
+            pois = base.where(f"{vis(f)} AND {dk} IS NULL").groupBy(*keys).agg(
+                F.expr(f"1 AS {kp}")
             )
-            out = out.join(pois, on=keys, how="left").withColumn(
-                f.name,
-                F.when(F.col(kp).isNull(), F.col(f.name)),
-            ).drop(kp)
+            out = out.join(pois, on=keys, how="left")
+            val = f"CASE WHEN {kp} IS NULL THEN {val} END"
+        final[f.name] = val
     folded = {f.name for f in scalar_feats if f not in direct_feats}
-    return out.select(
-        *keys,
-        *[
-            monoid.finalize(f, F.col(_st(f))).alias(f.name)
-            if f.name in folded else F.col(f.name)
-            for f in plan.features
-        ],
-    )
+    return out.selectExpr(*kcols, *[
+        f"{monoid.finalize(f, ident(_st(f)))} AS {ident(f.name)}"
+        if f.name in folded
+        else f"{final.get(f.name, ident(f.name))} AS {ident(f.name)}"
+        for f in plan.features
+    ])
 
 
 def compile_native(
@@ -726,8 +704,10 @@ def compile_native(
     def _finalize(out: DataFrame) -> DataFrame:
         # re-emit CSE-shared fold columns, then run the postcomp stage
         # (Core/Program/Program.hs:33-36) on the aggregated frame
-        for dup, kept in _dups.items():
-            out = out.withColumn(dup, F.col(kept))
+        if _dups:
+            out = out.selectExpr("*", *[
+                f"{ident(kept)} AS {ident(dup)}" for dup, kept in _dups.items()
+            ])
         now_sql = (
             f"TIMESTAMP '{snapshot}'"
             if snapshot is not None
@@ -736,17 +716,24 @@ def compile_native(
         return apply_postcomps(out, full, now_sql=now_sql)
 
     if snapshot is not None:
-        qt = F.lit(snapshot).cast("timestamp")
-        # pre-filter to the visible range -> parquet pushdown /
-        # partition pruning; per-feature windows re-check inside.
-        base = facts.where(F.col(tcol) < qt)
-        spine = facts.select(ecol).distinct()
-        return _finalize(_compile_scoped(spine, base, plan, qt, [ecol]))
+        qt = snapshot_sql(snapshot)
+        # the visible range pre-filters the paths beside the fold
+        # aggregate -> parquet pushdown / partition pruning; windows
+        # re-check inside. The fold aggregate itself reads every fact
+        # and is the spine (entities with no visible facts included).
+        base = facts.where(f"{ident(tcol)} < {qt}")
+        return _finalize(_compile_scoped(None, facts, base, plan, qt, [ecol]))
 
-    qt = F.col("query_time")
+    qt = ident("query_time")
     keys = [ecol, "query_time"] + (["label"] if "label" in chords.columns else [])
-    rhs = F.broadcast(chords) if broadcast_chords else chords
+    # facts meet each DISTINCT chord once (a duplicated chord row would
+    # count its facts twice); the full chord table is the spine, so
+    # every chord row still gets its output row. Spark drops the
+    # distinct when the chord table is already unique on the keys.
+    rhs = chords.select(*keys).distinct()
+    if broadcast_chords:
+        rhs = F.broadcast(rhs)
     base = facts.join(rhs, on=ecol, how="inner").where(
-        F.col(tcol) < qt
+        f"{ident(tcol)} < {qt}"
     )
-    return _finalize(_compile_scoped(chords, base, plan, qt, keys))
+    return _finalize(_compile_scoped(chords, base, base, plan, qt, keys))

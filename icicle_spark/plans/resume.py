@@ -35,15 +35,18 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from icicle_spark.plans import monoid
 from icicle_spark.plans.ir import Agg, Feature, Plan, apply_postcomps
+from icicle_spark.plans.monoid import ident
 from icicle_spark.plans.native import (
     _feature_native,
     _prev_values,
     _visibility,
+    named,
     prepare_facts,
+    snapshot_sql,
 )
 
 
@@ -79,24 +82,25 @@ def fold_states(facts: DataFrame, plan: Plan, as_of: Any) -> DataFrame:
         raise ValueError("plan not resumable")
     plan = plan.condensed()
     ecol, tcol = plan.entity_col, plan.time_col
-    qt = F.lit(as_of).cast("timestamp")
+    qt = snapshot_sql(as_of)
 
-    def vis(f: Feature) -> Column:
+    def vis(f: Feature) -> str:
         return _visibility(f, qt, tcol)
 
     # same element semantics as compile_native: tombstones null every
     # non-key column (so they poison / drop), filter_let binds
     # materialize (so the Some pattern fails on null binds)
-    base = prepare_facts(facts, plan).where(F.col(tcol) < qt)
+    base = prepare_facts(facts, plan).where(f"{ident(tcol)} < {qt}")
     # windowed features carry no state: resume recomputes them from
     # the increment (see required_history)
     stateful = [f for f in plan.features if f.window is None]
     if not stateful:  # all-windowed plan: checkpoint is just the entity set
-        return base.select(ecol).distinct().withColumn("__ck_time", qt)
+        return base.select(ecol).distinct().withColumn("__ck_time", F.expr(qt))
     base = _prev_values(base, plan, _flips(stateful), vis, [ecol])
     return base.groupBy(ecol).agg(
-        *[monoid.state(f, plan, vis(f), qt).alias(f"__f_{f.name}") for f in stateful]
-    ).withColumn("__ck_time", qt)
+        *[named(monoid.state(f, plan, vis(f), qt), f"__f_{f.name}") for f in stateful],
+        named(qt, "__ck_time"),
+    )
 
 
 def _check_layout(states: DataFrame, inc: DataFrame, feats: list[Feature]) -> None:
@@ -138,47 +142,46 @@ def resume_plan(
     full = plan
     plan, _dups = plan.stripped().cse()
     ecol, tcol = plan.entity_col, plan.time_col
-    qt = F.lit(snapshot).cast("timestamp")
+    qt = snapshot_sql(snapshot)
     stateful = [f for f in plan.features if f.window is None]
     cols = {f.name: f"__f_{f.name}" for f in plan.features}
     ck = states.select(F.max("__ck_time")).first()[0]
-    ckt = F.lit(ck).cast("timestamp")
+    ckt = snapshot_sql(ck)
+    t = ident(tcol)
 
-    def vis(f: Feature) -> Column:
+    def vis(f: Feature) -> str:
         # resumed folds read only facts from the checkpoint on; windowed
         # ones read their whole window (required_history)
         cond = _visibility(f, qt, tcol)
-        return cond & (F.col(tcol) >= ckt) if f.window is None else cond
+        return f"{cond} AND {t} >= {ckt}" if f.window is None else cond
 
     # a row filter the scan can push down: the increment, plus the
     # windows' lookback before the checkpoint
     hist = required_history(plan)
-    lo = ckt if hist is None else ckt - F.expr(f"INTERVAL {hist} DAYS")
-    inc = prepare_facts(new_facts, plan).where(
-        (F.col(tcol) >= lo) & (F.col(tcol) < qt)
-    )
+    lo = ckt if hist is None else f"{ckt} - INTERVAL {hist} DAYS"
+    inc = prepare_facts(new_facts, plan).where(f"{t} >= {lo} AND {t} < {qt}")
     inc = _prev_values(inc, plan, _flips(plan.features), vis, [ecol])
     inc_states = inc.groupBy(ecol).agg(*[
-        monoid.state(f, plan, vis(f), qt).alias(cols[f.name])
+        named(monoid.state(f, plan, vis(f), qt), cols[f.name])
         for f in plan.features
     ])
     _check_layout(states, inc_states, stateful)
-    ck_states = states.select(
-        ecol,
+    ck_states = states.selectExpr(
+        ident(ecol),
         *[
-            monoid.rebase(f, F.col(cols[f.name]), F.col("__ck_time"), qt)
-            .alias(cols[f.name])
+            f"{monoid.rebase(f, ident(cols[f.name]), '__ck_time', qt)}"
+            f" AS {ident(cols[f.name])}"
             for f in stateful
         ],
     )
     out = (
         ck_states.unionByName(inc_states, allowMissingColumns=True)
         .groupBy(ecol)
-        .agg(*[monoid.merge(f, F.col(cols[f.name])).alias(cols[f.name])
+        .agg(*[named(monoid.merge(f, ident(cols[f.name])), cols[f.name])
                for f in plan.features])
-        .select(
-            ecol,
-            *[monoid.finalize(f, F.col(cols[f.name])).alias(f.name)
+        .selectExpr(
+            ident(ecol),
+            *[f"{monoid.finalize(f, ident(cols[f.name]))} AS {ident(f.name)}"
               for f in plan.features],
         )
     )

@@ -265,3 +265,41 @@ def test_chords_derived_from_facts_every_strategy(spark, data):
                 out[c].astype("float64"), ref[c].astype("float64"),
                 equal_nan=True,
             ), (s, c)
+
+
+def test_duplicate_chord_rows_every_strategy(spark):
+    """Exact duplicate chord rows each get their own output row, and
+    each counts the entity's facts once (joining the facts to the
+    chord rows themselves would fold them once per duplicate)."""
+    from datetime import datetime
+
+    facts = spark.createDataFrame(
+        [
+            ("a", datetime(2024, 1, 1), 5.0, 0),
+            ("a", datetime(2024, 1, 2), 10.0, 1),
+            ("a", datetime(2024, 3, 1), 100.0, 2),
+            ("b", datetime(2024, 1, 5), 1.0, 3),
+        ],
+        "entity string, time timestamp, value double, seq bigint",
+    )
+    qt = datetime(2024, 2, 1)
+    chords = spark.createDataFrame(
+        [("a", qt), ("a", qt), ("b", qt), ("c", qt)],
+        "entity string, query_time timestamp",
+    )
+    plan = Plan(
+        [
+            Feature("s", Agg.SUM, "value", skip_nulls=True),
+            Feature("c", Agg.COUNT, "value", skip_nulls=True),
+            Feature("l2", Agg.SUM, "value", latest=2, skip_nulls=True),
+        ],
+        entity_col="entity", time_col="time", seq_col="seq",
+    )
+    want = [("a", 15.0, 2, 15.0), ("a", 15.0, 2, 15.0), ("b", 1.0, 1, 1.0),
+            ("c", 0.0, 0, 0.0)]
+    for s in ("cogroup", "auto", "native", "vectorized"):
+        got = sorted(
+            (r.entity, r.s, r.c, r.l2)
+            for r in run_plan(facts, plan, chords=chords, strategy=s).collect()
+        )
+        assert got == want, s

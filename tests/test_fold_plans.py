@@ -240,30 +240,37 @@ def test_fusion_and_cse(spark):
     assert [f.name for f in condensed.features] == ["a", "b"]
 
 
-def _exchange_keys(df) -> list[tuple[str, ...]]:
-    """Hash-partitioning keys (attribute names, ids stripped) of every
-    shuffle exchange in the physical plan, with AQE off so the plan is
-    the one Catalyst planned rather than a re-optimized stage graph."""
-    import re
-
+def _physical(df) -> str:
+    """The physical plan with AQE off, so the plan is the one Catalyst
+    planned rather than a re-optimized stage graph."""
     spark = df.sparkSession
     prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        return df._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
+
+
+def _exchange_keys(df) -> list[tuple[str, ...]]:
+    """Hash-partitioning keys (attribute names, ids stripped) of every
+    shuffle exchange in the physical plan."""
+    import re
+
     return [
         tuple(re.sub(r"#\d+L?$", "", a.strip()) for a in m.split(","))
-        for m in re.findall(r"Exchange hashpartitioning\(([^)]*), \d+", plan)
+        for m in re.findall(
+            r"Exchange hashpartitioning\(([^)]*), \d+", _physical(df)
+        )
     ]
 
 
 def test_salted_plan_exchanges(spark, facts):
-    """A snapshot plan with a latest-N feature shuffles the facts once
-    by (entity, salt): the rank window and the stage-1 aggregate share
-    that exchange, and stage 2 adds one entity exchange. The spine's
-    distinct is the only other exchange."""
+    """A snapshot plan with a latest-N feature shuffles the visible
+    facts once by (entity, salt): the rank window and the stage-1
+    aggregate share that exchange, and stage 2 adds one entity
+    exchange. The spine, the fold aggregate over every fact, is the
+    only other exchange."""
     plan = Plan(
         [
             Feature("s", Agg.SUM, "n_tok", skip_nulls=True),
@@ -276,7 +283,71 @@ def test_salted_plan_exchanges(spark, facts):
 
 
 def test_single_stage_plan_exchanges(spark, facts):
-    """Without latest-N every fold is one aggregate behind one entity
-    exchange of the facts (plus the spine's)."""
-    keys = _exchange_keys(compile_native(facts, _plan(True), snapshot=SNAPSHOT))
-    assert keys == [("doc_id",), ("doc_id",)]
+    """Without latest-N every fold is one aggregate over the facts: one
+    scan, one entity exchange and no join. The aggregate is its own
+    spine, so an entity whose facts all fall at or after the snapshot
+    still gets its row, with empty folds."""
+    plan = _plan(True)
+    df = compile_native(facts, plan, snapshot=SNAPSHOT)
+    phys = _physical(df)
+    assert _exchange_keys(df) == [("doc_id",)]
+    # the cached facts are the one scan (their own plan prints below it)
+    assert phys.count("InMemoryTableScan") == 1, phys
+    assert "Join" not in phys, phys
+    late = spark.createDataFrame(
+        [("late", [1], 5, "web", pd.Timestamp(SNAPSHOT).to_pydatetime(), False, 1)],
+        facts.schema,
+    )
+    row = (
+        compile_native(facts.unionByName(late), plan, snapshot=SNAPSHOT)
+        .where("doc_id = 'late'").collect()
+    )
+    assert len(row) == 1
+    assert row[0].sum_ntok == 0.0 and row[0].cnt == 0
+    assert row[0].mean_ntok is None and row[0].newest_ntok is None
+
+
+def _jvm_commands(build) -> int:
+    """py4j commands ``build()`` sends, memory-release messages (the
+    ``m`` command py4j sends when a Python proxy is collected) aside."""
+    from py4j import java_gateway
+
+    orig = java_gateway.GatewayClient.send_command
+    n = 0
+
+    def counted(self, command, *a, **k):
+        nonlocal n
+        if not command.startswith("m\n"):
+            n += 1
+        return orig(self, command, *a, **k)
+
+    java_gateway.GatewayClient.send_command = counted
+    try:
+        build()
+    finally:
+        java_gateway.GatewayClient.send_command = orig
+    return n
+
+
+@pytest.mark.parametrize("scope", ["snapshot", "chords"])
+def test_compile_native_jvm_round_trips(spark, scope):
+    """A fold plan is built as Spark SQL text and handed to the JVM one
+    expression at a time: compiling the 7-fold contract plan takes a
+    bounded number of py4j round trips (a Column-tree build took
+    about 1,370)."""
+    from pyspark.sql import functions as F
+
+    from __spark_entry__ import _FOLD_FEATURES
+
+    ev = spark.createDataFrame(
+        [("u1", pd.Timestamp("2024-01-01").to_pydatetime(), 1, 2.0)],
+        "user_id string, ts timestamp, event_id bigint, value double",
+    )
+    plan = Plan(_FOLD_FEATURES, entity_col="user_id", time_col="ts",
+                seq_col="event_id")
+    kw = (
+        {"snapshot": SNAPSHOT} if scope == "snapshot"
+        else {"chords": ev.groupBy("user_id").agg(F.max("ts").alias("query_time"))}
+    )
+    compile_native(ev, plan, **kw)  # warm the gateway's class lookups
+    assert _jvm_commands(lambda: compile_native(ev, plan, **kw)) <= 250

@@ -3,6 +3,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from icicle_spark.lineage import plan_fingerprint, run_with_lineage
 from icicle_spark.plans import Agg, Feature, Plan
 from icicle_spark.sources.fixtures import SNAPSHOT, token_facts
@@ -44,6 +46,12 @@ def test_lineage_manifest(spark, tmp_path):
     # the run record names the backend the strategy chose, and why
     assert on_disk["backend"] == rec["backend"] == "native"
     assert on_disk["route_reason"] == rec["route_reason"] == "strategy='native'"
+    # wall time splits into the plan build and the write
+    for k in ("build_seconds", "write_seconds"):
+        assert on_disk[k] == rec[k] >= 0
+    assert rec["build_seconds"] + rec["write_seconds"] == pytest.approx(
+        rec["wall_seconds"], abs=0.002
+    )
     # fingerprint is stable and order-insensitive
     plan2 = Plan(
         list(reversed(plan.features)),

@@ -14,7 +14,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from icicle_spark.plans import Agg, Feature, Plan, Window, run_plan
@@ -146,7 +146,24 @@ def _bp_corpus(draw):
     )
 
 
+# ten one-token docs over four sources: class packing puts them in
+# 2 bins (its class-8 bins mix sources), FFD packs each source alone
+# and needs 4 — the shape of the `7 <= 6` failures of the old
+# "FFD never uses more bins than class packing" property
+_BP_MANY_SOURCES = (
+    pd.DataFrame(
+        {
+            "source": [f"s{i % 4}" for i in range(10)],
+            "doc_id": [f"d{i:04d}" for i in range(10)],
+            "n_tok": np.ones(10, dtype="int64"),
+        }
+    ),
+    8,
+)
+
+
 @given(data=_bp_corpus())
+@example(data=_BP_MANY_SOURCES)
 @settings(
     max_examples=12,
     deadline=None,
@@ -155,8 +172,9 @@ def _bp_corpus(draw):
 def test_bin_pack_properties(spark, data):
     """For random corpora and capacities, BOTH strategies: every doc
     assigned exactly once, no bin overflows, class bins never exceed
-    their class count, and FFD never uses more bins than class
-    packing."""
+    their class count; FFD is first fit (any two bins of one source
+    hold more than seq_len together) and per source never uses more
+    bins than class packing of that source alone would."""
     from icicle_spark.operators.packing import (
         bin_fill_stats,
         bin_pack_documents,
@@ -177,7 +195,17 @@ def test_bin_pack_properties(spark, data):
     assert (st_c.n_docs <= st_c.cls).all()
     st_f = bin_fill_stats(ffd_assign, L, segment_col="source").toPandas()
     assert (st_f.fill_tokens <= L).all()
-    assert len(st_f) <= len(st_c)
+    # class packing numbers each class across every source, so its
+    # bins mix sources and its total is no bound on FFD's; per source,
+    # a class-c bin holds c docs (the harmonic count below) and FFD,
+    # which opens bins class by class, never needs more
+    cls = L // pdf.n_tok
+    per_source = pdf.assign(cls=cls).groupby(["source", "cls"]).size()
+    harmonic = sum(-(-n // c) for (_, c), n in per_source.items())
+    assert len(st_f) <= harmonic
+    for _, g in st_f.groupby("source"):
+        fills = sorted(g.fill_tokens)
+        assert len(fills) < 2 or fills[0] + fills[1] > L
 
 
 # ------------------------------------------------------- fim transform
