@@ -261,7 +261,7 @@ def q_asof_chord_native(spark: SparkSession, sf_dir: str) -> DataFrame:
         seq_col="event_id",
     )
     return _round_doubles(
-        compile_native(_events(spark, sf_dir), plan, chords=chords).drop("query_time")
+        compile_native(ev, plan, chords=chords).drop("query_time")
     )
 
 

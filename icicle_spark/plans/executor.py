@@ -470,11 +470,12 @@ def choose_backend(
     Returns (backend, reason); backend is one of 'native' (Catalyst
     compiler), 'vexec' (Arrow snapshot executor), 'chordexec' (Arrow
     chord executor) or 'cogroup' (per-entity applyInPandas). 'auto'
-    goes native exactly when the compiler takes the plan and no
-    feature keeps a latest-N frame (measured faster on the Arrow
-    executors) — no Python worker at all. Otherwise it routes by
-    scope, as the explicit 'vectorized' strategy does, with cogroup
-    for what chordexec cannot fold."""
+    goes native exactly when the compiler takes the plan — no Python
+    worker at all. Otherwise it routes by scope, as the explicit
+    'vectorized' strategy does, with cogroup for what chordexec cannot
+    fold. An arranged store stays on vexec, which reads its layout in
+    place: native would re-read the source, a Python merge-on-read
+    scan for a store that is not compacted."""
     if strategy not in ("auto", "native", "vectorized", "cogroup"):
         raise ValueError(f"unknown strategy {strategy!r}")
     if assume_arranged:
@@ -488,19 +489,9 @@ def choose_backend(
         return "vexec", "assume_arranged: vexec reads the arranged layout"
     if strategy in ("native", "cogroup"):
         return strategy, f"strategy={strategy!r}"
-    supported = native_supported(plan)
-    if strategy == "auto" and supported:
-        latest = [
-            f.name for f in plan.features
-            if f.latest is not None or f.group_latest is not None
-        ]
-        if not latest:
-            return "native", "native_supported, no latest-N"
-        why = f"latest-N in {latest}"
-    elif strategy == "auto":
-        why = "not native_supported"
-    else:
-        why = "strategy='vectorized'"
+    if strategy == "auto" and native_supported(plan):
+        return "native", "native_supported"
+    why = "not native_supported" if strategy == "auto" else "strategy='vectorized'"
     if snapshot is not None:
         return "vexec", f"{why}: snapshot on vexec"
     if supports_chords(plan):
@@ -510,10 +501,6 @@ def choose_backend(
             "plan has folds outside the prefix-decomposable set; "
             "use strategy='cogroup' for chords"
         )
-    if supported:
-        # e.g. a latest-N group map: chordexec cannot fold it, and the
-        # Catalyst chord branch beats per-entity Python
-        return "native", f"{why}: chords not prefix-decomposable, native"
     return "cogroup", f"{why}: chords not prefix-decomposable, cogroup"
 
 
@@ -606,9 +593,9 @@ def run_plan(
     chords:   DataFrame (entity, query_time[, label]) — one output row
               per chord row (reference Runtime/Stencil.hs:121-134).
     strategy: 'auto' (``choose_backend``: the native Catalyst compiler
-              when it takes the plan and no feature has a latest-N
-              frame; else the vectorized executors by scope, and
-              per-entity cogroup for chords they cannot fold),
+              when it takes the plan; else the vectorized executors
+              by scope, and per-entity cogroup for chords they cannot
+              fold),
               'vectorized' (vexec for snapshots, chordexec for
               chords), 'cogroup' (per-entity applyInPandas), or
               'native' (Catalyst compiler — requires a native-supported

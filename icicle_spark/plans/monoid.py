@@ -22,11 +22,12 @@ expression as a tree of ``Column`` objects costs one py4j round trip
 per node. Every identifier is backtick-quoted by ``ident``; element
 strings are Spark SQL already and are embedded as ``(expr)``.
 
-Its consumers: native's single-stage aggregate (``state`` per key),
-native's salted two-stage aggregate (``state`` per (key, salt), then
-``merge`` per key), ``resume.fold_states`` (``state`` per entity: the
-checkpoint) and ``resume.resume_plan`` (the checkpoint rows unioned
-with the increment's states, then ``merge``). Each finalizes last.
+Its consumers: native's fold aggregate (``state`` per key), native's
+latest-N frames (``state`` per key over the top N rows of a
+grouped-limit window), ``resume.fold_states`` (``state`` per entity:
+the checkpoint) and ``resume.resume_plan`` (the checkpoint rows
+unioned with the increment's states, then ``merge``). Each finalizes
+last.
 
 States (p: a null element was seen, the Possibly poison):
 

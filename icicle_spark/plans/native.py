@@ -5,20 +5,23 @@ fold the table in ``plans.monoid`` covers is a partial state per key,
 finalized in the last projection; the feature set is split by
 execution need:
 
-* table folds without latest-N — ONE aggregate of states per key
-  (entity[, query_time]): one entity exchange, Spark's own partial
-  aggregation before it. At a snapshot this aggregate reads every
-  fact (visibility is inside each fold's condition) and is itself
-  the spine: one row per entity, no distinct and no join.
-* table folds + latest-N — ONE scan, two-stage salted aggregation:
-  stage 1 computes constant-size states per (key, salt-of-seq);
-  stage 2 merges them per key. Skew-immune: a hot entity holding 30%
-  of all rows spreads over ``_SALT_BUCKETS`` tasks. latest-N rides
-  along because top-N-by-(time,seq) is a monoid (local tail in stage
-  1, merged tail in stage 2). Measured alternative: a window-rank
-  implementation of latest-N did not finish in 10 minutes on the
-  skewed 8M-row bench (one task owns the hot entity's frame); the
-  salted path takes seconds.
+* table folds — ONE aggregate of states per key (entity[,
+  query_time]): one entity exchange, Spark's own partial aggregation
+  before it. At a snapshot this aggregate reads every fact
+  (visibility is inside each fold's condition) and is itself the
+  spine: one row per entity, no distinct and no join.
+* latest-N frames — a grouped-limit window per keep condition: the
+  visible facts the frame keeps, ranked newest first per key by
+  ``row_number()``, ``__rn <= N``, then the frame's table state per
+  key. Spark plans that filter as a partial ``WindowGroupLimit``
+  before the key exchange and a final one after it: at most N rows
+  per key and map partition cross the shuffle, so a hot entity's task
+  sorts a few rows per map partition, not its whole history, and
+  needs no salt. (An unlimited window-rank frame, whose one task
+  sorts and frames every fact of the hot entity, did not finish in 10
+  minutes on the skewed 8M-row bench.) Spark plans no grouped limit
+  past ``spark.sql.optimizer.windowGroupLimitThreshold`` (1000), so
+  longer frames are refused.
 * aggregates outside the table (count_distinct, distinct_values,
   max_by/min_by) — direct conditional aggregation per key.
 * numflips — prev-value helper column over an entity-time window,
@@ -36,7 +39,7 @@ column and each projection goes to the JVM as one string (``F.expr``
 or ``selectExpr``). A ``Column``-tree build costs a py4j round trip
 per node — about 1,370 for a 7-fold plan, against about 60 here.
 
-Fusion: N features still read the input ONCE (the analogue of the
+Fusion: N table folds read the input ONCE (the analogue of the
 reference's Core fusion,
 /root/reference/icicle-core/src/Icicle/Core/Program/Fusion.hs:37-81).
 
@@ -44,8 +47,9 @@ Scale: the visible-range filter pushes to the parquet/Iceberg scan
 (partition pruning on time) on every path but the snapshot spine;
 chord tables join by shuffle unless the caller asks for a broadcast
 (``broadcast_chords``: explicit ``native`` does, ``auto`` does
-not); exchanges carry only constant-size states, never
-raw fact rows, except the latest-N and numflips helper windows.
+not); exchanges carry constant-size states, at most N fact rows per
+key and map partition for a latest-N frame, and raw fact rows only
+for the numflips helper window.
 Plans the compiler can't express (custom folds, scan binds, outer
 latest frames, callables) raise; run_plan sends them to the Python
 executors.
@@ -91,8 +95,16 @@ _DISTINCT_NATIVE_AGGS = {
 }
 
 
+# Spark plans a rank filter as a grouped limit (``WindowGroupLimit``)
+# only up to spark.sql.optimizer.windowGroupLimitThreshold (default
+# 1000); a longer frame would be one unbounded window per entity
+_MAX_LATEST = 999
+
+
 def _feature_native(f: Feature) -> bool:
     if not isinstance(f.agg, Agg) or not isinstance(f.expr, str):
+        return False
+    if f.latest is not None and f.latest > _MAX_LATEST:
         return False
     if f.latest_outer is not None:
         # pre-filter latest frames would need a second rank stage;
@@ -332,61 +344,46 @@ def _prev_values(
     ])
 
 
-_SALT_BUCKETS = 64
-
-
 def _st(f: Feature) -> str:
     return f"__st_{f.name}"
 
 
-def _two_stage(
-    base: DataFrame,
-    plan: Plan,
-    folds: list[Feature],
-    latest_feats: list[Feature],
-    qt: str,
-    keys: list[str],
-) -> DataFrame:
-    """ONE scan for all table folds + latest features: stage 1 states
-    per (key, salt-of-seq), stage 2 merges them per key. The exchange
-    carries only constant-size states — skew-immune and single-pass
-    over the input (the multi-subtree alternative re-scans the table
-    once per feature family, 3-6x the I/O at 100 TB)."""
-    tcol = plan.time_col
-    t, s = ident(tcol), ident(plan.seq_col or tcol)
-    # salt MATERIALIZES as a column: the rank window partitions and
-    # the stage-1 groupBy then share one attribute, so Catalyst
-    # satisfies the aggregate's distribution with the window's
-    # exchange instead of re-shuffling all rows a second time (pinned
-    # by test_fold_plans' exchange tests)
-    base = base.selectExpr("*", f"pmod(xxhash64({s}), {_SALT_BUCKETS}) AS __salt")
-    # Rank stage: a salted exchange + Tungsten sort, then an O(n)
-    # running conditional count from the NEWEST row backwards =
-    # rank-from-end among each feature's own cond rows. Each stage-1
-    # frame then collects at most N structs per (key, salt) — object
-    # churn is bounded, unlike collecting the whole bucket (measured
-    # 85% of the fused pass) or an unbounded-following window frame
-    # (did not finish on the hot entity).
-    over = _over(
-        [*map(ident, keys), "__salt"], f"{t} DESC, {s} DESC",
-        " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW",
-    )
-    conds = {f.name: _visibility(f, qt, tcol) for f in folds}
-    ranks = []
-    for f in latest_feats:
-        cond = _visibility(f, qt, tcol)
+def _frame_order(f: Feature, plan: Plan) -> str:
+    """Newest first by the frame's own sort key: the (t, q, v[, b])
+    struct ``monoid.state`` sorts the frame by, descending (DESC puts
+    nulls last, the exact reverse of the struct's ascending order), so
+    rows tied on (time, seq) keep the same ones on every path."""
+    cols = [*_order_cols(plan), f"({f.expr})"]
+    if f.by is not None:
+        cols.append(f"({f.by})")
+    return ", ".join(f"{c} DESC" for c in cols)
+
+
+def _latest_frames(
+    base: DataFrame, plan: Plan, feats: list[Feature], qt: str, keys: list[str]
+) -> list[DataFrame]:
+    """Latest-N frames as grouped-limit windows, one per (keep
+    condition, frame order): the visible facts the frame keeps, ranked
+    newest first per key, the top N, then their table states per key.
+    One frame serves every feature that keeps the same rows in the
+    same order, each reading its own N off the rank."""
+    frames: dict[tuple[str, str], list[Feature]] = {}
+    for f in feats:
+        keep = _visibility(f, qt, plan.time_col)
         if f.skip_nulls:
-            cond = f"{cond} AND ({f.expr}) IS NOT NULL"
-        rk = ident(f"__rk_{f.name}")
-        ranks.append(f"sum(CASE WHEN {cond} THEN 1 ELSE 0 END) {over} AS {rk}")
-        conds[f.name] = f"{cond} AND {rk} <= {f.latest}"
-    feats = folds + latest_feats
-    s1 = base.selectExpr("*", *ranks).groupBy(*keys, "__salt").agg(
-        *[named(monoid.state(f, plan, conds[f.name], qt), _st(f)) for f in feats]
-    )
-    return s1.groupBy(*keys).agg(
-        *[named(monoid.merge(f, ident(_st(f))), _st(f)) for f in feats]
-    )
+            keep = f"{keep} AND ({f.expr}) IS NOT NULL"
+        frames.setdefault((keep, _frame_order(f, plan)), []).append(f)
+    out = []
+    for (keep, order), batch in frames.items():
+        rn = f"row_number() {_over([*map(ident, keys)], order)} AS __rn"
+        top = base.where(keep).selectExpr("*", rn).where(
+            f"__rn <= {max(f.latest for f in batch)}"
+        )
+        out.append(top.groupBy(*keys).agg(*[
+            named(monoid.state(f, plan, f"__rn <= {f.latest}", qt), _st(f))
+            for f in batch
+        ]))
+    return out
 
 
 def _group_fold(f: Feature, plan: Plan, cond: str, qt: str, gv: str) -> str:
@@ -423,13 +420,13 @@ def _compile_scoped(
     keys: list[str],
 ) -> DataFrame:
     """Shared snapshot/chord compilation after visibility is set up.
-    Table folds become per-key states: one aggregate over ``rows`` (or
-    the salted two stages over ``base`` when a latest-N frame rides
-    along), finalized in the last projection; the rest are direct
-    aggregates, numflips (window helpers), groups and distincts over
-    the visible ``base``, left-joined by key. ``spine=None`` makes that
-    single-stage aggregate the spine: run over every fact (visibility
-    sits inside each condition), it has one row per entity."""
+    Table folds become per-key states: one aggregate over ``rows``,
+    finalized in the last projection; the rest are direct aggregates,
+    latest-N frames and numflips (window helpers), groups and
+    distincts over the visible ``base``, left-joined by key.
+    ``spine=None`` makes that fold aggregate the spine: run over every
+    fact (visibility sits inside each condition), it has one row per
+    entity."""
     tcol = plan.time_col
     kcols = [ident(k) for k in keys]
     order = ", ".join(_order_cols(plan))
@@ -459,15 +456,14 @@ def _compile_scoped(
     # the last projection's expression per output column (default:
     # the joined column of that name)
     final: dict[str, str] = {}
-    single = [] if latest_feats else folds
     out = spine
-    if spine is None or single or direct_feats:
+    if spine is None or folds or direct_feats:
         agged = rows.groupBy(*keys).agg(
             # the visible rows: 0 when an entity has facts, none visible
             named(f"count_if({ident(tcol)} < {qt})", "__n"),
             *[
                 named(monoid.state(f, plan, vis(f), qt, merge_key=False), _st(f))
-                for f in single
+                for f in folds
             ],
             *[named(_agg_col(f, vis(f), tcol), f.name) for f in direct_feats],
         )
@@ -480,8 +476,7 @@ def _compile_scoped(
                     f"CASE WHEN coalesce(__n, 0) = 0 THEN {_DIRECT_EMPTY[f.agg]}"
                     f" ELSE {ident(f.name)} END"
                 )
-    if latest_feats:
-        lat = _two_stage(base, plan, folds, latest_feats, qt, keys)
+    for lat in _latest_frames(base, plan, latest_feats, qt, keys):
         out = out.join(lat, on=keys, how="left")
     if flip_feats:
         fbase = _prev_values(base, plan, flip_feats, vis, keys)
@@ -683,7 +678,7 @@ def compile_native(
     join instead of a broadcast — required when the chord table is
     itself at data scale (e.g. one chord per entity at 10^12 rows);
     AQE's skew-join splitting then spreads a hot entity's join across
-    tasks, and the downstream two-stage aggregation is salted anyway.
+    tasks, and the aggregates downstream combine map-side.
     """
     if (snapshot is None) == (chords is None):
         raise ValueError("exactly one of snapshot / chords required")

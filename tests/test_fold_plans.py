@@ -265,21 +265,44 @@ def _exchange_keys(df) -> list[tuple[str, ...]]:
     ]
 
 
-def test_salted_plan_exchanges(spark, facts):
-    """A snapshot plan with a latest-N feature shuffles the visible
-    facts once by (entity, salt): the rank window and the stage-1
-    aggregate share that exchange, and stage 2 adds one entity
-    exchange. The spine, the fold aggregate over every fact, is the
-    only other exchange."""
-    plan = Plan(
+def _latest_plan(n: int) -> Plan:
+    return Plan(
         [
             Feature("s", Agg.SUM, "n_tok", skip_nulls=True),
-            Feature("l3", Agg.MEAN, "n_tok", latest=3, skip_nulls=True),
+            Feature("ln", Agg.MEAN, "n_tok", latest=n, skip_nulls=True),
         ],
         entity_col="doc_id", time_col="event_time", seq_col="seq",
     )
-    keys = _exchange_keys(compile_native(facts, plan, snapshot=SNAPSHOT))
-    assert sorted(keys) == [("doc_id",), ("doc_id",), ("doc_id", "__salt")]
+
+
+def test_latest_frame_plan_limits(spark, facts):
+    """A latest-N frame is a grouped-limit window: Spark plans a partial
+    WindowGroupLimit below the frame's entity exchange and a final one
+    above it, so at most N rows per entity and map partition are
+    shuffled and no salt is needed. Spark plans the limit only up to
+    its windowGroupLimitThreshold, so a frame past 999 is not native
+    and `auto` keeps it on the Arrow executor."""
+    from icicle_spark.plans.executor import choose_backend
+    from icicle_spark.plans.native import native_supported
+
+    df = compile_native(facts, _latest_plan(3), snapshot=SNAPSHOT)
+    phys = _physical(df)
+    assert "__salt" not in phys, phys
+    # the frame's entity exchange and the spine's
+    assert _exchange_keys(df) == [("doc_id",), ("doc_id",)]
+    # the printed tree lists a node before its children: the final
+    # limit, then the entity exchange, then the partial limit
+    frame = phys[phys.index("WindowGroupLimit"):]
+    final = frame.index("row_number(), 3, Final")
+    exchange = frame.index("Exchange hashpartitioning(doc_id")
+    partial = frame.index("row_number(), 3, Partial")
+    assert final < exchange < partial, phys
+    assert phys.count("WindowGroupLimit") == 2, phys
+    assert native_supported(_latest_plan(999))
+    assert _physical(compile_native(
+        facts, _latest_plan(999), snapshot=SNAPSHOT)).count("WindowGroupLimit") == 2
+    assert not native_supported(_latest_plan(1000))
+    assert choose_backend(_latest_plan(1000), SNAPSHOT)[0] == "vexec"
 
 
 def test_single_stage_plan_exchanges(spark, facts):

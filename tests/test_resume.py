@@ -150,8 +150,8 @@ def test_resume_postcomp_parity(spark, facts):
 # inputs where they used to disagree: tied times (NEWEST/OLDEST must
 # order by (time, seq)), a 1.7e9 offset (variance must not cancel),
 # a null older than a Possibly-mode latest frame (poison is decided
-# inside the frame) and `latest 3 ~> sd` (resumable, so resume must
-# finish it).
+# inside the frame), `latest 3 ~> sd` (resumable, so resume must
+# finish it) and latest frames cut inside a tied time.
 _E, _TS, _SEQ, _V = "e", "t", "seq", "v"
 _DAY = pd.Timedelta(days=1)
 _BASE = pd.Timestamp("2024-01-01")
@@ -221,6 +221,14 @@ CASES = {
     "latest_sd": (_random_facts, [
         Feature("l3_sd", Agg.SD, _V, latest=3, skip_nulls=True),
     ]),
+    # frames under different conditions that cut inside a tied time:
+    # (time, seq) decides which rows every path keeps
+    "tied_latest_where": (_tied_facts, [
+        Feature("l1_hi", Agg.SUM, _V, latest=1, where=f"{_V} >= 1",
+                skip_nulls=True),
+        Feature("l3_lo", Agg.MEAN, _V, latest=3, where=f"{_V} < 2",
+                skip_nulls=True),
+    ]),
 }
 
 
@@ -252,7 +260,7 @@ def test_catalyst_paths_agree(spark, case):
     two = Plan(feats + [_ANCHOR], entity_col=_E, time_col=_TS, seq_col=_SEQ)
     ref = _sorted(run_plan(facts, two, snapshot=_SNAP, strategy="cogroup"))
     got = {
-        "native two-stage": _sorted(
+        "native": _sorted(
             run_plan(facts, two, snapshot=_SNAP, strategy="native")),
         "resume": _sorted(resume_plan(
             facts.where(F.col(_TS) >= F.lit(_CK).cast("timestamp")), two,
@@ -261,7 +269,7 @@ def test_catalyst_paths_agree(spark, case):
     if single:
         plain = Plan([f for f in feats if f.latest is None], entity_col=_E,
                      time_col=_TS, seq_col=_SEQ)
-        got["native single-stage"] = _sorted(
+        got["native, no frame"] = _sorted(
             run_plan(facts, plain, snapshot=_SNAP, strategy="native"))
     # one-pass (n, mean, m2) states round like Spark's own var_samp:
     # about eps * |mean| / sd = 1.3e-7 relative at this offset (the
@@ -280,20 +288,20 @@ def test_catalyst_paths_agree(spark, case):
         want = pdf[pdf[_TS] < pd.Timestamp(_SNAP)].groupby(_E)[_V].apply(
             lambda v: v.var())
         assert np.allclose(ref["var"], want.to_numpy(), rtol=1e-9, atol=0)
-        # the same plan at chords: `auto` folds it on chordexec's
-        # prefix sums, which must not cancel at the offset either
+        # the same plan at chords: chordexec folds it on prefix sums,
+        # which must not cancel at the offset either
         from icicle_spark.plans.executor import choose_backend
 
         chords = facts.select(_E).distinct().crossJoin(
             spark.createDataFrame(pd.DataFrame(
                 {"query_time": pd.to_datetime([_CK, _SNAP])}))
         )
-        assert choose_backend(two, None, chords)[0] == "chordexec"
+        assert choose_backend(two, None, chords, "vectorized")[0] == "chordexec"
         keys = [_E, "query_time"]
         a, b = (
             run_plan(facts, two, chords=chords, strategy=s).toPandas()
             .sort_values(keys).reset_index(drop=True)
-            for s in ("auto", "cogroup")
+            for s in ("vectorized", "cogroup")
         )
         assert (a[keys] == b[keys]).all().all()
         for c in ("var", "sd"):

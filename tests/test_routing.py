@@ -1,7 +1,7 @@
-"""run_plan(strategy="auto") routing: plain fold plans the native
-compiler takes run with no Python node in the executed plan; latest-N,
-pandas-only expressions and arranged stores keep their Arrow executor.
-Every routed answer matches the per-entity cogroup executor."""
+"""run_plan(strategy="auto") routing: every plan the native compiler
+takes, latest-N frames included, runs with no Python node in the
+executed plan; arranged stores keep their Arrow executor. Every routed
+answer matches the per-entity cogroup executor."""
 
 from __future__ import annotations
 
@@ -90,7 +90,7 @@ def _chords(events):
 def test_snapshot_folds_route_native(events):
     plan = _plan(FOLDS)
     assert choose_backend(plan, SNAP) == (
-        "native", "native_supported, no latest-N")
+        "native", "native_supported")
     out = run_plan(events, plan, snapshot=SNAP)
     assert _python_nodes(out) == []
     assert not _broadcast_hint(out)
@@ -101,7 +101,7 @@ def test_snapshot_folds_route_native(events):
 def test_chord_folds_route_native_without_broadcast_hint(events):
     plan, chords = _plan(CHORD_FOLDS), _chords(events)
     assert choose_backend(plan, chords=chords) == (
-        "native", "native_supported, no latest-N")
+        "native", "native_supported")
     out = run_plan(events, plan, chords=chords)
     assert _python_nodes(out) == []
     assert not _broadcast_hint(out)
@@ -129,34 +129,27 @@ def test_equality_where_routes_native(events):
     # on the native compiler
     plan = _plan(CLICKS)
     assert choose_backend(plan, SNAP) == (
-        "native", "native_supported, no latest-N")
+        "native", "native_supported")
     out = run_plan(events, plan, snapshot=SNAP)
     assert _python_nodes(out) == []
     _same(out, run_plan(events, plan, snapshot=SNAP, strategy="cogroup"),
           ["user_id"])
 
 
-@pytest.mark.parametrize("features,reason", [
-    (LATEST, "latest-N in ['latest5_sum', 'latest5_mean']: snapshot on vexec"),
-])
-def test_snapshot_keeps_arrow(events, features, reason):
-    plan = _plan(features)
-    assert choose_backend(plan, SNAP) == ("vexec", reason)
+def test_latest_snapshot_routes_native(events):
+    plan = _plan(LATEST)
+    assert choose_backend(plan, SNAP) == ("native", "native_supported")
     out = run_plan(events, plan, snapshot=SNAP)
-    assert _python_nodes(out)
+    assert _python_nodes(out) == []
     _same(out, run_plan(events, plan, snapshot=SNAP, strategy="cogroup"),
           ["user_id"])
 
 
-def test_latest_chords_keep_chordexec(events):
+def test_latest_chords_route_native(events):
     plan, chords = _plan(LATEST), _chords(events)
-    assert choose_backend(plan, chords=chords) == (
-        "chordexec",
-        "latest-N in ['latest5_sum', 'latest5_mean']: "
-        "prefix-decomposable chords on chordexec",
-    )
+    assert choose_backend(plan, chords=chords) == ("native", "native_supported")
     out = run_plan(events, plan, chords=chords)
-    assert _python_nodes(out)
+    assert _python_nodes(out) == []
     _same(out, run_plan(events, plan, chords=chords, strategy="cogroup"),
           ["user_id", "query_time"])
 
