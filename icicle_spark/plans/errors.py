@@ -153,7 +153,6 @@ def error_codes(
     plan: Plan,
     snapshot: Any | None = None,
     chords: DataFrame | None = None,
-    broadcast_chords: bool = True,
 ) -> DataFrame:
     """Per-feature Error64 codes: one row per entity (snapshot) or per
     chord row, columns ``<name>_err`` (int, see module table).
@@ -181,11 +180,12 @@ def error_codes(
         keys = [ecol, "query_time"] + (
             ["label"] if "label" in chords.columns else []
         )
-        rhs = F.broadcast(chords) if broadcast_chords else chords
-        base = facts.join(rhs, on=ecol, how="inner").where(
+        # one row per DISTINCT chord: run_plan joins these codes onto
+        # its own rows, so a duplicated chord row must not match twice
+        spine = chords.select(*keys).distinct()
+        base = facts.join(spine, on=ecol, how="inner").where(
             F.col(tcol) < F.col(qt)
         )
-        spine = chords
 
     # tombstoned facts are null ELEMENTS for the value backends; for
     # error attribution we need the pre-nulling expr, so evaluate expr

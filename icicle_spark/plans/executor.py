@@ -605,10 +605,9 @@ def run_plan(
     ones run ``project_exprs`` first, so the same string means the
     same thing (nulls included) whichever backend runs it.
 
-    Chord routing (BENCH.md "chord routing trade-off"): chords 'auto'
-    routes native join the chord table without a broadcast hint, so
-    they scale to any chord-table size; explicit 'native' keeps the
-    broadcast hint.
+    No strategy hints a broadcast of the chord table: AQE broadcasts
+    a small one from its measured size and shuffle-joins a large one
+    (BENCH.md "chord routing trade-off").
     """
     if (snapshot is None) == (chords is None):
         raise ValueError("exactly one of snapshot / chords required")
@@ -698,15 +697,7 @@ def run_plan(
         return out.select(*lead, *requested)
 
     if backend == "native":
-        # routed chords join without a broadcast hint: AQE still
-        # broadcasts a small chord table, and a large one must not be
-        # forced; the explicit 'native' strategy keeps its hint
-        return _realias(
-            compile_native(
-                facts, plan, snapshot=snapshot, chords=chords,
-                broadcast_chords=strategy == "native",
-            )
-        )
+        return _realias(compile_native(facts, plan, snapshot=snapshot, chords=chords))
     if backend == "vexec":
         return _realias(
             run_snapshot_vectorized(

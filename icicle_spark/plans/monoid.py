@@ -25,9 +25,11 @@ strings are Spark SQL already and are embedded as ``(expr)``.
 Its consumers: native's fold aggregate (``state`` per key), native's
 latest-N frames (``state`` per key over the top N rows of a
 grouped-limit window), ``resume.fold_states`` (``state`` per entity:
-the checkpoint) and ``resume.resume_plan`` (the checkpoint rows
-unioned with the increment's states, then ``merge``). Each finalizes
-last.
+the checkpoint), ``resume.resume_plan`` (the checkpoint rows
+unioned with the increment's states, then ``merge``) and
+``streaming.stream_fold`` (``state`` per entity in a streaming
+aggregate; Spark merges the micro-batches' buffers in its state
+store). Each finalizes last.
 
 States (p: a null element was seen, the Possibly poison):
 

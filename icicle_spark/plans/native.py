@@ -45,9 +45,8 @@ reference's Core fusion,
 
 Scale: the visible-range filter pushes to the parquet/Iceberg scan
 (partition pruning on time) on every path but the snapshot spine;
-chord tables join by shuffle unless the caller asks for a broadcast
-(``broadcast_chords``: explicit ``native`` does, ``auto`` does
-not); exchanges carry constant-size states, at most N fact rows per
+chord tables join with no broadcast hint (AQE picks the join from
+their measured size); exchanges carry constant-size states, at most N fact rows per
 key and map partition for a latest-N frame, and raw fact rows only
 for the numflips helper window.
 Plans the compiler can't express (custom folds, scan binds, outer
@@ -304,14 +303,22 @@ def _visibility(
                 f"{f.window.sql_interval(f.window.older_than_days)}"
             )
     if include_filters:
-        # `filter let Some b = e`: the pattern fails on null binds.
-        # Bind columns are materialized on the facts AFTER tombstone
-        # nulling (compile_native / errors handle raw-tombstone cases),
-        # so a tombstoned fact's bind is null and drops here too.
-        conds += [f"{ident(b)} IS NOT NULL" for b, _ in f.filter_let or ()]
-        if f.where is not None:
-            conds.append(f"coalesce(CAST(({f.where}) AS BOOLEAN), false)")
+        conds += _filters(f)
     return " AND ".join(conds)
+
+
+def _filters(f: Feature) -> list[str]:
+    """The feature's filter stage, no time bound: its filter_let
+    patterns and its ``where``. ``_visibility`` adds the time bound
+    and window; a stream folds these alone."""
+    # `filter let Some b = e`: the pattern fails on null binds. Bind
+    # columns are materialized on the facts AFTER tombstone nulling
+    # (prepare_facts; errors handles raw-tombstone cases), so a
+    # tombstoned fact's bind is null and drops here too.
+    conds = [f"{ident(b)} IS NOT NULL" for b, _ in f.filter_let or ()]
+    if f.where is not None:
+        conds.append(f"coalesce(CAST(({f.where}) AS BOOLEAN), false)")
+    return conds
 
 
 # empty values of the folds outside the table (``_agg_col``)
@@ -670,15 +677,13 @@ def compile_native(
     plan: Plan,
     snapshot: Any | None = None,
     chords: DataFrame | None = None,
-    broadcast_chords: bool = True,
 ) -> DataFrame:
     """Compile and return the result DataFrame (lazy).
 
-    ``broadcast_chords=False`` joins the chord table with a shuffle
-    join instead of a broadcast — required when the chord table is
-    itself at data scale (e.g. one chord per entity at 10^12 rows);
-    AQE's skew-join splitting then spreads a hot entity's join across
-    tasks, and the aggregates downstream combine map-side.
+    The chord table joins with no broadcast hint: AQE broadcasts a
+    small one from its measured size, and one at data scale (say one
+    chord per entity at 10^12 rows) shuffle-joins, with skew-join
+    splitting spreading a hot entity across tasks.
     """
     if (snapshot is None) == (chords is None):
         raise ValueError("exactly one of snapshot / chords required")
@@ -726,8 +731,6 @@ def compile_native(
     # every chord row still gets its output row. Spark drops the
     # distinct when the chord table is already unique on the keys.
     rhs = chords.select(*keys).distinct()
-    if broadcast_chords:
-        rhs = F.broadcast(rhs)
     base = facts.join(rhs, on=ecol, how="inner").where(
         f"{ident(tcol)} < {qt}"
     )

@@ -5,18 +5,21 @@ aggregate is an incremental fold with persistable accumulators
 (/root/reference/doc/internals/core.md:129-148). That maps directly
 onto Structured Streaming:
 
-* ``stream_fold``          — per-entity running fold values via
-  ``applyInPandasWithState``: the state IS the resume module's
-  accumulator (sum/count/mean/min/max/newest + bounded latest-N
-  buffer), updated per micro-batch, emitted on every change.
+* ``stream_fold``          — per-entity running fold values as ONE
+  streaming aggregate of the Catalyst fold table's states
+  (``plans.monoid``, the same state, merge and finalize native and
+  resume use): Spark keeps each entity's state in its state store,
+  merges every micro-batch's partial states into it, and finalizes
+  the changed entities. No Python worker runs.
 * ``stream_windowed_agg``  — event-time tumbling/sliding windows with
   a watermark for late data (an engine EXTENSION: the reference has
   only query-time-relative windows).
 * ``stream_session_agg``   — native ``session_window`` gap sessions.
 
 All three run on any streaming source (``readStream``); tests drive
-them with a file source + ``availableNow`` trigger and assert the
-final states equal the batch engine on the same data.
+them with a file source + ``availableNow`` trigger and
+``maxFilesPerTrigger=1`` (so state crosses micro-batches) and assert
+the final states equal the batch engine on the same data.
 
 NOTE: checkpoint-based restart requires a durable sink — Spark's
 memory sink used in tests refuses checkpoint recovery by design.
@@ -24,137 +27,86 @@ memory sink used in tests refuses checkpoint recovery by design.
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Tuple
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from icicle_spark.plans import monoid
 from icicle_spark.plans.ir import (
     Agg,
     Feature,
     Plan,
-    apply_filter_let,
-    eval_expr,
+    apply_postcomps,
+    resolve_dtypes,
+)
+from icicle_spark.plans.monoid import ident
+from icicle_spark.plans.native import (
+    _feature_native,
+    _filters,
+    _st,
+    named,
+    prepare_facts,
 )
 
-_STREAMABLE = {Agg.SUM, Agg.COUNT, Agg.MEAN, Agg.MIN, Agg.MAX, Agg.NEWEST}
+
+def _streams(f: Feature) -> bool:
+    """A plain table fold: no window, latest-N frame, group or
+    distinct, and not NUMFLIPS (its helper is a row window, which a
+    stream cannot run) or DECAYED_SUM (it decays to a query time)."""
+    return (
+        _feature_native(f)
+        and monoid.has_state(f)
+        and f.window is None and f.latest is None
+        and f.group is None and f.distinct is None
+        and f.agg not in (Agg.NUMFLIPS, Agg.DECAYED_SUM)
+    )
 
 
-def _out_schema(plan: Plan, entity_type: str) -> str:
-    cols = [f"`{plan.entity_col}` {entity_type}"]
-    for f in plan.features:
-        t = "double" if f.agg is not Agg.COUNT else "bigint"
-        cols.append(f"`{f.name}` {t}")
-    return ", ".join(cols)
-
-
-def stream_fold(
-    stream: DataFrame,
-    plan: Plan,
-    timeout: str = "NoTimeout",
-) -> DataFrame:
+def stream_fold(stream: DataFrame, plan: Plan) -> DataFrame:
     """Per-entity incremental fold over a streaming DataFrame.
 
-    Emits one row per entity per micro-batch in which it changed,
-    carrying the CURRENT fold values (running features). State per
-    entity and feature is a constant-size accumulator:
-    (sum, count, min, max, newest_t_us, newest_v) — the same mergeable
-    shape as plans.resume. Element strings are Spark SQL, projected
-    JVM-side by ``plans.executor.project_exprs`` as for the batch
-    executors (tombstoned facts included).
+    One row per entity carrying the CURRENT fold values (running
+    features): every changed entity in ``update`` output mode, every
+    entity in ``complete`` mode. Each feature is one table state per
+    entity (``monoid.state`` under the feature's filters, no time
+    bound), finalized and cast to the batch output type, then the
+    postcomp stage runs, so the values, nulls (``skip_nulls=False``
+    poisons) and dtypes are ``run_plan``'s over the facts seen so far.
+    A feature that is not a plain table fold (``_streams``) raises.
     """
     for f in plan.features:
-        if not (isinstance(f.agg, Agg) and f.agg in _STREAMABLE):
-            raise ValueError(f"stream_fold does not support {f.agg}")
-        if f.window is not None or f.latest is not None or f.group or f.distinct:
+        if not _streams(f):
             raise ValueError(
-                "stream_fold supports plain folds; use stream_windowed_agg "
+                f"stream_fold cannot stream feature {f.name!r} ({f.agg}): "
+                "only plain table folds stream; use stream_windowed_agg "
                 "for event-time windows"
             )
-    from icicle_spark.plans.executor import project_exprs
+    plan = resolve_dtypes(plan, stream)
+    # no query time: the refused DECAYED_SUM is the only state reading it
+    qt = "CAST(NULL AS TIMESTAMP)"
 
-    stream, plan = project_exprs(stream, plan)
-    ecol, tcol = plan.entity_col, plan.time_col
-    entity_type = dict(stream.dtypes)[ecol]
-    out_schema = _out_schema(plan, entity_type)
-    n_feats = len(plan.features)
-    # state: per feature 6 doubles
-    state_schema = ", ".join(f"f{i} array<double>" for i in range(n_feats))
-    features = list(plan.features)
+    def value(f: Feature) -> str:
+        v = monoid.finalize(f, ident(_st(f)))
+        return f"CAST({v} AS {f.dtype})" if f.dtype else v
 
-    def update(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            accs = [list(a) for a in state.get]
-        else:
-            accs = [
-                [0.0, 0.0, np.inf, -np.inf, -np.inf, np.nan]
-                for _ in range(n_feats)
-            ]
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            t_us = (
-                pdf[tcol].to_numpy().astype("datetime64[us]").view("int64")
+    out = (
+        prepare_facts(stream, plan)
+        .groupBy(plan.entity_col)
+        .agg(*[
+            named(
+                monoid.state(
+                    f, plan, " AND ".join(_filters(f)) or "true", qt,
+                    merge_key=False,
+                ),
+                _st(f),
             )
-            for i, f in enumerate(features):
-                fpdf, bmask = apply_filter_let(f, pdf)
-                vals = eval_expr(f.expr, fpdf)
-                mask = (
-                    np.ones(len(pdf), dtype=bool) if bmask is None else bmask
-                )
-                if f.where is not None:
-                    mask &= eval_expr(f.where, fpdf).fillna(False).to_numpy().astype(bool)
-                mask &= ~vals.isna().to_numpy()
-                v = vals.to_numpy()[mask].astype("float64")
-                if v.size == 0:
-                    continue
-                a = accs[i]
-                a[0] += float(v.sum())
-                a[1] += float(v.size)
-                a[2] = min(a[2], float(v.min()))
-                a[3] = max(a[3], float(v.max()))
-                ts_m = t_us[mask]
-                j = int(np.argmax(ts_m))
-                if float(ts_m[j]) >= a[4] or np.isnan(a[5]):
-                    a[4] = float(ts_m[j])
-                    a[5] = float(v[j])
-        state.update([tuple(a) for a in accs])
-        row: dict[str, Any] = {ecol: key[0]}
-        for i, f in enumerate(features):
-            a = accs[i]
-            agg = f.agg
-            if agg is Agg.SUM:
-                row[f.name] = a[0]
-            elif agg is Agg.COUNT:
-                row[f.name] = int(a[1])
-            elif agg is Agg.MEAN:
-                row[f.name] = a[0] / a[1] if a[1] else None
-            elif agg is Agg.MIN:
-                row[f.name] = a[2] if a[1] else None
-            elif agg is Agg.MAX:
-                row[f.name] = a[3] if a[1] else None
-            elif agg is Agg.NEWEST:
-                row[f.name] = None if np.isnan(a[5]) else a[5]
-        yield pd.DataFrame([row])
-
-    out = stream.groupBy(ecol).applyInPandasWithState(
-        update,
-        out_schema,
-        state_schema,
-        "update",
-        getattr(GroupStateTimeout, timeout),
+            for f in plan.features
+        ])
+        .selectExpr(ident(plan.entity_col), *[
+            f"{value(f)} AS {ident(f.name)}" for f in plan.features
+        ])
     )
     # postcomputation stage (Core/Program/Program.hs:33-36): plain
     # column expressions over the emitted fold values — they compose
     # with the streaming frame exactly as with the batch result
-    from icicle_spark.plans.ir import apply_postcomps
-
     return apply_postcomps(out, plan)
 
 

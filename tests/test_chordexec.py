@@ -303,3 +303,9 @@ def test_duplicate_chord_rows_every_strategy(spark):
             for r in run_plan(facts, plan, chords=chords, strategy=s).collect()
         )
         assert got == want, s
+        # the error channel joins one code row per distinct chord
+        audited = run_plan(
+            facts, plan, chords=chords, strategy=s, error_codes=True
+        ).collect()
+        assert sorted((r.entity, r.s, r.c, r.l2) for r in audited) == want, s
+        assert {(r.s_err, r.c_err, r.l2_err) for r in audited} == {(0, 0, 0)}, s

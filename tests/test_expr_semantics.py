@@ -1,8 +1,8 @@
 """One expression semantics on every backend.
 
-Element strings are Spark SQL everywhere: the native compiler
-evaluates them in Catalyst, and every Python executor (vexec on a
-snapshot and on chords, cogroup, stream_fold) receives them projected
+Element strings are Spark SQL everywhere: the native compiler and
+stream_fold evaluate them in Catalyst, and every Python executor
+(vexec on a snapshot and on chords, cogroup) receives them projected
 into JVM columns first. So a comparison against a null string drops
 the fact (SQL three-valued logic), tombstoned facts null every fact
 column before any expression reads it, chained filter_let binds
@@ -114,20 +114,27 @@ def test_stream_fold_agrees(spark, facts_pdf, tmp_path):
     from icicle_spark.streaming import stream_fold
 
     src = str(tmp_path / "src")
-    spark.createDataFrame(facts_pdf).coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    # two files, read one per micro-batch: the state crosses batches
+    df = spark.createDataFrame(facts_pdf)
+    df.where("seq % 2 = 0").coalesce(1).write.parquet(src)
+    df.where("seq % 2 = 1").coalesce(1).write.mode("append").parquet(src)
+    stream = (
+        spark.readStream.schema(spark.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
     q = (
         stream_fold(stream, PLAN)
         .writeStream.format("memory")
         .queryName("expr_semantics_stream")
-        .outputMode("update")
+        .outputMode("complete")
         .option("checkpointLocation", str(tmp_path / "ck"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(120)
-    out = spark.sql("SELECT * FROM expr_semantics_stream").toPandas()
-    final = out.groupby("entity", as_index=False).last()
+    assert sum(p["numInputRows"] > 0 for p in q.recentProgress) >= 2
+    final = spark.sql("SELECT * FROM expr_semantics_stream").toPandas()
     _assert_expected(_by_entity(final, list(EXPECTED["a"])))
 
 

@@ -139,8 +139,8 @@ def test_max_group_size_overflow_is_null(spark, facts):
 
 
 def test_native_chord_shuffle_join(spark, facts):
-    """broadcast_chords=False (the huge-chord-table scale shape) must
-    equal the broadcast plan."""
+    """The native chord plan (no broadcast hint: the huge-chord-table
+    scale shape) equals the per-entity cogroup executor."""
     from pyspark.sql import functions as F
 
     chords = facts.groupBy("entity").agg(F.max("time").alias("query_time"))
@@ -154,7 +154,7 @@ def test_native_chord_shuffle_join(spark, facts):
         seq_col="seq",
     )
     a = compile_native(facts, plan, chords=chords).toPandas()
-    b = compile_native(facts, plan, chords=chords, broadcast_chords=False).toPandas()
+    b = run_plan(facts, plan, chords=chords, strategy="cogroup").toPandas()
     key = ["entity", "query_time"]
     a = a.sort_values(key).reset_index(drop=True)
     b = b.sort_values(key).reset_index(drop=True)

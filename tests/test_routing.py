@@ -104,10 +104,13 @@ def test_chord_folds_route_native_without_broadcast_hint(events):
         "native", "native_supported")
     out = run_plan(events, plan, chords=chords)
     assert _python_nodes(out) == []
-    assert not _broadcast_hint(out)
-    # the explicit strategy keeps its broadcast hint
-    assert _broadcast_hint(run_plan(events, plan, chords=chords,
-                                    strategy="native"))
+    # no strategy hints a broadcast of the chord table
+    for strategy in ("auto", "native", "vectorized", "cogroup"):
+        assert not _broadcast_hint(
+            run_plan(events, plan, chords=chords, strategy=strategy)
+        ), strategy
+    assert not _broadcast_hint(run_plan(events, plan, chords=chords,
+                                        error_codes=True))
     _same(out, run_plan(events, plan, chords=chords, strategy="cogroup"),
           ["user_id", "query_time"])
 

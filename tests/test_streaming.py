@@ -8,7 +8,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from icicle_spark.plans import Agg, Feature, Plan, run_plan
+from icicle_spark.plans import Agg, Feature, Plan, Window, run_plan
 from icicle_spark.sources.fixtures import token_facts
 from icicle_spark.streaming import (
     stream_fold,
@@ -27,72 +27,125 @@ def stream_dir(spark, tmp_path_factory):
     return d + "/a"
 
 
+def _stream(spark, path):
+    """The file stream over ``path``, one file per micro-batch: under
+    ``availableNow`` a file source otherwise reads every present file
+    in ONE batch, and no fold state would cross batches."""
+    schema = spark.read.parquet(path).schema
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(path)
+
+
 def _run_stream(spark, df, tmp, name):
+    """Run a stream_fold frame to the end in complete mode: the memory
+    sink then holds each entity's final fold values, nulls included.
+    The run must have crossed micro-batches."""
     q = (
         df.writeStream.format("memory")
         .queryName(name)
-        .outputMode("update")
+        .outputMode("complete")
         .option("checkpointLocation", tmp + f"/ck_{name}")
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(120)
-    return spark.sql(f"SELECT * FROM {name}")
+    assert sum(p["numInputRows"] > 0 for p in q.recentProgress) >= 2
+    return spark.sql(f"SELECT * FROM {name}"), q
+
+
+def _same(got, want) -> None:
+    """Equal frames by entity: same dtypes, same values (nulls equal)."""
+    assert dict(got.dtypes) == dict(want.dtypes)
+    got = got.toPandas().set_index("doc_id").sort_index()
+    want = want.toPandas().set_index("doc_id").sort_index()
+    assert list(got.index) == list(want.index)
+    for c in want.columns:
+        g, w = got[c], want[c]
+        both = g.isna() & w.isna()
+        assert (g.isna() == w.isna()).all(), c
+        assert np.allclose(g[~both].astype("float64"), w[~both].astype("float64")), c
+
+
+# null only on facts of the second file (odd seq): its poison must be
+# carried in from the second micro-batch
+_LATE_NULL = (
+    "CASE WHEN seq % 2 = 1 AND n_tok % 7 = 0 THEN NULL"
+    " ELSE coalesce(n_tok, 0) END"
+)
+
+STREAM_FOLDS = [
+    *[
+        Feature(n, a, "n_tok", skip_nulls=True)
+        for n, a in [
+            ("s", Agg.SUM), ("c", Agg.COUNT), ("m", Agg.MEAN),
+            ("mn", Agg.MIN), ("mx", Agg.MAX), ("nw", Agg.NEWEST),
+            ("od", Agg.OLDEST), ("v", Agg.VARIANCE), ("sd", Agg.SD),
+        ]
+    ],
+    Feature("an", Agg.ANY, "n_tok > 40", skip_nulls=True),
+    Feature("al", Agg.ALL, "n_tok > 1", skip_nulls=True),
+    Feature("fc", Agg.COUNT, "n_tok", where="n_tok > 10", skip_nulls=True),
+    Feature("pn", Agg.SUM, _LATE_NULL, skip_nulls=False),
+    Feature("pnw", Agg.NEWEST, "n_tok", skip_nulls=False),
+    Feature("pv", Agg.SD, "n_tok", skip_nulls=False),
+]
 
 
 def test_stream_fold_matches_batch(spark, stream_dir, tmp_path):
+    """Over two micro-batches the final state of every streamable fold
+    equals the batch engine's, on the native and the cogroup backend:
+    values, Possibly poison, NEWEST/OLDEST (time, seq) ties and the
+    output dtypes."""
     batch_df = spark.read.parquet(stream_dir)
-    schema = batch_df.schema
-    stream = spark.readStream.schema(schema).parquet(stream_dir)
-    plan = Plan(
-        [
-            Feature("s", Agg.SUM, "n_tok", skip_nulls=True),
-            Feature("c", Agg.COUNT, "n_tok", skip_nulls=True),
-            Feature("m", Agg.MEAN, "n_tok", skip_nulls=True),
-            Feature("mx", Agg.MAX, "n_tok", skip_nulls=True),
-            Feature("nw", Agg.NEWEST, "n_tok", skip_nulls=True),
-        ],
-        entity_col="doc_id",
-        time_col="event_time",
-        seq_col="seq",
+    plan = Plan(STREAM_FOLDS, entity_col="doc_id", time_col="event_time",
+                seq_col="seq")
+    out, _ = _run_stream(
+        spark, stream_fold(_stream(spark, stream_dir), plan), str(tmp_path),
+        "foldstream",
     )
-    out = _run_stream(
-        spark, stream_fold(stream, plan), str(tmp_path), "foldstream"
+    for strategy in ("native", "cogroup"):
+        _same(out, run_plan(batch_df, plan, snapshot="2099-01-01",
+                            strategy=strategy))
+    # the late null is absent from the first file, and poisons some
+    # entities but not all
+    first = batch_df.where("seq % 2 = 0").selectExpr(f"({_LATE_NULL}) AS x")
+    assert first.where("x IS NULL").count() == 0
+    pn = out.toPandas()["pn"]
+    assert pn.isna().any() and pn.notna().any()
+
+
+def test_stream_fold_has_no_python_node(spark, stream_dir, tmp_path):
+    """The streaming fold is a Catalyst aggregate over a state store."""
+    plan = Plan(STREAM_FOLDS, entity_col="doc_id", time_col="event_time",
+                seq_col="seq")
+    _, q = _run_stream(
+        spark, stream_fold(_stream(spark, stream_dir), plan), str(tmp_path),
+        "planstream",
     )
-    # memory sink in update mode keeps every emission; the LAST row
-    # per entity is the final state
-    final = (
-        out.toPandas()
-        .groupby("doc_id")
-        .last()
-        .sort_index()
-    )
-    batch = (
-        run_plan(batch_df, plan, snapshot="2099-01-01", strategy="native")
-        .toPandas()
-        .set_index("doc_id")
-        .sort_index()
-    )
-    assert len(final) == len(batch)
-    for c in ["s", "c", "m", "mx"]:
-        assert np.allclose(
-            final[c].astype("float64"), batch[c].astype("float64"), equal_nan=True
-        ), c
-    # NEWEST: ties on (time) between chunks can differ from seq order —
-    # compare only entities whose max event_time is unique
-    t = spark.read.parquet(stream_dir).toPandas()
-    mx = t.groupby("doc_id").event_time.agg(["max", "count"])
-    uniq = t.groupby(["doc_id", "event_time"]).size().rename("k").reset_index()
-    top_dup = uniq.merge(
-        mx["max"].rename("mt"), left_on="doc_id", right_index=True
-    )
-    amb = set(top_dup[(top_dup.event_time == top_dup.mt) & (top_dup.k > 1)].doc_id)
-    keep = [d for d in final.index if d not in amb]
-    assert np.allclose(
-        final.loc[keep, "nw"].astype("float64"),
-        batch.loc[keep, "nw"].astype("float64"),
-        equal_nan=True,
-    )
+    physical = q._jsq.explainInternal(False)
+    assert "StateStoreSave" in physical and "HashAggregate" in physical
+    for node in ("FlatMapGroupsInPandasWithState", "InPandas", "EvalPython",
+                 "PythonMapInArrow"):
+        assert node not in physical, node
+
+
+@pytest.mark.parametrize(
+    "feature",
+    [
+        Feature("w", Agg.SUM, "n_tok", window=Window(30), skip_nulls=True),
+        Feature("l", Agg.SUM, "n_tok", latest=3, skip_nulls=True),
+        Feature("g", Agg.SUM, "n_tok", group="source", skip_nulls=True),
+        Feature("d", Agg.COUNT, "n_tok", distinct="source", skip_nulls=True),
+        Feature("f", Agg.NUMFLIPS, "n_tok", skip_nulls=True),
+        Feature("ds", Agg.DECAYED_SUM, "n_tok", half_life_days=7.0,
+                skip_nulls=True),
+    ],
+    ids=lambda f: f.name,
+)
+def test_stream_fold_refuses(spark, stream_dir, feature):
+    plan = Plan([Feature("s", Agg.SUM, "n_tok"), feature], entity_col="doc_id",
+                time_col="event_time", seq_col="seq")
+    with pytest.raises(ValueError, match=repr(feature.name)):
+        stream_fold(_stream(spark, stream_dir), plan)
 
 
 def test_stream_fold_filter_let_parity(spark, stream_dir, tmp_path):
@@ -100,7 +153,6 @@ def test_stream_fold_filter_let_parity(spark, stream_dir, tmp_path):
     pattern (null below n_tok 5) drops the same facts the batch
     executor drops."""
     batch_df = spark.read.parquet(stream_dir)
-    stream = spark.readStream.schema(batch_df.schema).parquet(stream_dir)
     bind = (("b", "CASE WHEN n_tok >= 5 THEN sqrt(n_tok - 5) END"),)
     plan = Plan(
         [
@@ -111,26 +163,14 @@ def test_stream_fold_filter_let_parity(spark, stream_dir, tmp_path):
         time_col="event_time",
         seq_col="seq",
     )
-    out = _run_stream(
-        spark, stream_fold(stream, plan), str(tmp_path), "flstream"
+    out, _ = _run_stream(
+        spark, stream_fold(_stream(spark, stream_dir), plan), str(tmp_path),
+        "flstream",
     )
-    final = out.toPandas().groupby("doc_id").last().sort_index()
-    batch = (
-        run_plan(batch_df, plan, snapshot="2099-01-01", strategy="cogroup")
-        .toPandas()
-        .set_index("doc_id")
-        .sort_index()
-    )
-    # entities whose every fact fails the pattern emit no stream row
-    batch = batch.loc[final.index]
-    for c in ["sb", "cb"]:
-        assert np.allclose(
-            final[c].astype("float64"),
-            batch[c].astype("float64"),
-            equal_nan=True,
-        ), c
+    _same(out, run_plan(batch_df, plan, snapshot="2099-01-01",
+                        strategy="cogroup"))
     # and the pattern is genuinely partial on this corpus
-    assert (final["cb"] > 0).any()
+    assert (out.toPandas()["cb"] > 0).any()
     raw = batch_df.toPandas()
     assert (raw["n_tok"] < 5).any()
 
@@ -308,27 +348,19 @@ def test_stream_fold_postcomp_parity(spark, stream_dir, tmp_path):
     from icicle_spark.source_lang import parse_program
 
     batch_df = spark.read.parquet(stream_dir)
-    stream = spark.readStream.schema(batch_df.schema).parquet(stream_dir)
     plan = parse_program(
         {"avg_manual": "from s ~> sum n_tok / count n_tok",
          "spread": "from s ~> max n_tok - min n_tok"},
         skip_nulls=True,
         entity_col="doc_id", time_col="event_time", seq_col="seq",
     )["s"]
-    out = _run_stream(
-        spark, stream_fold(stream, plan), str(tmp_path), "postcompstream"
+    out, _ = _run_stream(
+        spark, stream_fold(_stream(spark, stream_dir), plan), str(tmp_path),
+        "postcompstream",
     )
-    final = out.toPandas().groupby("doc_id").last().sort_index()
-    assert list(final.columns) == ["avg_manual", "spread"]
-    batch = (
-        run_plan(batch_df, plan, snapshot="2099-01-01", strategy="native")
-        .toPandas().set_index("doc_id").sort_index()
-    )
-    for c in ["avg_manual", "spread"]:
-        assert np.allclose(
-            final[c].astype("float64"), batch[c].astype("float64"),
-            equal_nan=True,
-        ), c
+    assert out.columns == ["doc_id", "avg_manual", "spread"]
+    _same(out, run_plan(batch_df, plan, snapshot="2099-01-01",
+                        strategy="native"))
 
 
 def test_stream_line_dedup_ingest(spark, tmp_path_factory, tmp_path):
